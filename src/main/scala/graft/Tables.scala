@@ -76,24 +76,26 @@ object Tables {
 
   def rowCount(s: SparkSession, d: String, name: String): Long =
     countCache.computeIfAbsent((d, Artifacts.fingerprint(d), name), _ => {
-      val n: Long = footerRowCount(s, s"$d/$name.parquet")
+      val n: Long = footerSum(s, d, name)(_.getRecordCount)
         .getOrElse(apply(s, d, name).count())
       java.lang.Long.valueOf(n)
     })
 
-  /** Row count straight from the parquet footers — driver-side metadata
-    * I/O, ZERO Spark jobs. This is what lets plan-build-time sizing
-    * (and [[Graft.registerAll]]'s graph views) stay job-free even on a
-    * cold cache: parquet stores the exact record count per file, the
-    * same statistic a lakehouse catalog serves from its manifest.
-    * Returns None on any surprise (missing path, non-parquet layout) so
-    * the caller can fall back to a Spark count. */
-  private def footerRowCount(s: SparkSession, path: String): Option[Long] = try {
+  /** `field` summed over the parquet footers of a fixture table's files —
+    * driver-side metadata I/O, ZERO Spark jobs. This is what lets
+    * plan-build-time sizing (and [[Graft.registerAll]]'s graph views)
+    * stay job-free even on a cold cache: parquet stores the exact
+    * record count and row-group list per file, the statistics a
+    * lakehouse catalog serves from its manifest. Returns None on any
+    * surprise (missing path, non-parquet layout) so the caller can fall
+    * back. */
+  private def footerSum(s: SparkSession, d: String, name: String)
+      (field: org.apache.parquet.hadoop.ParquetFileReader => Long): Option[Long] = try {
     import org.apache.hadoop.fs.{Path => HPath}
     import org.apache.parquet.hadoop.ParquetFileReader
     import org.apache.parquet.hadoop.util.HadoopInputFile
     val conf = s.sessionState.newHadoopConf()
-    val root = new HPath(path)
+    val root = new HPath(s"$d/$name.parquet")
     val fs = root.getFileSystem(conf)
     if (!fs.exists(root)) return None
     val files: Seq[HPath] =
@@ -105,7 +107,7 @@ object Tables {
     if (files.isEmpty) return None
     Some(files.map { f =>
       val r = ParquetFileReader.open(HadoopInputFile.fromPath(f, conf))
-      try r.getRecordCount finally r.close()
+      try field(r) finally r.close()
     }.sum)
   } catch { case scala.util.control.NonFatal(_) => None }
 
@@ -114,39 +116,14 @@ object Tables {
     * single-file single-row-group table scans as ONE task no matter
     * how many cores the session has or how low maxPartitionBytes is
     * set. Cached like [[rowCount]] (a property of the fixture bytes,
-    * keyed by content fingerprint); None on any surprise. */
+    * keyed by content fingerprint), None outcomes included, so an
+    * unreadable layout costs one footer walk, not one per call. */
   private val rgCache =
-    new java.util.concurrent.ConcurrentHashMap[(String, String, String), java.lang.Integer]()
+    new java.util.concurrent.ConcurrentHashMap[(String, String, String), Option[Long]]()
 
-  private def rowGroupCount(s: SparkSession, d: String, name: String): Option[Int] = {
-    val k = (d, Artifacts.fingerprint(d), name)
-    Option(rgCache.get(k)).map(_.intValue()).orElse {
-      val n = try {
-        import org.apache.hadoop.fs.{Path => HPath}
-        import org.apache.parquet.hadoop.ParquetFileReader
-        import org.apache.parquet.hadoop.util.HadoopInputFile
-        val conf = s.sessionState.newHadoopConf()
-        val root = new HPath(s"$d/$name.parquet")
-        val fs = root.getFileSystem(conf)
-        if (!fs.exists(root)) None
-        else {
-          val files: Seq[HPath] =
-            if (fs.getFileStatus(root).isDirectory)
-              fs.listStatus(root).toSeq.filter(_.isFile).map(_.getPath)
-                .filter(p => p.getName.endsWith(".parquet") ||
-                  p.getName.startsWith("part-"))
-            else Seq(root)
-          if (files.isEmpty) None
-          else Some(files.map { f =>
-            val r = ParquetFileReader.open(HadoopInputFile.fromPath(f, conf))
-            try r.getRowGroups.size finally r.close()
-          }.sum)
-        }
-      } catch { case scala.util.control.NonFatal(_) => None }
-      n.foreach(v => rgCache.put(k, java.lang.Integer.valueOf(v)))
-      n
-    }
-  }
+  private def rowGroupCount(s: SparkSession, d: String, name: String): Option[Long] =
+    rgCache.computeIfAbsent((d, Artifacts.fingerprint(d), name),
+      _ => footerSum(s, d, name)(_.getRowGroups.size.toLong))
 
   /** A fixture scan WIDENED for a CPU-bound generator (guide §2.5
     * "input skew: one huge unsplittable file… repartition immediately

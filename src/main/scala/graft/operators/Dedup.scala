@@ -28,7 +28,7 @@ object Dedup {
     * corpus's short synthetic docs, and deliberately offset from
     * [[graft.operators.TextOps]]'s 16-token q102 blocks so the two
     * detectors exercise different passage granularities. */
-  private val EXSUB_W = 12
+  private[graft] val EXSUB_W = 12
 
   /** The normalized-content fingerprint every exact-dedup signal keys
     * on: md5 of the lowercased, whitespace-collapsed, trimmed text —
@@ -57,15 +57,127 @@ object Dedup {
     // per-doc dedup happens in the ARRAY (array_distinct) before the
     // explode — the distinct set is identical to a global
     // DISTINCT (doc_id, shingle) but costs zero shuffle: dedup is
-    // within-row, so no row ever needs to meet another. The docs scan
-    // is width-guarded (Tables.spread): shingling is a CPU-bound
-    // generator over a one-row-group fixture file, which otherwise
-    // tokenizes the whole corpus on one core (see the q198 note).
-    Tables.spread(s, d, "documents", "doc_id")
-      .select(col("doc_id"), toks.as("toks"))
+    // within-row, so no row ever needs to meet another.
+    exsubDocs(s, d)
       .select(col("doc_id"), explode(array_distinct(transform(idx, i =>
         concat_ws(" ", get(t, i), get(t, i + 1), get(t, i + 2)))))
         .as("shingle"))
+  }
+
+  // ----- the exact-substring detector (q198/q199/q200) --------------------
+  // One map → shuffle → reduce over W-gram fingerprints, shared by the
+  // three queries and by tools.SkewProbe's shipped shape: [[exsubDocs]]
+  // scans, [[exsubGrams]] maps each doc to its fingerprinted W-grams,
+  // [[sharedFps]] reduces per fingerprint to the cross-document shared
+  // set, and [[scrub]] cuts the covered positions back out of the docs.
+
+  /** `(doc_id, toks)`: the tokenized documents scan, width-guarded by
+    * [[Tables.spread]]. W-gram fingerprinting (~2·W hashes per token
+    * position) and shingling are CPU-bound generators over a
+    * one-row-group fixture file, which otherwise scans — and so
+    * tokenizes and hashes the whole corpus — as ONE task. The
+    * detector's two consumers of one gram build (aggregate and
+    * join-back) reuse the one spread exchange, but the generator above
+    * it still runs once per consumer; q199/q200's scrub side scans
+    * again, since its inner join's inferred IsNotNull(doc_id) filter
+    * lands below that side's exchange. */
+  private[graft] def exsubDocs(s: SparkSession, d: String): DataFrame =
+    Tables.spread(s, d, "documents", "doc_id")
+      .select(col("doc_id"), toks.as("toks"))
+
+  /** Every stride-1 [[EXSUB_W]]-token window of a `(doc_id, toks)`
+    * frame as `(doc_id, n_tokens, s, fp)`: `s` is the 0-based start and
+    * `fp` a 16-byte `struct(h1, h2)` of two seeded xxhash64s over ONE
+    * shared token slice. Built in-row — the token array must already be
+    * its own column (a `split()` referenced inside a lambda re-evaluates
+    * per element, the [[shingles]] rule) — then posexplode: pos IS the
+    * start. Docs shorter than W produce no grams (`sequence(0, n − W)`
+    * would otherwise DESCEND). */
+  private[graft] def exsubGrams(docs: DataFrame): DataFrame = {
+    val w = EXSUB_W
+    val t = col("toks")
+    val n = size(t)
+    val idx = when(n >= w, sequence(lit(0), n - w))
+      .otherwise(array().cast("array<int>"))
+    docs
+      .select(col("doc_id"), n.cast("long").as("n_tokens"),
+        posexplode(transform(
+          transform(idx, i => slice(t, i + lit(1), lit(w))),
+          sl => struct(
+            xxhash64(lit(1), sl).as("h1"),
+            xxhash64(lit(2), sl).as("h2")))))
+      .select(col("doc_id"), col("n_tokens"),
+        col("pos").as("s"), col("col").as("fp"))
+  }
+
+  /** The fingerprints of [[exsubGrams]] that occur in ≥ 2 documents
+    * (min(doc_id) ≠ max(doc_id)) as `(fp, extra…)`, merge-hinted for
+    * the caller's join back onto the grams on `fp`. `extra` are further
+    * aggregates over each fp's occurrences (q200's owner); they must be
+    * mutable-buffer aggregates — min over a STRUCT demotes the whole
+    * aggregate to SortAggregate, a full sort of the gram table before
+    * partial aggregation (measured +0.5 s at sf0.1).
+    *
+    * An aggregate + fp join-back, NOT a `min/max OVER (PARTITION BY
+    * fp)` window: the two are row-equal, but the window serializes
+    * every occurrence of one fingerprint onto ONE task — a power-law
+    * fp (a license header shared by 10⁷ docs at 100 TB) becomes an
+    * unsplittable straggler, and AQE can never split a window
+    * partition. This shape is skew-immune end to end: partial min/max
+    * combine map-side (one row per fp per map task crosses the wire),
+    * and the sort-merge join-back's skewed occurrence side is
+    * AQE-skew-splittable (LeftSemi and Inner both split the left
+    * side). Two load-bearing details, both measured in
+    * tools.SkewProbe: (1) the aggregate keys on the struct's FIELDS
+    * and re-assembles `fp`, so its hash(h1,h2) partitioning does NOT
+    * satisfy the join's hash(fp) distribution and BOTH join children
+    * plan fresh ENSURE_REQUIREMENTS exchanges — were the aggregate's
+    * own fp partitioning reused, the plan would never match
+    * OptimizeSkewedJoin's SMJ(Sort(Shuffle), Sort(Shuffle)) pattern
+    * and the hot partition would stay whole (a ~4× straggler in the
+    * probe, same class as the window); (2) the join is pinned
+    * sort-merge — the shared-fp set is duplicate-volume-sized, the
+    * exact class whose underestimated post-aggregate stats
+    * broadcast-killed q199's first mark join at 256×. */
+  private[graft] def sharedFps(grams: DataFrame, extra: Column*): DataFrame = {
+    val agg = grams
+      .groupBy(col("fp.h1").as("h1"), col("fp.h2").as("h2"))
+      .agg(min(col("doc_id")).as("mn"), max(col("doc_id")).as("mx") +: extra: _*)
+    agg.filter(col("mn") =!= col("mx"))
+      .select(struct(col("h1"), col("h2")).as("fp") +:
+        agg.columns.drop(4).map(col).toSeq: _*) // extras follow h1, h2, mn, mx
+      .hint("merge")
+  }
+
+  /** Each document with an occurrence in `occurrences` (`doc_id`, `s`:
+    * W-gram starts to cut) as `(doc_id, n_kept, scrubbed_text)`: the
+    * token array minus every position in some [s, s+W), in order. The
+    * cover folds into ONE position-set row per affected doc
+    * (collect_set dedups overlapping spans in the doc_id shuffle a
+    * distinct would need) and is marked in-row against the token ARRAY.
+    * The join is per-DOC — one row per affected doc, never per token:
+    * the earlier token-level mark join carried every corpus token
+    * through a (doc_id, p) shuffle and died at the 256× rung twice over
+    * — Catalyst's post-window estimate undershoots the
+    * duplicate-volume-sized cover (8.6 GiB there), so static planning
+    * broadcast it into the 8 GiB limit, and a shuffle_hash pin then
+    * OOM'd building 32 concurrent unspillable hash maps. Duplicate
+    * volume is corpus-dependent and unbounded, so the join is pinned to
+    * sort-merge — the only fully spillable strategy — and an inner
+    * join, since the output IS the affected-doc set. */
+  private[graft] def scrub(docs: DataFrame, occurrences: DataFrame): DataFrame = {
+    val covSet = occurrences
+      .select(col("doc_id"),
+        explode(sequence(col("s"), col("s") + EXSUB_W - 1)).as("p"))
+      .groupBy(col("doc_id"))
+      .agg(collect_set(col("p")).as("cps"))
+    docs
+      .join(covSet.hint("merge"), Seq("doc_id"), "inner")
+      .select(col("doc_id"),
+        (size(col("toks")) - size(col("cps"))).cast("long").as("n_kept"),
+        array_join(filter(col("toks"),
+          (t, i) => !array_contains(col("cps"), i)), " ")
+          .as("scrubbed_text"))
   }
 
   private[operators] val SHINGLE_SQL =
@@ -1603,7 +1715,7 @@ object Dedup {
     // and mark a gram shared iff its fp's doc set has ≥ 2 members:
     // min(doc_id) ≠ max(doc_id) per fp, computed as a map-side-
     // combinable groupBy(fp) aggregate with a merge-pinned semi
-    // join-back (NOT a window over fp — see the detector note below).
+    // join-back (NOT a window over fp — see [[sharedFps]]).
     // NO pairwise work anywhere — a passage shared by k docs costs k
     // rows, never k²,
     // so the plan is linear in corpus size by construction. Coverage
@@ -1646,58 +1758,9 @@ object Dedup {
          |FROM c GROUP BY doc_id""".stripMargin
     }) { (s, d) =>
       val w = EXSUB_W
-      val t = col("toks")
-      val n = size(t)
-      val idx = when(n >= w, sequence(lit(0), n - w))
-        .otherwise(array().cast("array<int>"))
-      // W-gram fps built in-row (token array materialized first — the
-      // shingles rule: a split() referenced inside a lambda re-evaluates
-      // per element), then posexplode: pos IS the 0-based start. The
-      // docs scan is width-guarded (Tables.spread): the gram build is
-      // ~2·W hashes per token position over a one-row-group fixture
-      // file, the exact CPU-bound-generator-over-unsplittable-scan
-      // shape that serialized the whole build onto one core; both
-      // detector consumers reuse the ONE spread exchange.
-      val grams = Tables.spread(s, d, "documents", "doc_id")
-        .select(col("doc_id"), toks.as("toks"))
-        .select(col("doc_id"), n.cast("long").as("n_tokens"),
-          posexplode(transform(
-            transform(idx, i => slice(t, i + lit(1), lit(w))),
-            sl => struct(
-              xxhash64(lit(1), sl).as("h1"),
-              xxhash64(lit(2), sl).as("h2")))))
-        .select(col("doc_id"), col("n_tokens"),
-          col("pos").as("s"), col("col").as("fp"))
-      // Sharing detector as a map-side-combinable aggregate + fp
-      // join-back, NOT a `min/max OVER (PARTITION BY fp)` window: the
-      // two are row-equal (min/max over the fp partition ≡ groupBy(fp)
-      // min/max joined back on fp), but the window serializes every
-      // occurrence of one fingerprint onto ONE task — a power-law fp
-      // (license header shared by 10⁷ docs at 100 TB) becomes an
-      // unsplittable straggler partition, and AQE can never split a
-      // window partition. The aggregate shape is skew-immune end to
-      // end: partial min/max combine map-side (one row per fp per map
-      // task crosses the wire), and the sort-merge join-back's skewed
-      // occurrence side is AQE-skew-splittable at runtime (guide §2.5;
-      // LeftSemi splits the left side). Two load-bearing details, both
-      // measured in tools/SkewProbe: (1) the small side aggregates on
-      // the struct's FIELDS and re-assembles `fp`, so its hash(h1,h2)
-      // partitioning does NOT satisfy the join's hash(fp) distribution
-      // and BOTH SMJ children plan fresh ENSURE_REQUIREMENTS exchanges
-      // — were the aggregate's own fp partitioning reused, the plan
-      // would never match OptimizeSkewedJoin's SMJ(Sort(Shuffle),
-      // Sort(Shuffle)) pattern and the hot partition would stay whole
-      // (a ~4× straggler in the probe, same class as the window);
-      // (2) the join is pinned sort-merge — the shared-fp set is
-      // duplicate-volume-sized, the exact class whose underestimated
-      // post-agg stats broadcast-killed q199's first mark join at 256×.
-      val sharedFp = grams
-        .groupBy(col("fp.h1").as("h1"), col("fp.h2").as("h2"))
-        .agg(min(col("doc_id")).as("mn"), max(col("doc_id")).as("mx"))
-        .filter(col("mn") =!= col("mx"))
-        .select(struct(col("h1"), col("h2")).as("fp"))
+      val grams = exsubGrams(exsubDocs(s, d))
       val shared = grams
-        .join(sharedFp.hint("merge"), Seq("fp"), "left_semi")
+        .join(sharedFps(grams), Seq("fp"), "left_semi")
         .select(col("doc_id"), col("n_tokens"), col("s"))
       val byDoc = Window.partitionBy(col("doc_id")).orderBy(col("s"))
       val nxt = lead(col("s"), 1).over(byDoc)
@@ -1719,14 +1782,12 @@ object Dedup {
     // duplicated spans cut out (the removal step of Lee et al. 2022).
     // Same detector (shared W-grams via one fp shuffle, no pairwise
     // work); the covered token positions are the union of [s, s+W) over
-    // shared starts — expanded to at most W rows per shared gram and
-    // deduplicated in the same doc_id shuffle — and the scrubbed text
-    // is the anti-join of token positions against that cover,
-    // reassembled in order. Fully-covered documents survive as empty
-    // strings (a removal pass must say "this doc is all boilerplate",
-    // not drop it from the report). Output is one row per AFFECTED doc
-    // — the unaffected corpus needs no rewrite, so at 100 TB the write
-    // amplification tracks the duplicate volume, not the corpus.
+    // shared starts, and the scrubbed text is the token array with that
+    // cover filtered out, in order ([[scrub]]). Fully-covered documents
+    // survive as empty strings (a removal pass must say "this doc is all
+    // boilerplate", not drop it from the report). Output is one row per
+    // AFFECTED doc — the unaffected corpus needs no rewrite, so at 100 TB
+    // the write amplification tracks the duplicate volume, not the corpus.
     Q("q199_substring_scrub", {
       val w = EXSUB_W
       s"""WITH t AS (
@@ -1762,64 +1823,9 @@ object Dedup {
          |LEFT JOIN kept k ON k.doc_id = c.doc_id
          |GROUP BY c.doc_id""".stripMargin
     }) { (s, d) =>
-      val w = EXSUB_W
-      val t = col("toks")
-      val n = size(t)
-      val idx = when(n >= w, sequence(lit(0), n - w))
-        .otherwise(array().cast("array<int>"))
-      // width-guarded docs scan (see the q198 note): the gram build's
-      // CPU is ~2·W hashes per token position, and the one-row-group
-      // fixture file otherwise scans as ONE task; the mark join's
-      // docs side reuses the same spread exchange
-      val docs = Tables.spread(s, d, "documents", "doc_id")
-        .select(col("doc_id"), toks.as("toks"))
-      val grams = docs
-        .select(col("doc_id"),
-          posexplode(transform(
-            transform(idx, i => slice(t, i + lit(1), lit(w))),
-            sl => struct(
-              xxhash64(lit(1), sl).as("h1"),
-              xxhash64(lit(2), sl).as("h2")))))
-        .select(col("doc_id"), col("pos").as("s"), col("col").as("fp"))
-      // same skew-immune detector shape as q198 (see the note there):
-      // map-side-combinable field-keyed groupBy min/max + merge-pinned
-      // semi join-back through fresh exchanges on both sides, never a
-      // window — a hot fp must stay AQE-splittable
-      val sharedFp = grams
-        .groupBy(col("fp.h1").as("h1"), col("fp.h2").as("h2"))
-        .agg(min(col("doc_id")).as("mn"), max(col("doc_id")).as("mx"))
-        .filter(col("mn") =!= col("mx"))
-        .select(struct(col("h1"), col("h2")).as("fp"))
-      val shared = grams
-        .join(sharedFp.hint("merge"), Seq("fp"), "left_semi")
-        .select(col("doc_id"), col("s"))
-      // Fold the cover into ONE position-set row per affected doc
-      // (collect_set dedups overlapping spans in the same doc_id
-      // shuffle a distinct would need), then mark in-row against the
-      // token ARRAY. The join is per-DOC — one row per affected doc,
-      // never per token: the earlier token-level mark join carried
-      // every corpus token through a (doc_id, p) shuffle and died at
-      // the 256× rung twice over — Catalyst's post-window estimate
-      // undershoots the duplicate-volume-sized cover (8.6 GiB there),
-      // so static planning broadcast it into the 8 GiB limit, and a
-      // shuffle_hash pin then OOM'd building 32 concurrent unspillable
-      // hash maps. Duplicate volume is corpus-dependent and unbounded,
-      // so the join is pinned to sort-merge — the only fully
-      // spillable strategy — and an inner join, since the output IS
-      // the affected-doc set. Detector cost is unchanged: one fp
-      // shuffle, two document scans.
-      val covSet = shared
-        .select(col("doc_id"),
-          explode(sequence(col("s"), col("s") + w - 1)).as("p"))
-        .groupBy(col("doc_id"))
-        .agg(collect_set(col("p")).as("cps"))
-      docs
-        .join(covSet.hint("merge"), Seq("doc_id"), "inner")
-        .select(col("doc_id"),
-          (size(col("toks")) - size(col("cps"))).cast("long").as("n_kept"),
-          array_join(filter(col("toks"),
-            (t, i) => !array_contains(col("cps"), i)), " ")
-            .as("scrubbed_text"))
+      val docs = exsubDocs(s, d)
+      val grams = exsubGrams(docs)
+      scrub(docs, grams.join(sharedFps(grams), Seq("fp"), "left_semi"))
     },
 
     // ----- exact-substring removal, KEEP-ONE-COPY variant --------------------
@@ -1880,25 +1886,6 @@ object Dedup {
          |LEFT JOIN kept k ON k.doc_id = c.doc_id
          |GROUP BY c.doc_id""".stripMargin
     }) { (s, d) =>
-      val w = EXSUB_W
-      val t = col("toks")
-      val n = size(t)
-      val idx = when(n >= w, sequence(lit(0), n - w))
-        .otherwise(array().cast("array<int>"))
-      // width-guarded docs scan (see the q198 note): the gram build's
-      // CPU is ~2·W hashes per token position, and the one-row-group
-      // fixture file otherwise scans as ONE task; the mark join's
-      // docs side reuses the same spread exchange
-      val docs = Tables.spread(s, d, "documents", "doc_id")
-        .select(col("doc_id"), toks.as("toks"))
-      val grams = docs
-        .select(col("doc_id"),
-          posexplode(transform(
-            transform(idx, i => slice(t, i + lit(1), lit(w))),
-            sl => struct(
-              xxhash64(lit(1), sl).as("h1"),
-              xxhash64(lit(2), sl).as("h2")))))
-        .select(col("doc_id"), col("pos").as("s"), col("col").as("fp"))
       // owner = lexicographic min (doc_id, s), carried as ONE exact
       // decimal `doc_id·10¹⁰ + s` — order-isomorphic to the pair
       // because 0 ≤ s < 10¹⁰ (a position inside one document; ten
@@ -1907,47 +1894,21 @@ object Dedup {
       // bigint, Catalyst-capped at 38 digits) and can NEVER overflow
       // it: doc_id is a BIGINT, so |doc_id| < 10¹⁹ and the packed
       // value < 10¹⁹·10¹⁰ + 10¹⁰ < 10³⁰ ≪ 10³⁸ — exact for the whole
-      // bigint domain, no NULL-on-overflow path. The packing
-      // matters for the PLAN, not the math: min over a STRUCT is not
-      // a mutable-buffer aggregate, so Spark demotes the whole
-      // detector aggregate to SortAggregate — a full sort of the gram
-      // table before partial aggregation (measured: +0.5 s at sf0.1,
-      // and a scale-tracking extra sort) — while min(decimal) keeps
-      // the one-pass HashAggregate of q198/q199.
+      // bigint domain, no NULL-on-overflow path. Packed rather than a
+      // struct so the detector aggregate stays a HashAggregate (see
+      // [[sharedFps]]).
       val occ = col("doc_id").cast("decimal(20,0)") *
         lit(10000000000L) + col("s")
-      // same skew-immune detector shape as q198 (see the note there),
-      // with the packed owner riding the same aggregate: min is
-      // algebraic, so the whole sharing+ownership decision still
-      // combines map-side; the merge-pinned inner join-back carries
-      // ONE packed `own` per shared fp, and Inner joins are
-      // AQE-skew-splittable on the occurrence side (the duplicated
-      // one-row build partition cannot duplicate output rows)
-      val fpOwn = grams
-        .groupBy(col("fp.h1").as("h1"), col("fp.h2").as("h2"))
-        .agg(min(col("doc_id")).as("mn"), max(col("doc_id")).as("mx"),
-          min(occ).as("own"))
-        .filter(col("mn") =!= col("mx"))
-        .select(struct(col("h1"), col("h2")).as("fp"), col("own"))
-      val nonOwner = grams
-        .join(fpOwn.hint("merge"), Seq("fp"))
-        .filter(!(occ === col("own")))
-        .select(col("doc_id"), col("s"))
-      // same per-doc position-set mark as q199 (see the plan notes
-      // there: the cover is duplicate-volume-sized — never broadcast,
-      // never hash-build; sort-merge on one row per affected doc)
-      val covSet = nonOwner
-        .select(col("doc_id"),
-          explode(sequence(col("s"), col("s") + w - 1)).as("p"))
-        .groupBy(col("doc_id"))
-        .agg(collect_set(col("p")).as("cps"))
-      docs
-        .join(covSet.hint("merge"), Seq("doc_id"), "inner")
-        .select(col("doc_id"),
-          (size(col("toks")) - size(col("cps"))).cast("long").as("n_kept"),
-          array_join(filter(col("toks"),
-            (t, i) => !array_contains(col("cps"), i)), " ")
-            .as("scrubbed_text"))
+      val docs = exsubDocs(s, d)
+      val grams = exsubGrams(docs)
+      // the owner rides the detector aggregate (min is algebraic, so
+      // sharing and ownership still combine map-side); the inner
+      // join-back carries ONE packed `own` per shared fp, and Inner
+      // joins are AQE-skew-splittable on the occurrence side (the
+      // duplicated one-row build partition cannot duplicate output rows)
+      scrub(docs, grams
+        .join(sharedFps(grams, min(occ).as("own")), Seq("fp"))
+        .filter(!(occ === col("own"))))
     }
   )
 

@@ -1,8 +1,10 @@
 package graft.tools
 
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.{Session, Tables}
+import graft.operators.Dedup
 
 /** Scale-evidence corpus generator: a 4× `documents`/`embeddings` pair
   * derived deterministically from an input scale-factor directory, with
@@ -45,6 +47,31 @@ object ScaleData {
     spark.stop()
   }
 
+  /** `n` planted documents with ids from `4·max(doc_id) + offset` (clear
+    * of the replicated range `4·max + 3`), text `text(doc_id)`, and
+    * (source, lang) cycled deterministically over the source corpus's
+    * distinct pairs, so metadata joins see only pairs the corpus has. */
+  private def cohort(spark: SparkSession, sfDir: String, n: Int,
+      offset: Long)(text: Column => Column): DataFrame = {
+    val src = Tables.documents(spark, sfDir)
+    val pairs = src.select(col("source"), col("lang")).distinct()
+      .orderBy(col("source"), col("lang"))
+      .collect().map(r => (r.getString(0), r.getString(1)))
+    require(pairs.nonEmpty, s"ScaleData: $sfDir/documents.parquet has " +
+      "no rows; planted cohorts take their ids and (source, lang) pairs " +
+      "from the source corpus, so plant and hotFp need a non-empty one")
+    val base = 4 * src.agg(max(col("doc_id"))).head().getLong(0) + offset
+    val pairsCol = array(pairs.toIndexedSeq.map { case (s0, l0) =>
+      struct(lit(s0).as("source"), lit(l0).as("lang")) }: _*)
+    spark.range(n.toLong)
+      .select((col("id") + base).as("doc_id"),
+        element_at(pairsCol, (col("id") % pairs.length).cast("int") + 1)
+          .as("p"))
+      .select(col("doc_id"), text(col("doc_id")).as("text"),
+        col("p.lang").as("lang"), col("p.source").as("source"))
+      .withColumn("n_chars", length(col("text")).cast("long"))
+  }
+
   /** Corpus generation on a CALLER-OWNED session — `main` wraps this
     * with its own session lifecycle; in-JVM callers (AnnConfigSpec's 4×
     * recall panel) pass the shared test session, which must NOT be
@@ -72,37 +99,18 @@ object ScaleData {
           .as("text"),
         col("lang"), col("source"))
       .withColumn("n_chars", length(col("text")).cast("long"))
-    val withPlants = if (plant <= 0) docs else {
-      val src = Tables.documents(spark, sfDir)
-      // id base clear of the replicated range (4 * maxId + 3)
-      val base = 4 * src.agg(max(col("doc_id"))).head().getLong(0) + 1000
-      // the corpus's (source, lang) pairs, cycled deterministically
-      val pairs = src.select(col("source"), col("lang")).distinct()
-        .orderBy(col("source"), col("lang"))
-        .collect().map(r => (r.getString(0), r.getString(1)))
-      val pairsCol = array(pairs.toIndexedSeq.map { case (s0, l0) =>
-        struct(lit(s0).as("source"), lit(l0).as("lang")) }: _*)
-      val planted = spark.range(plant.toLong)
-        .select((col("id") + base).as("doc_id"),
-          // 40 globally-unique tokens per doc, carrying the actual
-          // doc_id (not the raw range id) so a planted doc is
-          // greppable by its id and two cohorts planted at different
-          // bases can never collide token-for-token
-          array_join(expr(
-            s"""transform(sequence(0, 39),
-               |  j -> concat('zq', CAST(id + ${base}L AS STRING),
-               |              'x', CAST(j AS STRING)))""".stripMargin),
-            " ").as("text"),
-          element_at(pairsCol,
-            (col("id") % pairs.length).cast("int") + 1).as("p"))
-        .select(col("doc_id"), col("text"),
-          col("p.lang").as("lang"), col("p.source").as("source"),
-          length(col("text")).cast("long").as("n_chars"))
-      docs.unionByName(planted)
-    }
+    val withPlants = if (plant <= 0) docs else
+      docs.unionByName(cohort(spark, sfDir, plant, 1000)(id =>
+        // 40 globally-unique tokens per doc, carrying the actual
+        // doc_id (not the raw range id) so a planted doc is
+        // greppable by its id and two cohorts planted at different
+        // bases can never collide token-for-token
+        array_join(transform(sequence(lit(0), lit(39)), j =>
+          concat(lit("zq"), id.cast("string"), lit("x"), j.cast("string"))),
+          " ")))
     // Optional HOT-FINGERPRINT cohort (VERDICT-r17 task #1, the Zipf
     // class the uniform replication never exercises): `hotFp` docs
-    // whose text is EXACTLY one fixed 12-gram (q198's EXSUB_W window),
+    // whose text is EXACTLY one fixed W-gram (q198's EXSUB_W window),
     // so ONE substring fingerprint owns `hotFp` occurrences — the
     // license-header/cookie-banner shape of real corpora, where the
     // detector's fp shuffle gets a power-law partition. Sizing note:
@@ -110,27 +118,12 @@ object ScaleData {
     // COMPRESSED, 5× median), so a cohort that is supposed to trip the
     // default rule (not the probe-scaled one) needs ~10⁷ occurrences;
     // `12000000` is the drill value. Ids sit beyond both the
-    // replicated range and the survivor cohort; (source, lang) cycle
-    // like the survivors so metadata joins stay unaffected.
+    // replicated range and the survivor cohort.
     val withHot = if (hotFp <= 0) withPlants else {
-      val src = Tables.documents(spark, sfDir)
-      val base = 4 * src.agg(max(col("doc_id"))).head().getLong(0) +
-        1000 + plant.toLong + 1000000
-      val pairs = src.select(col("source"), col("lang")).distinct()
-        .orderBy(col("source"), col("lang"))
-        .collect().map(r => (r.getString(0), r.getString(1)))
-      val pairsCol = array(pairs.toIndexedSeq.map { case (s0, l0) =>
-        struct(lit(s0).as("source"), lit(l0).as("lang")) }: _*)
-      val hotText = (0 until 12).map(i => s"hotgram$i").mkString(" ")
-      val hot = spark.range(hotFp.toLong)
-        .select((col("id") + base).as("doc_id"),
-          lit(hotText).as("text"),
-          element_at(pairsCol,
-            (col("id") % pairs.length).cast("int") + 1).as("p"))
-        .select(col("doc_id"), col("text"),
-          col("p.lang").as("lang"), col("p.source").as("source"),
-          length(col("text")).cast("long").as("n_chars"))
-      withPlants.unionByName(hot)
+      val hotText = (0 until Dedup.EXSUB_W).map(i => s"hotgram$i")
+        .mkString(" ")
+      withPlants.unionByName(cohort(spark, sfDir, hotFp,
+        1000 + plant.toLong + 1000000)(_ => lit(hotText)))
     }
     withHot.coalesce(1).write.mode("overwrite")
       .parquet(s"$outDir/documents.parquet")

@@ -6,6 +6,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.Session
+import graft.operators.Dedup
 
 /** Hot-fingerprint straggler probe for the exact-substring sharing
   * detector (q198/q199/q200) — the VERDICT-r16 skew class the uniform
@@ -38,7 +39,9 @@ import graft.Session
   * (defaults 400000 / 1; honors SPARK_GRAFT_CPUS).
   *
   * DIR MODE (VERDICT-r17 task #1): `runMain graft.tools.SkewProbe
-  * /path/to/corpusDir` — reads `documents.parquet` from a real corpus
+  * corpusDir` — any first argument that is not all digits is a corpus
+  * directory, absolute or relative (`data/g64xp`). Reads
+  * `documents.parquet` from a real corpus
   * (e.g. a ScaleData rung with the hot-fp cohort planted) and runs the
   * same three shapes at Spark's DEFAULT AQE skew thresholds (256 MB /
   * factor 5), so the split under test is the exact rule production
@@ -76,13 +79,18 @@ object SkewProbe {
     }.sortBy(-_._2)
   }
 
+  /** Whether the first CLI argument names a corpus directory rather
+    * than a planted-corpus document count: anything not all digits. */
+  private[graft] def isCorpusDir(arg: String): Boolean =
+    !arg.matches("[0-9]+")
+
   def main(args: Array[String]): Unit = {
-    val dirMode = args.headOption.exists(_.startsWith("/"))
+    val dirMode = args.headOption.exists(isCorpusDir)
     val nDocs = if (dirMode) 0 else
       args.headOption.map(_.toInt).getOrElse(400000)
     val tail = args.drop(1).headOption.map(_.toInt).getOrElse(1)
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8").toInt
-    val w = 12 // EXSUB_W
+    val w = Dedup.EXSUB_W
     val spark = Session.build(s"local[$cpus]", cpus, "graft-skewprobe",
       if (dirMode) Map.empty[String, String]
       else Map(
@@ -122,18 +130,8 @@ object SkewProbe {
       .persist()
     docs.count()
 
-    // ---- the q198 gram table, verbatim ---------------------------------
-    val t = col("toks"); val n = size(t)
-    val idx = when(n >= w, sequence(lit(0), n - w))
-      .otherwise(array().cast("array<int>"))
-    def grams: DataFrame = docs
-      .select(col("doc_id"),
-        posexplode(transform(
-          transform(idx, i => slice(t, i + lit(1), lit(w))),
-          sl => struct(
-            xxhash64(lit(1), sl).as("h1"),
-            xxhash64(lit(2), sl).as("h2")))))
-      .select(col("doc_id"), col("pos").as("s"), col("col").as("fp"))
+    // ---- the shipped gram table (q198/q199/q200) -----------------------
+    def grams: DataFrame = Dedup.exsubGrams(docs)
 
     // shape A — the PRE-r17 window detector (kept here as the probe's
     // control: all k hot occurrences land in one window partition)
@@ -162,21 +160,14 @@ object SkewProbe {
         .select(col("doc_id"), col("s"))
     }
 
-    // shape C — the SHIPPED detector (q198/q199/q200): the small side
-    // aggregates on the struct's FIELDS and re-assembles `fp`, so its
-    // hash(h1,h2) partitioning does not satisfy the join's hash(fp)
-    // distribution, both SMJ children plan fresh ENSURE_REQUIREMENTS
-    // exchanges, and OptimizeSkewedJoin's SMJ(Sort(Shuffle),
-    // Sort(Shuffle)) pattern can match — the hot partition splits
-    def splittableShape: DataFrame = {
-      val sharedFp = grams
-        .groupBy(col("fp.h1").as("h1"), col("fp.h2").as("h2"))
-        .agg(min(col("doc_id")).as("mn"), max(col("doc_id")).as("mx"))
-        .filter(col("mn") =!= col("mx"))
-        .select(struct(col("h1"), col("h2")).as("fp"))
-      grams.join(sharedFp.hint("merge"), Seq("fp"), "left_semi")
+    // shape C — the SHIPPED detector (q198/q199/q200, Dedup.sharedFps):
+    // the field-keyed aggregate's partitioning does not satisfy the
+    // join's hash(fp) distribution, so OptimizeSkewedJoin's
+    // SMJ(Sort(Shuffle), Sort(Shuffle)) pattern can match — the hot
+    // partition splits
+    def splittableShape: DataFrame =
+      grams.join(Dedup.sharedFps(grams), Seq("fp"), "left_semi")
         .select(col("doc_id"), col("s"))
-    }
 
     val listener = new TaskTimes
     spark.sparkContext.addSparkListener(listener)

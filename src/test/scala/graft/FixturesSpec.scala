@@ -127,6 +127,46 @@ class FixturesSpec extends AnyFunSuite {
       "regenerated fixture served a stale cached file listing")
   }
 
+  test("spread widens a layout-capped scan with one hash exchange, leaves a wide one alone") {
+    import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+    val p = spark.sparkContext.defaultParallelism
+    def exchanges(df: org.apache.spark.sql.DataFrame) =
+      (df.queryExecution.executedPlan match {
+        case a: AdaptiveSparkPlanExec => a.initialPlan
+        case other => other
+      }).collect { case e: ShuffleExchangeExec => e }
+    def table(files: Int): String = {
+      val dir = java.nio.file.Files.createTempDirectory("graft-spread").toString
+      spark.range(200).selectExpr("id AS doc_id", "'a b c' AS text")
+        .repartition(files)
+        .write.mode("overwrite").parquet(s"$dir/documents.parquet")
+      dir
+    }
+    // one file, one row group: the scan is one task, so spread pays
+    // exactly one hash exchange on the key to session width
+    val narrow = table(1)
+    val spreadNarrow = Tables.spread(spark, narrow, "documents", "doc_id")
+    val ex = exchanges(spreadNarrow)
+    assert(ex.size == 1, ex)
+    ex.head.outputPartitioning match {
+      case HashPartitioning(Seq(k: org.apache.spark.sql.catalyst.expressions.Attribute), n) =>
+        assert(k.name == "doc_id" && n == p, ex.head.outputPartitioning)
+      case other => fail(s"expected hashpartitioning(doc_id, $p), got $other")
+    }
+    // ≥ parallelism files (one row group each): already as wide as the
+    // session, so spread is the identity — no exchange at all
+    val wide = table(p)
+    val spreadWide = Tables.spread(spark, wide, "documents", "doc_id")
+    assert(spreadWide eq Tables(spark, wide, "documents"))
+    assert(exchanges(spreadWide).isEmpty)
+    Seq(narrow, wide).foreach { d =>
+      assert(Tables.rowCount(spark, d, "documents") ==
+        Tables(spark, d, "documents").count(), d)
+    }
+  }
+
   test("artifact retention GC reaps superseded fingerprint trees") {
     // Without GC, every in-place fixture regeneration orphans the
     // previous fingerprint's whole artifact tree forever. Reader

@@ -286,6 +286,52 @@ class PlanAuditSpec extends AnyFunSuite {
     assert(p.contains("HashAggregate"))
   }
 
+  test("exact-substring detector: no fp window, sort-merge fp join-back, gram build shares one spread scan") {
+    // Pins the shared detector shape (Dedup.sharedFps) on the FINAL
+    // adaptive plan of all three consumers: a window over fp would put
+    // every occurrence of a hot fingerprint on one unsplittable task; a
+    // broadcast or hash join-back would build a duplicate-volume-sized
+    // side; and the gram build's two consumers (aggregate and join-back)
+    // must share ONE spread documents scan through a reused exchange.
+    // q199/q200's scrub reads documents a second time: the inner join's
+    // inferred IsNotNull(doc_id) filter sits below that side's spread
+    // exchange, so it is a different scan, not a re-planned one.
+    import org.apache.spark.sql.catalyst.expressions.Expression
+    import org.apache.spark.sql.execution.FileSourceScanExec
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.exchange.{REPARTITION_BY_NUM,
+      ReusedExchangeExec, ShuffleExchangeExec}
+    import org.apache.spark.sql.execution.joins.{BaseJoinExec, SortMergeJoinExec}
+    import org.apache.spark.sql.execution.window.WindowExec
+    val h = new AdaptiveSparkPlanHelper {}
+    def onFp(e: Expression) = e.references.exists(_.name == "fp")
+    Seq("q198_exact_substring" -> 1, "q199_substring_scrub" -> 2,
+      "q200_substring_keep_one" -> 2).foreach { case (q, nScans) =>
+      val df = SparkEntry.queries(q)(spark, Spec.sfDir)
+      df.collect()
+      val p = df.queryExecution.executedPlan
+      assert(h.collect(p) {
+        case w: WindowExec if w.partitionSpec.exists(onFp) => w }.isEmpty,
+        s"$q: window partitioned by fp\n$p")
+      val fpJoins = h.collect(p) {
+        // the grams side's key is the raw posexplode column; the
+        // shared-fp side carries the `fp` name
+        case j: BaseJoinExec if j.rightKeys.exists(onFp) => j }
+      assert(fpJoins.nonEmpty &&
+        fpJoins.forall(_.isInstanceOf[SortMergeJoinExec]),
+        s"$q: fp join-back must be sort-merge\n$p")
+      val scans = h.collect(p) {
+        case f: FileSourceScanExec
+            if f.relation.location.rootPaths.exists(
+              _.getName == "documents.parquet") => f }
+      assert(scans.size == nScans, s"$q: ${scans.size} documents scans\n$p")
+      val reusedSpread = h.collect(p) { case r: ReusedExchangeExec => r.child }
+        .collect { case e: ShuffleExchangeExec
+          if e.shuffleOrigin == REPARTITION_BY_NUM => e }
+      assert(reusedSpread.nonEmpty, s"$q: spread exchange not reused\n$p")
+    }
+  }
+
   test("skew advisor attaches totals by one-row broadcast") {
     val p = plan("q108_skew_advisor")
     assert(p.contains("BroadcastNestedLoopJoin") ||
