@@ -28,56 +28,36 @@ import java.nio.file.{Files, Paths}
   */
 object Bench {
 
-  /** Per-rep attribution listener (opt-in, `SPARK_GRAFT_BENCH_PROFILE=1`):
-    * sums task-reported GC/run/spill between `snap()` calls so a wall-time
-    * stall can be attributed to GC vs compute vs spill instead of guessed
-    * at. Driver == executor JVM at local[N], so the GC MXBean delta also
-    * covers pauses that landed outside any task.
-    */
-  private final class Profiler extends org.apache.spark.scheduler.SparkListener {
-    import java.util.concurrent.atomic.AtomicLong
-    val gc = new AtomicLong; val run = new AtomicLong; val spill = new AtomicLong
-    override def onTaskEnd(
-        t: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit = {
-      val m = t.taskMetrics
-      if (m != null) {
-        gc.addAndGet(m.jvmGCTime); run.addAndGet(m.executorRunTime)
-        spill.addAndGet(m.memoryBytesSpilled + m.diskBytesSpilled)
-      }
-    }
-    private def beanGcMs: Long = {
-      import scala.jdk.CollectionConverters._
-      java.lang.management.ManagementFactory.getGarbageCollectorMXBeans
-        .asScala.map(_.getCollectionTime.max(0L)).sum
-    }
-    private var lastBean = beanGcMs
-    /** Whole-process kernel-side counters from /proc/self/stat — major
-      * faults and user/system jiffies. Round-6 forensics: this host's
-      * memory backend services first-touch faults at ~tens of MB/s, so
-      * per-rep majflt/stime deltas are what separate "the query is
-      * slow" from "the VM stalled the query". */
-    private def procStat: (Long, Long, Long) = try {
-      // fields (1-based): 10 minflt, 12 majflt, 14 utime, 15 stime —
-      // comm (field 2) can contain spaces, so split after the ')'
-      val s = new String(java.nio.file.Files.readAllBytes(
-        java.nio.file.Paths.get("/proc/self/stat")))
-      val f = s.substring(s.lastIndexOf(')') + 2).split(" ")
-      // after the split, field 3 (state) is f(0), so stat field N
-      // (1-based) is f(N - 3): minflt=10, majflt=12, utime=14, stime=15
-      (f(7).toLong + f(9).toLong, f(9).toLong, f(11).toLong + f(12).toLong)
-    } catch { case _: Exception => (0L, 0L, 0L) }
-    private var lastStat = procStat
-    /** (taskGcMs, taskRunMs, spillBytes, driverGcDeltaMs,
-      * faultDelta, majFaultDelta, cpuJiffiesDelta) since last call. */
-    def snap(): (Long, Long, Long, Long, Long, Long, Long) = {
-      val b = beanGcMs; val d = b - lastBean; lastBean = b
-      val st = procStat
-      val (df, dmj, dcpu) =
-        (st._1 - lastStat._1, st._2 - lastStat._2, st._3 - lastStat._3)
-      lastStat = st
-      (gc.getAndSet(0), run.getAndSet(0), spill.getAndSet(0), d, df, dmj, dcpu)
-    }
+  /** Process GC time so far from the MXBeans. Driver == executor JVM at
+    * local[N], so a per-rep delta also covers pauses that landed outside
+    * any task. */
+  private def beanGcMs: Long = {
+    import scala.jdk.CollectionConverters._
+    java.lang.management.ManagementFactory.getGarbageCollectorMXBeans
+      .asScala.map(_.getCollectionTime.max(0L)).sum
   }
+
+  /** Whole-process kernel-side counters from /proc/self/stat — major
+    * faults and user/system jiffies. Round-6 forensics: this host's
+    * memory backend services first-touch faults at ~tens of MB/s, so
+    * per-rep majflt/stime deltas are what separate "the query is
+    * slow" from "the VM stalled the query". Returns (majflt, cpuJiffies). */
+  private def procStat: (Long, Long) = try {
+    // comm (field 2) can contain spaces, so split after the ')'; then
+    // field 3 (state) is f(0), so stat field N (1-based) is f(N - 3):
+    // majflt=12, utime=14, stime=15
+    val s = new String(Files.readAllBytes(Paths.get("/proc/self/stat")))
+    val f = s.substring(s.lastIndexOf(')') + 2).split(" ")
+    (f(9).toLong, f(11).toLong + f(12).toLong)
+  } catch { case _: Exception => (0L, 0L) }
+
+  /** One query's reps: wall seconds sorted ascending, the first error,
+    * and in rep order the host counters (wall s, major faults, cpu
+    * jiffies, GC ms) and the metrics record; plus the calibration probes
+    * taken before its reps. */
+  private final case class Result(name: String, walls: Seq[Double],
+      err: Option[String], attrib: Seq[(Double, Long, Long, Long)],
+      layers: Seq[Metrics.Snapshot], calib: Double, memCalib: Double)
 
   /** Sink for the spin probe so the JIT cannot eliminate the loop. */
   @volatile private var blackhole: Long = 0L
@@ -149,41 +129,6 @@ object Bench {
     sys.props("graft.bench.streamEpochs") = streamEpochs.toString
     val spark = Session.build(s"local[$cpus]", cpus.toInt, "graft-bench")
     spark.sparkContext.setLogLevel("WARN")
-    // Attribution is ALWAYS collected and lands in the JSON artifact:
-    // round-7's driver run was ~1.9x the builder's clean runs and the
-    // artifact carried no way to tell a degraded host window (majflt
-    // storms, stolen CPU) from a plan regression. The listener sums
-    // task-reported counters (O(1) per task) and /proc/self/stat reads
-    // are one syscall per rep — negligible against multi-second queries.
-    // SPARK_GRAFT_BENCH_PROFILE=1 additionally echoes per-rep lines to
-    // stderr for live watching.
-    val profiler = { val p = new Profiler
-      spark.sparkContext.addSparkListener(p); p }
-    val profVerbose = sys.env.get("SPARK_GRAFT_BENCH_PROFILE").contains("1")
-    // Phase-level attribution for the per-execution driver floor
-    // (SPARK_GRAFT_BENCH_PROFILE=1): Catalyst's QueryPlanningTracker
-    // carries per-execution analysis/optimization/planning wall times,
-    // which is exactly the driver-side share that task metrics can't
-    // see. Stderr-only, opt-in — zero cost on gate runs.
-    if (profVerbose)
-      spark.listenerManager.register(
-        new org.apache.spark.sql.util.QueryExecutionListener {
-          override def onSuccess(fn: String,
-              qe: org.apache.spark.sql.execution.QueryExecution,
-              durationNs: Long): Unit = {
-            val ph = qe.tracker.phases.toSeq.sortBy(_._1).map { case (k, v) =>
-              s"$k=${v.endTimeMs - v.startTimeMs}ms" }.mkString(" ")
-            System.err.println(
-              f"[qe] $fn total=${durationNs / 1e6}%.1fms $ph")
-          }
-          override def onFailure(fn: String,
-              qe: org.apache.spark.sql.execution.QueryExecution,
-              e: Exception): Unit = ()
-        })
-    // Deterministic block release at the query boundary (see clearCache
-    // note below). SPARK_GRAFT_KEEP_RDDS=1 disables it for leak A/B runs.
-    val freeRdds = !sys.env.get("SPARK_GRAFT_KEEP_RDDS").contains("1")
-
     // NOTE the heap itself is pre-touched at JVM start (-Xms = -Xmx
     // + -XX:+AlwaysPreTouch, build.sbt): on this host first-touch page
     // faults are slow enough (SURVEY §11) that an in-loop frontier
@@ -257,97 +202,76 @@ object Bench {
     System.err.println(f"[bench] window precheck: memcalib " +
       f"$windowFirst%.2f ms (final $windowFinal%.2f, threshold " +
       f"$windowThresholdMs%.2f) window_ok=$windowOk")
-    // (name, per-rep seconds sorted ascending, first error if any)
     val results = selected.map { case (name, fn) =>
       val calib = spinProbeMs()
       val memCalib = memProbeMs()
-      val runs = (1 to reps).map { rep =>
-        val t0 = System.nanoTime()
-        val err = try { fn(spark, sfDir).count(); None } catch {
-          case e: Throwable =>
-            Some(e.toString.linesIterator.next().take(200))
+      // Attribution is ALWAYS collected and lands in the JSON artifact:
+      // round-7's driver run was ~1.9x the builder's clean runs and the
+      // artifact carried no way to tell a degraded host window (majflt
+      // storms, stolen CPU) from a plan regression. The metrics listener
+      // sums task-reported counters (O(1) per task) and /proc/self/stat
+      // reads are one syscall per rep — negligible against the queries.
+      val runs = (1 to reps).map { _ =>
+        val gc0 = beanGcMs; val (mjf0, cpu0) = procStat
+        val ((wall, err), layers) = Metrics.during(spark) {
+          val t0 = System.nanoTime()
+          val err = try { fn(spark, sfDir).count(); None } catch {
+            case e: Throwable =>
+              Some(e.toString.linesIterator.next().take(200))
+          }
+          val wall = (System.nanoTime() - t0) / 1e9
+          // a long session must not accumulate dead cache or blocks
+          Session.release(spark)
+          (wall, err)
         }
-        val wall = (System.nanoTime() - t0) / 1e9
-        // release per-query persisted artifacts (signature/shingle/code
-        // tables) — a long session must not accumulate dead cache
-        spark.catalog.clearCache()
-        // localCheckpoint blocks (the iterative queries' FINAL round)
-        // live outside the catalog, so clearCache misses them; they are
-        // otherwise reclaimed only when a *driver GC* collects the RDD
-        // reference and the async ContextCleaner catches up — on a large
-        // heap that can be minutes, during which the dead blocks squeeze
-        // unified memory for every later query. Single-threaded boundary,
-        // so a blanket sweep can only touch finished queries' blocks.
-        if (freeRdds)
-          spark.sparkContext.getPersistentRDDs.values
-            .foreach(_.unpersist(blocking = false))
-        val (tgc, trun, sp, dgc, flt, mjf, cpu) = profiler.snap()
-        if (profVerbose) {
-          val stored = spark.sparkContext.getRDDStorageInfo
-          System.err.println(
-            f"[prof] $name rep=$rep wall=$wall%.3f taskGcMs=$tgc " +
-            f"taskRunMs=$trun spillMB=${sp / (1 << 20)} gcBeanMs=$dgc " +
-            f"rddBlocks=${stored.length} " +
-            f"rddMB=${stored.map(i => i.memSize + i.diskSize).sum / (1 << 20)} " +
-            f"faults=$flt majflt=$mjf cpuJf=$cpu")
-        }
-        (wall, err, mjf, cpu, dgc)
+        val (mjf, cpu) = procStat
+        (wall, err, mjf - mjf0, cpu - cpu0, beanGcMs - gc0, layers)
       }
-      (name, runs.map(_._1).sorted, runs.flatMap(_._2).headOption,
-        runs.map(r => (r._1, r._3, r._4, r._5)), calib, memCalib)
+      Result(name, runs.map(_._1).sorted, runs.flatMap(_._2).headOption,
+        runs.map(r => (r._1, r._3, r._4, r._5)), runs.map(_._6),
+        calib, memCalib)
     }
 
-    def jstr(s: String): String =
-      "\"" + s.flatMap {
-        case '"' => "\\\""
-        case '\\' => "\\\\"
-        case c if c < ' ' => f"\\u${c.toInt}%04x"
-        case c => c.toString
-      } + "\""
     def ms(v: Double): String = f"$v%.3f"
     def med(sorted: Seq[Double]): Double = sorted(sorted.size / 2)
-    val qs = results.map { case (k, r, _, _, _, _) => s"${jstr(k)}:${ms(med(r))}" }
-      .mkString("{", ",", "}")
-    val runsJson = results
-      .map { case (k, r, _, _, _, _) => s"${jstr(k)}:${r.map(ms).mkString("[", ",", "]")}" }
-      .mkString("{", ",", "}")
-    val errs = results.collect { case (k, _, Some(e), _, _, _) => s"${jstr(k)}:${jstr(e)}" }
-      .mkString("{", ",", "}")
+    def byQuery(v: Result => String): String =
+      results.map(r => s"${Json.str(r.name)}:${v(r)}").mkString("{", ",", "}")
+    val qs = byQuery(r => ms(med(r.walls)))
+    val runsJson = byQuery(_.walls.map(ms).mkString("[", ",", "]"))
+    val errs = results.collect { case Result(k, _, Some(e), _, _, _, _) =>
+      s"${Json.str(k)}:${Json.str(e)}" }.mkString("{", ",", "}")
     // Per-rep host attribution in REP ORDER (unlike "runs", which is
     // sorted): each entry is [wallSec, majorFaults, cpuJiffies, gcMs],
     // so a slow rep in the artifact carries its own cause — a majflt
     // spike or a cpu-jiffy deficit (host stole the cores) is a degraded
     // window; flat counters with high wall is a real plan cost.
-    val attribJson = results.map { case (k, _, _, reps, _, _) =>
-      s"${jstr(k)}:" + reps.map { case (w, mjf, cpu, gc) =>
-        s"[${ms(w)},$mjf,$cpu,$gc]" }.mkString("[", ",", "]")
-    }.mkString("{", ",", "}")
-    val calibJson = results
-      .map { case (k, _, _, _, c, _) => s"${jstr(k)}:${f"$c%.2f"}" }
-      .mkString("{", ",", "}")
-    val memCalibJson = results
-      .map { case (k, _, _, _, _, m) => s"${jstr(k)}:${f"$m%.2f"}" }
-      .mkString("{", ",", "}")
+    val attribJson = byQuery(_.attrib.map { case (w, mjf, cpu, gc) =>
+      s"[${ms(w)},$mjf,$cpu,$gc]" }.mkString("[", ",", "]"))
+    // Per-rep engine layers, also in REP ORDER: jobs, stages, SQL
+    // executions, task time, shuffle, spill, GC and Catalyst phases.
+    val layersJson = byQuery(_.layers.map(_.json).mkString("[", ",", "]"))
+    val calibJson = byQuery(r => f"${r.calib}%.2f")
+    val memCalibJson = byQuery(r => f"${r.memCalib}%.2f")
     def medOf(vals: Seq[Double]): Double = {
       val s = vals.sorted
       if (s.isEmpty) 0.0 else s(s.size / 2)
     }
-    val calibMed = medOf(results.map(_._5))
-    val memCalibMed = medOf(results.map(_._6))
-    val majfltTotal = results.flatMap(_._4).map(_._2).sum
-    val cpuJfTotal = results.flatMap(_._4).map(_._3).sum
-    val gcMsTotal = results.flatMap(_._4).map(_._4).sum
-    val total = results.map(r => med(r._2)).sum
+    val calibMed = medOf(results.map(_.calib))
+    val memCalibMed = medOf(results.map(_.memCalib))
+    val majfltTotal = results.flatMap(_.attrib).map(_._2).sum
+    val cpuJfTotal = results.flatMap(_.attrib).map(_._3).sum
+    val gcMsTotal = results.flatMap(_.attrib).map(_._4).sum
+    val total = results.map(r => med(r.walls)).sum
     // Sum of per-query MINIMA: the intrinsic-cost estimator under this
     // host's one-sided noise (SURVEY §11 — external fault-service
     // bursts only ever ADD time). value stays the median total; the
     // min total quantifies how much of a given run was environment.
-    val minTotal = results.map(_._2.head).sum
-    val nFailed = results.count(_._3.isDefined)
+    val minTotal = results.map(_.walls.head).sum
+    val nFailed = results.count(_.err.isDefined)
     val common =
       s""""unit":"sec","min_total":${ms(minTotal)},""" +
       s""""failed":$nFailed,"n":${results.size},"reps":$reps,""" +
-      s""""sf":${jstr(sfDir)},"cpus":$cpus,""" +
+      s""""sf":${Json.str(sfDir)},"cpus":$cpus,""" +
       s""""majflt_total":$majfltTotal,"cpu_jf_total":$cpuJfTotal,""" +
       s""""gc_ms_total":$gcMsTotal,""" +
       s""""calib_ms_med":${f"$calibMed%.2f"},""" +
@@ -363,7 +287,7 @@ object Bench {
       s""""copurchase_edges":${ms(tEdges)},"edges_built":$nEdgesBuilt},""" +
       s""""xmx_mb":${Runtime.getRuntime.maxMemory / (1 << 20)}"""
     val full =
-      s"""{"metric":"total","value":${ms(total)},$common,"queries":$qs,"runs":$runsJson,"errors":$errs,"attrib":$attribJson,"calib":$calibJson,"memcalib":$memCalibJson}"""
+      s"""{"metric":"total","value":${ms(total)},$common,"queries":$qs,"runs":$runsJson,"errors":$errs,"attrib":$attribJson,"layers":$layersJson,"calib":$calibJson,"memcalib":$memCalibJson}"""
     // The driver's tail capture keeps only the LAST stdout line, so any
     // attribution that matters across rounds must ride in the summary
     // itself: r7's regression was unattributable from BENCH_r07.json
@@ -371,9 +295,9 @@ object Bench {
     // full line. Carry the 15 heaviest per-query medians — enough to
     // diff two rounds' heavy tails without repo-local files — while
     // keeping the line a few hundred bytes.
-    val top = results.map { case (k, r, _, _, _, _) => (k, med(r)) }
+    val top = results.map(r => (r.name, med(r.walls)))
       .sortBy { case (k, v) => (-v, k) }.take(15)
-      .map { case (k, v) => s"${jstr(k)}:${ms(v)}" }
+      .map { case (k, v) => s"${Json.str(k)}:${ms(v)}" }
       .mkString("{", ",", "}")
     // headline-only line — small enough to survive ANY tail capture
     val summary =

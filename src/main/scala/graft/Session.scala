@@ -147,4 +147,17 @@ object Session {
       catch { case _: NoClassDefFoundError | _: RuntimeException => }
     sp
   }
+
+  /** Query-boundary release: drops the catalog-cached plans, then
+    * unpersists the RDDs persisted outside the catalog — localCheckpoint
+    * blocks (the iterative queries' final round), which a driver GC and
+    * the async ContextCleaner may take minutes to reclaim on a large
+    * heap, squeezing unified memory for every later query meanwhile.
+    * Call it only at a single-threaded boundary, so the sweep can touch
+    * only finished queries' blocks. */
+  def release(spark: SparkSession): Unit = {
+    spark.catalog.clearCache()
+    spark.sparkContext.getPersistentRDDs.values
+      .foreach(_.unpersist(blocking = false))
+  }
 }

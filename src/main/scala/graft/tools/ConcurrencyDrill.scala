@@ -7,7 +7,7 @@ import java.util.concurrent.atomic.AtomicLong
 import scala.concurrent.{Await, ExecutionContext, Future}
 import scala.concurrent.duration.Duration
 
-import graft.{Bench, Session, SparkEntry}
+import graft.{Bench, Json, Session, SparkEntry}
 
 /** Concurrent-serving drill (SURVEY §19.4's measurement half), two
   * phases against one shared FAIR-scheduled session:
@@ -62,14 +62,6 @@ object ConcurrencyDrill {
       ps
     }
     .getOrElse(defaultPanel)
-
-  private def jstr(s: String): String =
-    "\"" + s.flatMap {
-      case '"' => "\\\""
-      case '\\' => "\\\\"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
 
   /** Nearest-rank percentile over an ASCENDING-sorted sample; NaN on
     * an empty sample (loopSec=0 or no closed-loop run completing must
@@ -160,26 +152,26 @@ object ConcurrencyDrill {
 
     // NaN (empty closed-loop sample) must stay valid JSON → null
     def ms(v: Double) = if (v.isNaN) "null" else f"$v%.3f"
-    val seqJson = seqRuns.map { case (q, _, w) => s"${jstr(q)}:${ms(w)}" }
+    val seqJson = seqRuns.map { case (q, _, w) => s"${Json.str(q)}:${ms(w)}" }
       .mkString("{", ",", "}")
     // race-phase per-query mean of the two runs (the old field
     // reported s(1) of 2 as a "median", biasing every latency upward)
     val concMean = got.groupBy(_._1).map { case (q, rs) =>
       (q, rs.map(_._3).sum / rs.size)
     }
-    val concJson = panel.map(q => s"${jstr(q)}:${ms(concMean(q))}")
+    val concJson = panel.map(q => s"${Json.str(q)}:${ms(concMean(q))}")
       .mkString("{", ",", "}")
     val tails = loopRuns.groupBy(_._1).toSeq.sortBy(_._1).map {
       case (q, rs) =>
         val s = rs.map(_._2).sorted.toIndexedSeq
-        s"${jstr(q)}:{" + s""""n":${s.size},"p50":${ms(pct(s, 0.50))},""" +
+        s"${Json.str(q)}:{" + s""""n":${s.size},"p50":${ms(pct(s, 0.50))},""" +
           s""""p95":${ms(pct(s, 0.95))},"p99":${ms(pct(s, 0.99))},""" +
           s""""max":${ms(s.last)}}"""
     }.mkString("{", ",", "}")
     val allLat = loopRuns.map(_._2).sorted.toIndexedSeq
     val qps = runsDone.get() / loopWall
     val json =
-      s"""{"metric":"conc_drill","sf":${jstr(sfDir)},"threads":$threads,""" +
+      s"""{"metric":"conc_drill","sf":${Json.str(sfDir)},"threads":$threads,""" +
       s""""cpus":$cpus,"panel_n":${panel.size},""" +
       s""""seq_wall_sec":${ms(seqSec)},"conc_wall_sec":${ms(conSec)},""" +
       s""""conc_queries":${panel.size * 2},""" +

@@ -1,12 +1,11 @@
 package graft.tools
 
-import java.util.concurrent.atomic.AtomicInteger
-
 import scala.jdk.CollectionConverters._
 
 import org.apache.spark.TaskContext
-import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd,
-  SparkListenerTaskStart}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskStart}
+
+import graft.Metrics
 
 /** Fault-tolerance demonstrations for SURVEY §2.A A13, mirroring the
   * reference's failure drills: a task that dies and is re-queued, a
@@ -22,8 +21,8 @@ import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd,
   *
   *  - `retry`: master `local[4,2]` (second slot = task retry budget in
   *    local mode), one partition's first attempt throws; the job must
-  *    still produce the exact sum, with ≥1 failed attempt observed by
-  *    a listener.
+  *    still produce the exact sum, with ≥1 failed attempt recorded by
+  *    [[graft.Metrics]].
   *  - `speculation`: master `local-cluster[2,1,1024]` — real executor
   *    JVMs, because Spark's speculation thread is disabled on purely
   *    local masters — one partition's first attempt stalls; the
@@ -39,29 +38,22 @@ object FaultDemo {
   private def retryDemo(): Int = {
     val spark = graft.Session.build("local[4,2]", 4, "graft-fault-retry")
     spark.sparkContext.setLogLevel("ERROR")
-    val failedAttempts = new AtomicInteger(0)
-    spark.sparkContext.addSparkListener(new SparkListener {
-      override def onTaskEnd(e: SparkListenerTaskEnd): Unit =
-        if (e.taskInfo.failed) failedAttempts.incrementAndGet()
-    })
     // partition 3's first attempt dies mid-task; the retried attempt
     // (attemptNumber 1) processes the same pristine partition
-    val sum = spark.sparkContext.parallelize(1 to 800, 8)
-      .map { i =>
-        val ctx = TaskContext.get()
-        if (ctx.partitionId() == 3 && ctx.attemptNumber() == 0)
-          throw new RuntimeException("planted task failure (attempt 0)")
-        i.toLong
-      }
-      .sum()
-    // listener delivery is async; bounded wait, no flaky fixed sleep
-    val deadline = System.nanoTime() + 10e9.toLong
-    while (failedAttempts.get() < 1 && System.nanoTime() < deadline)
-      Thread.sleep(50)
+    val (sum, m) = Metrics.during(spark) {
+      spark.sparkContext.parallelize(1 to 800, 8)
+        .map { i =>
+          val ctx = TaskContext.get()
+          if (ctx.partitionId() == 3 && ctx.attemptNumber() == 0)
+            throw new RuntimeException("planted task failure (attempt 0)")
+          i.toLong
+        }
+        .sum()
+    }
     spark.stop()
-    val ok = sum == (1 to 800).map(_.toLong).sum && failedAttempts.get() >= 1
+    val ok = sum == (1 to 800).map(_.toLong).sum && m.failedTasks >= 1
     println(s"RETRY result=${if (ok) "OK" else "BAD"} sum=$sum " +
-      s"failedAttempts=${failedAttempts.get()}")
+      s"failedAttempts=${m.failedTasks}")
     if (ok) 0 else 1
   }
 
@@ -181,32 +173,26 @@ object FaultDemo {
           "spark.speculation.quantile" -> "0.5",
         ))
       spark.sparkContext.setLogLevel("WARN")
-      val speculative = new AtomicInteger(0)
-      spark.sparkContext.addSparkListener(new SparkListener {
-        override def onTaskStart(e: SparkListenerTaskStart): Unit =
-          if (e.taskInfo.speculative) speculative.incrementAndGet()
-      })
-      val t0 = System.nanoTime()
       // partition 7's FIRST attempt stalls 60 s (wc_map_slow.sh's
       // sleep; ONE sleep per task attempt, not per element); the
       // speculative attempt has a fresh attempt number and is instant,
       // so a working straggler re-launch finishes the job in seconds
-      val sum = spark.sparkContext.parallelize(1 to 800, 8)
-        .mapPartitionsWithIndex { (pid, it) =>
-          if (pid == 7 && TaskContext.get().attemptNumber() == 0)
-            Thread.sleep(60000)
-          it.map(_.toLong)
-        }
-        .sum()
+      val t0 = System.nanoTime()
+      val (sum, m) = Metrics.during(spark) {
+        spark.sparkContext.parallelize(1 to 800, 8)
+          .mapPartitionsWithIndex { (pid, it) =>
+            if (pid == 7 && TaskContext.get().attemptNumber() == 0)
+              Thread.sleep(60000)
+            it.map(_.toLong)
+          }
+          .sum()
+      }
       val secs = (System.nanoTime() - t0) / 1e9
-      val deadline = System.nanoTime() + 10e9.toLong
-      while (speculative.get() < 1 && System.nanoTime() < deadline)
-        Thread.sleep(50)
       spark.stop()
       val ok = sum == (1 to 800).map(_.toLong).sum &&
-        speculative.get() >= 1 && secs < 55
+        m.speculativeTasks >= 1 && secs < 55
       println(f"SPECULATION result=${if (ok) "OK" else "BAD"} sum=$sum " +
-        f"speculativeStarts=${speculative.get()} secs=$secs%.1f")
+        f"speculativeStarts=${m.speculativeTasks} secs=$secs%.1f")
       if (ok) 0 else 1
     }
   }
@@ -223,21 +209,18 @@ object FaultDemo {
       val spark = graft.Session.build(masterUrl, 4,
         "graft-fault-workerloss", clusterConf())
       spark.sparkContext.setLogLevel("WARN")
-      val lost = new AtomicInteger(0)
+      val metrics = new Metrics(spark)
       // release the killer only once tasks have been OBSERVED on TWO
       // DISTINCT executors (not two global task starts — one 1-core
       // executor can start two tasks back-to-back before the other has
       // even registered), so the victim provably dies with a task in
-      // flight
+      // flight. The latch is control flow, not measurement.
       val busyExecutors =
         java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
       val bothBusy = new java.util.concurrent.CountDownLatch(2)
       spark.sparkContext.addSparkListener(new SparkListener {
         override def onTaskStart(e: SparkListenerTaskStart): Unit =
           if (busyExecutors.add(e.taskInfo.executorId)) bothBusy.countDown()
-        override def onExecutorRemoved(
-            e: org.apache.spark.scheduler.SparkListenerExecutorRemoved): Unit =
-          lost.incrementAndGet()
       })
       val killer = new Thread(() => {
         bothBusy.await(60, java.util.concurrent.TimeUnit.SECONDS)
@@ -253,13 +236,16 @@ object FaultDemo {
           it.map(_.toLong)
         }
         .sum()
+      // bounded: a loss that is never reported fails, not hangs, the drill
+      def lost: Int = metrics.snapshot().executorsRemoved
       val deadline = System.nanoTime() + 15e9.toLong
-      while (lost.get() < 1 && System.nanoTime() < deadline)
+      while (lost < 1 && System.nanoTime() < deadline)
         Thread.sleep(100)
+      metrics.close()
       spark.stop()
-      val ok = sum == (1 to 800).map(_.toLong).sum && lost.get() >= 1
+      val ok = sum == (1 to 800).map(_.toLong).sum && lost >= 1
       println(s"WORKERLOSS result=${if (ok) "OK" else "BAD"} sum=$sum " +
-        s"executorsLost=${lost.get()}")
+        s"executorsLost=$lost")
       if (ok) 0 else 1
     }
   }
@@ -279,11 +265,6 @@ object FaultDemo {
     import org.apache.spark.sql.functions.{col, udf}
     val spark = graft.Session.build("local[4,2]", 4, "graft-fault-sinkretry")
     spark.sparkContext.setLogLevel("ERROR")
-    val failedAttempts = new AtomicInteger(0)
-    spark.sparkContext.addSparkListener(new SparkListener {
-      override def onTaskEnd(e: SparkListenerTaskEnd): Unit =
-        if (e.taskInfo.failed) failedAttempts.incrementAndGet()
-    })
     val root = java.nio.file.Files
       .createTempDirectory("graft-sinkretry").toString
     val in = java.nio.file.Files
@@ -299,28 +280,27 @@ object FaultDemo {
         throw new RuntimeException("planted sink-task failure (attempt 0)")
       id
     })
-    val q = spark.readStream.text(in)
-      .selectExpr("CAST(value AS BIGINT) AS id")
-      .repartition(4)
-      .select(planted(col("id")).as("id"))
-      .writeStream.format("graft-dsv")
-      .option("path", dir)
-      .option("checkpointLocation", s"$root/ckpt")
-      .outputMode("append")
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.processAllAvailable(); q.stop()
-    val deadline = System.nanoTime() + 10e9.toLong
-    while (failedAttempts.get() < 1 && System.nanoTime() < deadline)
-      Thread.sleep(50)
+    val (_, m) = Metrics.during(spark) {
+      val q = spark.readStream.text(in)
+        .selectExpr("CAST(value AS BIGINT) AS id")
+        .repartition(4)
+        .select(planted(col("id")).as("id"))
+        .writeStream.format("graft-dsv")
+        .option("path", dir)
+        .option("checkpointLocation", s"$root/ckpt")
+        .outputMode("append")
+        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+        .start()
+      q.processAllAvailable(); q.stop()
+    }
     val back = spark.read.format("graft-dsv").option("path", dir).load()
       .collect().map(_.getLong(0)).sorted.toSeq
     val files = new java.io.File(dir).listFiles().map(_.getName).toSeq
     spark.stop()
-    val ok = back == (1L to 20L) && failedAttempts.get() >= 1 &&
+    val ok = back == (1L to 20L) && m.failedTasks >= 1 &&
       !files.contains("_tmp")
     println(s"SINKRETRY result=${if (ok) "OK" else "BAD"} " +
-      s"rows=${back.size} failedAttempts=${failedAttempts.get()} " +
+      s"rows=${back.size} failedAttempts=${m.failedTasks} " +
       s"tmpResidue=${files.contains("_tmp")}")
     if (ok) 0 else 1
   }

@@ -3,7 +3,7 @@ package graft.tools
 import java.nio.file.{Files, Paths}
 import java.security.MessageDigest
 
-import graft.{Session, SparkEntry}
+import graft.{Json, Metrics, Session, SparkEntry}
 
 /** Constrained-memory spill gate (the reference enforces its
   * O(1)-memory claim by test — `tests/test_worker_11.py:149` caps the
@@ -68,57 +68,44 @@ object MemoryPressureDrill {
     // so a retry-heavy pass is visible, not laundered.
     val spark = Session.build(s"local[$cpus,4]", cpus.toInt, "graft-mem")
     spark.sparkContext.setLogLevel("WARN")
-    val spill = new java.util.concurrent.atomic.AtomicLong
-    val failed = new java.util.concurrent.atomic.AtomicLong
-    spark.sparkContext.addSparkListener(
-      new org.apache.spark.scheduler.SparkListener {
-        override def onTaskEnd(
-            t: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit = {
-          if (t.taskInfo != null && t.taskInfo.failed)
-            failed.incrementAndGet()
-          val m = t.taskMetrics
-          if (m != null)
-            spill.addAndGet(m.memoryBytesSpilled + m.diskBytesSpilled)
-          ()
-        }
-      })
-    // artifact-chain builds run INSIDE the drill: with a fresh
-    // SPARK_GRAFT_ARTIFACT_DIR these are the cold multi-job builds —
-    // the heaviest memory consumers the engine has
     def timed(f: => Unit): Double = {
       val t0 = System.nanoTime(); f; (System.nanoTime() - t0) / 1e9
     }
-    val tChains = timed {
+    // artifact-chain builds run INSIDE the drill: with a fresh
+    // SPARK_GRAFT_ARTIFACT_DIR these are the cold multi-job builds —
+    // the heaviest memory consumers the engine has
+    val (tChains, chains) = Metrics.during(spark)(timed {
       graft.operators.Dedup.warmArtifacts(spark, sfDir)
       graft.operators.Similarity.warmArtifacts(spark, sfDir)
       graft.operators.Relational.copurchaseEdges(spark, sfDir)
       ()
-    }
+    })
     val results = panel.map { name =>
-      val s0 = spill.get()
-      val t0 = System.nanoTime()
-      val rows = SparkEntry.queries(name)(spark, sfDir).collect()
-        .map(_.toString).sorted
-      val wall = (System.nanoTime() - t0) / 1e9
-      spark.catalog.clearCache()
-      spark.sparkContext.getPersistentRDDs.values
-        .foreach(_.unpersist(blocking = false))
+      val ((rows, wall), m) = Metrics.during(spark) {
+        val t0 = System.nanoTime()
+        val rows = SparkEntry.queries(name)(spark, sfDir).collect()
+          .map(_.toString).sorted
+        val wall = (System.nanoTime() - t0) / 1e9
+        Session.release(spark)
+        (rows, wall)
+      }
       val md = MessageDigest.getInstance("SHA-256")
       rows.foreach(r => md.update((r + "\n").getBytes("UTF-8")))
       val hash = md.digest().take(8).map(b => f"$b%02x").mkString
-      (name, rows.length, hash, wall, spill.get() - s0)
+      (name, rows.length, hash, wall, m)
     }
-    def jstr(s: String) = "\"" + s + "\""
-    val perQ = results.map { case (n, rc, h, w, sp) =>
-      s"${jstr(n)}:{" + s""""rows":$rc,"hash":${jstr(h)},""" +
-        f""""wall_sec":$w%.3f,"spill_bytes":$sp}"""
+    val perQ = results.map { case (n, rc, h, w, m) =>
+      s"${Json.str(n)}:{" + s""""rows":$rc,"hash":${Json.str(h)},""" +
+        f""""wall_sec":$w%.3f,"spill_bytes":${m.spillBytes}}"""
     }.mkString("{", ",", "}")
+    // totals include the chain builds
+    val all = chains +: results.map(_._5)
     val json =
-      s"""{"metric":"mem_drill","sf":${jstr(sfDir)},""" +
+      s"""{"metric":"mem_drill","sf":${Json.str(sfDir)},""" +
       s""""xmx_mb":${Runtime.getRuntime.maxMemory / (1 << 20)},""" +
       f""""chain_build_sec":$tChains%.3f,""" +
-      s""""tasks_failed":${failed.get()},""" +
-      s""""spill_bytes":${spill.get()},"queries":$perQ}"""
+      s""""tasks_failed":${all.map(_.failedTasks).sum},""" +
+      s""""spill_bytes":${all.map(_.spillBytes).sum},"queries":$perQ}"""
     val outPath =
       sys.env.getOrElse("SPARK_GRAFT_MEM_OUT", "MEMDRILL_OUT.json")
     Files.writeString(Paths.get(outPath), json + "\n")

@@ -75,7 +75,7 @@ object SkewAb {
     spark.conf.set("spark.sql.adaptive.skewJoin.enabled", "true")
     require(rS == rP && rP == rN, "variants disagree on q45's answer")
     def med(s: Seq[Double]) = s(s.size / 2)
-    println(f"""{"metric":"skew_ab","sf":"$sfDir","reps":$reps,""" +
+    println(f"""{"metric":"skew_ab","sf":${graft.Json.str(sfDir)},"reps":$reps,""" +
       f""""salted_med_sec":${med(wS)}%.3f,"plain_med_sec":${med(wP)}%.3f,""" +
       f""""plain_noaqeskew_med_sec":${med(wN)}%.3f,""" +
       f""""aqe_skew_fired":${pP.contains("skew=true")},""" +

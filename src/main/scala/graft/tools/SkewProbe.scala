@@ -1,11 +1,10 @@
 package graft.tools
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.Session
+import graft.{Metrics, Session}
 import graft.operators.Dedup
 
 /** Hot-fingerprint straggler probe for the exact-substring sharing
@@ -51,33 +50,12 @@ import graft.operators.Dedup
   */
 object SkewProbe {
 
-  /** Per-stage task-duration collector. */
-  private final class TaskTimes extends SparkListener {
-    val byStage = new scala.collection.concurrent.TrieMap[Int, List[Long]]()
-    override def onTaskEnd(t: SparkListenerTaskEnd): Unit = {
-      val d = if (t.taskInfo != null) t.taskInfo.duration else 0L
-      byStage.updateWith(t.stageId) {
-        case Some(l) => Some(d :: l)
-        case None => Some(List(d))
-      }
-    }
-    def reset(): Unit = byStage.clear()
-    /** (maxTaskMs, medianTaskMs, nTasks) of the stage with the slowest
-      * task — the straggler's home stage. */
-    def worst: (Long, Long, Int) = {
-      val stages = byStage.values.filter(_.size >= 2).toSeq
-      if (stages.isEmpty) (0L, 0L, 0)
-      else {
-        val s = stages.maxBy(_.max).sorted
-        (s.max, s(s.size / 2), s.size)
-      }
-    }
-    /** every stage as (stageId, maxMs, medMs, nTasks), slowest first. */
-    def all: Seq[(Int, Long, Long, Int)] = byStage.toSeq.map {
-      case (id, l) => val s = l.sorted
-        (id, s.max, s(s.size / 2), s.size)
-    }.sortBy(-_._2)
-  }
+  /** (maxTaskMs, medianTaskMs, nTasks) of the stage with the slowest
+    * task among stages of at least 2 tasks — the straggler's home stage. */
+  private def worst(m: Metrics.Snapshot): (Long, Long, Int) =
+    m.stages.filter(_.taskMs.size >= 2).maxByOption(_.maxTaskMs)
+      .map(s => (s.maxTaskMs, s.medTaskMs, s.taskMs.size))
+      .getOrElse((0L, 0L, 0))
 
   /** Whether the first CLI argument names a corpus directory rather
     * than a planted-corpus document count: anything not all digits. */
@@ -169,41 +147,37 @@ object SkewProbe {
       grams.join(Dedup.sharedFps(grams), Seq("fp"), "left_semi")
         .select(col("doc_id"), col("s"))
 
-    val listener = new TaskTimes
-    spark.sparkContext.addSparkListener(listener)
-
-    def measure(name: String,
-        df: => DataFrame): ((Long, String), (Long, Long, Int)) = {
-      listener.reset()
+    def measure(name: String, df: => DataFrame): (Long, String) = {
       spark.sparkContext.setJobDescription(s"skewprobe: $name")
-      val t0 = System.nanoTime()
-      val r = df.agg(count(lit(1)).as("n"),
-        sum(xxhash64(col("doc_id"), col("s")).cast("decimal(38,0)"))
-          .as("chk"))
-        .collect()(0)
-      val wall = (System.nanoTime() - t0) / 1000000L
-      val chk = (r.getLong(0),
-        Option(r.getDecimal(1)).map(_.toString).getOrElse("0"))
+      val ((wall, chk), m) = Metrics.during(spark) {
+        val t0 = System.nanoTime()
+        val r = df.agg(count(lit(1)).as("n"),
+          sum(xxhash64(col("doc_id"), col("s")).cast("decimal(38,0)"))
+            .as("chk"))
+          .collect()(0)
+        ((System.nanoTime() - t0) / 1000000L, (r.getLong(0),
+          Option(r.getDecimal(1)).map(_.toString).getOrElse("0")))
+      }
+      val (mx, md, nt) = worst(m)
       System.err.println(f"[skewprobe] $name%-8s wall=${wall}ms " +
         f"rows=${chk._1} chk=${chk._2} worstStage(max/med/tasks)=" +
-        f"${listener.worst}")
-      listener.all.take(4).foreach { case (id, mx, md, nt) =>
-        System.err.println(
-          s"[skewprobe]   stage $id: max=${mx}ms med=${md}ms tasks=$nt") }
+        f"${(mx, md, nt)}")
+      m.stages.filter(_.taskMs.nonEmpty).sortBy(-_.maxTaskMs).take(4)
+        .foreach(s => System.err.println(s"[skewprobe]   stage ${s.id}: " +
+          s"max=${s.maxTaskMs}ms med=${s.medTaskMs}ms tasks=${s.taskMs.size}"))
       println(s"""{"shape":"$name","wall_ms":$wall,"rows":${chk._1},""" +
-        s""""chk":${chk._2},"max_task_ms":${listener.worst._1},""" +
-        s""""med_task_ms":${listener.worst._2},""" +
-        s""""n_tasks":${listener.worst._3}}""")
-      (chk, listener.worst)
+        s""""chk":${chk._2},"max_task_ms":$mx,"med_task_ms":$md,""" +
+        s""""n_tasks":$nt}""")
+      chk
     }
 
     // window first so its straggler cannot be blamed on cold JIT alone;
     // one untimed warm pass touches both shapes' codegen first
     measure("warmup", aggShape.limit(1).unionByName(
       windowShape.limit(1)).unionByName(splittableShape.limit(1)))
-    val (chkW, _) = measure("window", windowShape)
-    val (chkA, _) = measure("agg-reusedpart", aggShape)
-    val (chkS, _) = measure("shipped", splittableShape)
+    val chkW = measure("window", windowShape)
+    val chkA = measure("agg-reusedpart", aggShape)
+    val chkS = measure("shipped", splittableShape)
     // full (rowCount, checksum) pairs must agree — a checksum-only
     // comparison would let a dropped-row/duplicated-row pair cancel
     require(chkW == chkA && chkA == chkS,

@@ -1,18 +1,19 @@
 package graft.tools
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart,
-  SparkListenerStageCompleted, SparkListenerTaskEnd}
+import org.apache.spark.sql.SparkSession
 
-import graft.Session
+import graft.{Metrics, Session}
 
-/** Per-stage wall/task attribution for declared queries (guide §1/§7.1
-  * with no UI available): runs named `SparkEntry.queries` entries on a
-  * data directory and prints, per stage, the stage wall (submission →
-  * completion), task-time max/median (the skew signal: max ≫ med = hot
-  * key; max ≈ med on few tasks = under-partitioned), task count, and
-  * shuffle/input bytes — plus the job count and the sum of stage walls
-  * vs the query wall (a large gap = driver-side planning/collect time
-  * between jobs; stage walls ≫ task time = scheduling floor).
+/** The per-query layer tool (guide §1/§7.1 with no UI available): runs
+  * named `SparkEntry.queries` entries on a data directory and prints,
+  * per rep, the [[graft.Metrics]] record — jobs, SQL executions, the sum
+  * of stage walls vs the query wall (a large gap = driver-side
+  * planning/collect time between jobs; stage walls ≫ task time =
+  * scheduling floor), task time, GC, spill and the Catalyst phases —
+  * then per stage the stage wall (submission → completion), task-time
+  * max/median (the skew signal: max ≫ med = hot key; max ≈ med on few
+  * tasks = under-partitioned), task count, GC, spill and shuffle/input
+  * bytes.
   *
   * The timed action is the same `.count()` the bench uses, so the
   * walls here attribute the bench's numbers, not a different query.
@@ -23,86 +24,58 @@ import graft.Session
   */
 object StageProbe {
 
-  private final class StageStats extends SparkListener {
-    final case class S(name: String, wallMs: Long, tasks: List[Long],
-      shufRead: Long, shufWrite: Long, input: Long)
-    val stages = new scala.collection.concurrent.TrieMap[Int, S]()
-    val taskMs = new scala.collection.concurrent.TrieMap[Int, List[Long]]()
-    val bytes =
-      new scala.collection.concurrent.TrieMap[Int, (Long, Long, Long)]()
-    @volatile var jobs = 0
-    override def onJobStart(j: SparkListenerJobStart): Unit = jobs += 1
-    override def onTaskEnd(t: SparkListenerTaskEnd): Unit = {
-      val d = if (t.taskInfo != null) t.taskInfo.duration else 0L
-      taskMs.updateWith(t.stageId) {
-        case Some(l) => Some(d :: l); case None => Some(List(d)) }
-      val m = t.taskMetrics
-      if (m != null) bytes.updateWith(t.stageId) { prev =>
-        val (r, w, i) = prev.getOrElse((0L, 0L, 0L))
-        Some((r + m.shuffleReadMetrics.totalBytesRead,
-          w + m.shuffleWriteMetrics.bytesWritten,
-          i + m.inputMetrics.bytesRead))
+  /** The report lines for every rep after the first of each query. */
+  def report(spark: SparkSession, sfDir: String, names: Seq[String],
+      reps: Int): Seq[String] = {
+    val byName = graft.SparkEntry.queries.toMap
+    val fns = names.map(n =>
+      n -> byName.getOrElse(n, sys.error(s"unknown query: $n")))
+    val mb = 1024 * 1024
+    fns.flatMap { case (name, fn) =>
+      (1 to reps).flatMap { rep =>
+        spark.sparkContext.setJobDescription(s"stageprobe: $name rep$rep")
+        val (wall, m) = Metrics.during(spark) {
+          val t0 = System.nanoTime()
+          fn(spark, sfDir).count()
+          val wall = (System.nanoTime() - t0) / 1e6
+          Session.release(spark)
+          wall
+        }
+        if (rep == 1) Nil
+        else {
+          val taskSum = m.taskMs.sum
+          val header = f"[stageprobe] $name rep$rep wall=${wall}%.0fms " +
+            f"jobs=${m.jobs} executions=${m.executions} " +
+            f"stages=${m.stages.size} " +
+            f"stageWallSum=${m.stages.map(_.wallMs).sum}ms " +
+            f"taskMsSum=${taskSum}ms gc=${m.gcMs}ms " +
+            f"spill=${m.spillBytes / mb}MB catalyst(ana/opt/plan)=" +
+            f"${m.analysisMs}/${m.optimizationMs}/${m.planningMs}ms " +
+            f"(avg parallelism ${taskSum.toDouble / wall.max(1)}%.1f)"
+          header +: m.stages.map { s =>
+            f"[stageprobe]   stage ${s.id}%-4d wall=${s.wallMs}%6dms " +
+              f"tasks=${s.taskMs.size}%4d " +
+              f"max/med=${s.maxTaskMs}%6d/${s.medTaskMs}%6dms " +
+              f"run=${s.runMs}%6dms gc=${s.gcMs}%5dms " +
+              f"spill=${s.spillBytes / mb}%5dMB " +
+              f"sr=${s.shuffleReadBytes / mb}%5dMB " +
+              f"sw=${s.shuffleWriteBytes / mb}%5dMB " +
+              f"in=${s.inputBytes / mb}%5dMB  ${s.name.take(60)}"
+          }
+        }
       }
     }
-    override def onStageCompleted(
-        e: SparkListenerStageCompleted): Unit = {
-      val si = e.stageInfo
-      val wall = (for { s <- si.submissionTime; c <- si.completionTime }
-        yield c - s).getOrElse(0L)
-      val (r, w, i) = bytes.getOrElse(si.stageId, (0L, 0L, 0L))
-      stages.put(si.stageId, S(si.name.takeWhile(_ != '\n'), wall,
-        taskMs.getOrElse(si.stageId, Nil), r, w, i))
-    }
-    def reset(): Unit = { stages.clear(); taskMs.clear(); bytes.clear()
-      jobs = 0 }
   }
 
   def main(args: Array[String]): Unit = {
     require(args.length >= 2,
       "usage: StageProbe <sfDir> <q1>[,<q2>...] [reps]")
-    val sfDir = args(0)
-    val names = args(1).split(",").map(_.trim).filter(_.nonEmpty)
+    val names = args(1).split(",").map(_.trim).filter(_.nonEmpty).toSeq
     val reps = if (args.length > 2) args(2).toInt else 2
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
     val spark = Session.build(s"local[$cpus]", cpus, "graft-stageprobe")
     spark.sparkContext.setLogLevel("WARN")
-    val byName = graft.SparkEntry.queries.toMap
-    val listener = new StageStats
-    spark.sparkContext.addSparkListener(listener)
-
-    names.foreach { name =>
-      val fn = byName.getOrElse(name, sys.error(s"unknown query: $name"))
-      (1 to reps).foreach { rep =>
-        listener.reset()
-        spark.sparkContext.setJobDescription(s"stageprobe: $name rep$rep")
-        val t0 = System.nanoTime()
-        fn(spark, sfDir).count()
-        val wall = (System.nanoTime() - t0) / 1e3 / 1e3
-        spark.catalog.clearCache()
-        spark.sparkContext.getPersistentRDDs.values
-          .foreach(_.unpersist(blocking = false))
-        if (rep > 1) {
-          val ss = listener.stages.toSeq.sortBy(_._1)
-          val stageWallSum = ss.map(_._2.wallMs).sum
-          val taskSum = ss.map(_._2.tasks.sum).sum
-          println(f"[stageprobe] $name rep$rep wall=${wall}%.0fms " +
-            f"jobs=${listener.jobs} stages=${ss.size} " +
-            f"stageWallSum=${stageWallSum}ms taskMsSum=${taskSum}ms " +
-            f"(avg parallelism ${taskSum.toDouble / wall.max(1)}%.1f)")
-          ss.foreach { case (id, s) =>
-            val sorted = s.tasks.sorted
-            val (mx, md) =
-              if (sorted.isEmpty) (0L, 0L)
-              else (sorted.max, sorted(sorted.size / 2))
-            println(f"[stageprobe]   stage $id%-4d wall=${s.wallMs}%6dms " +
-              f"tasks=${s.tasks.size}%4d max/med=${mx}%6d/${md}%6dms " +
-              f"sr=${s.shufRead / 1024 / 1024}%5dMB " +
-              f"sw=${s.shufWrite / 1024 / 1024}%5dMB " +
-              f"in=${s.input / 1024 / 1024}%5dMB  ${s.name.take(60)}")
-          }
-        }
-      }
-    }
+    report(spark, args(0), names, reps).foreach(println)
     spark.stop()
   }
 }

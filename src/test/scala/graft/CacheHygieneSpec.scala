@@ -55,6 +55,18 @@ class CacheHygieneSpec extends AnyFunSuite {
       s"net persisted RDDs after artifact consumers: ${persisted.size}")
   }
 
+  test("Session.release frees localCheckpoint blocks and catalog caches") {
+    reset()
+    SparkEntry.queries("q57_dup_clusters")(spark, Spec.sfDir).count()
+    // q57's converged checkpoint may be reclaimed already: hold one
+    val (_, held) = operators.Iterative.checkpointed(spark.range(3).toDF())
+    Tables.orders(spark, Spec.sfDir).cache().count()
+    assert(persisted.size >= 2 && !spark.sharedState.cacheManager.isEmpty)
+    Session.release(spark)
+    assert(persisted.isEmpty, s"persisted after release: ${persisted.size}")
+    assert(spark.sharedState.cacheManager.isEmpty && !held.getStorageLevel.isValid)
+  }
+
   test("repeated registerAll does not grow the cache (memoized view plans)") {
     reset()
     // a long-lived SQL service re-registers on session refresh. Some

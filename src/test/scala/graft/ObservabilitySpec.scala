@@ -41,26 +41,10 @@ class ObservabilitySpec extends AnyFunSuite {
     // NOT the right meter under AQE (every materialized query stage is
     // its own job, so the contraction's shuffle count dominates);
     // distinct `spark.sql.execution.id` values count actions exactly.
-    val execIds = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
-    val jobs = new java.util.concurrent.atomic.AtomicInteger
-    val l = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(
-          j: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-        jobs.incrementAndGet()
-        val id = j.properties.getProperty("spark.sql.execution.root.id",
-          j.properties.getProperty("spark.sql.execution.id"))
-        if (id != null) execIds.add(id)
-      }
-    }
-    spark.sparkContext.addSparkListener(l)
     try {
-      SparkEntry.queries("q57_dup_clusters")(spark, Spec.sfDir).count()
-      // listener events are posted asynchronously; drain the bus
-      // deterministically via the package-private waitUntilEmpty
-      // (GraftTestHooks) instead of polling the job counter with
-      // sleeps — slow delivery made the poll a flake risk.
-      org.apache.spark.GraftTestHooks
-        .waitListenerBusEmpty(spark.sparkContext, 30000)
+      val (_, m) = Metrics.during(spark) {
+        SparkEntry.queries("q57_dup_clusters")(spark, Spec.sfDir).count()
+      }
       // Measured at this fixture: 7 executions = the corpus count
       // feeding bandRows + the initial probe + one per contraction
       // round (4 here) + the final labeled count. The eager variant
@@ -68,18 +52,13 @@ class ObservabilitySpec extends AnyFunSuite {
       // total). Slack of 3 for fixture drift; a probe that stops
       // riding the checkpoint doubles the per-round term and fails
       // this bound. To RE-MEASURE after a Spark upgrade or fixture
-      // change: print execIds.size from a known-good build, confirm
+      // change: print m.executions from a known-good build, confirm
       // it equals 2 + rounds + 1 (count + per-round probe + final),
       // and reset the bound to that value + 3.
-      val n = execIds.size
-      assert(n <= 10, s"q57 ran $n SQL executions (${jobs.get()} jobs) — " +
-        "probe no longer sharing the checkpoint's materialization?")
-    } finally {
-      spark.sparkContext.removeSparkListener(l)
-      spark.catalog.clearCache()
-      spark.sparkContext.getPersistentRDDs.values
-        .foreach(_.unpersist(blocking = false))
-    }
+      assert(m.executions <= 10, s"q57 ran ${m.executions} SQL executions " +
+        s"(${m.jobs} jobs) — probe no longer sharing the checkpoint's " +
+        "materialization?")
+    } finally Session.release(spark)
   }
 
   test("q69 runs all five PageRank rounds in one lazy plan (no per-round jobs)") {
@@ -92,30 +71,14 @@ class ObservabilitySpec extends AnyFunSuite {
     // feeding bandRows (cached across the suite, so often 0) + the one
     // output action. A third execution means a round regained a
     // private materialization pass.
-    val execIds = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
-    val l = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(
-          j: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-        val id = j.properties.getProperty("spark.sql.execution.root.id",
-          j.properties.getProperty("spark.sql.execution.id"))
-        if (id != null) execIds.add(id)
-      }
-    }
-    spark.sparkContext.addSparkListener(l)
     try {
-      val out = SparkEntry.queries("q69_pagerank")(spark, Spec.sfDir)
-      assert(out.count() > 0)
-      org.apache.spark.GraftTestHooks
-        .waitListenerBusEmpty(spark.sparkContext, 30000)
-      val n = execIds.size
-      assert(n <= 2, s"q69 ran $n SQL executions — a PageRank round is " +
-        "materializing outside the single output action")
-    } finally {
-      spark.sparkContext.removeSparkListener(l)
-      spark.catalog.clearCache()
-      spark.sparkContext.getPersistentRDDs.values
-        .foreach(_.unpersist(blocking = false))
-    }
+      val (rows, m) = Metrics.during(spark) {
+        SparkEntry.queries("q69_pagerank")(spark, Spec.sfDir).count()
+      }
+      assert(rows > 0)
+      assert(m.executions <= 2, s"q69 ran ${m.executions} SQL executions " +
+        "— a PageRank round is materializing outside the single output action")
+    } finally Session.release(spark)
   }
 
   test("q91's three signals share one pass (no hidden materializations)") {
@@ -128,29 +91,13 @@ class ObservabilitySpec extends AnyFunSuite {
     // rowCount (cached across the suite, so often 0) + the one output
     // action. A third execution appearing here means some signal
     // regained a private materialization pass.
-    val execIds = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
-    val l = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(
-          j: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-        val id = j.properties.getProperty("spark.sql.execution.root.id",
-          j.properties.getProperty("spark.sql.execution.id"))
-        if (id != null) execIds.add(id)
-      }
-    }
-    spark.sparkContext.addSparkListener(l)
     try {
-      val out = SparkEntry.queries("q91_ensemble_dedup")(spark, Spec.sfDir)
-      assert(out.count() > 0)
-      org.apache.spark.GraftTestHooks
-        .waitListenerBusEmpty(spark.sparkContext, 30000)
-      val n = execIds.size
-      assert(n <= 2, s"q91 ran $n SQL executions — a signal branch is " +
-        "materializing outside the shared output action")
-    } finally {
-      spark.sparkContext.removeSparkListener(l)
-      spark.catalog.clearCache()
-      spark.sparkContext.getPersistentRDDs.values
-        .foreach(_.unpersist(blocking = false))
-    }
+      val (rows, m) = Metrics.during(spark) {
+        SparkEntry.queries("q91_ensemble_dedup")(spark, Spec.sfDir).count()
+      }
+      assert(rows > 0)
+      assert(m.executions <= 2, s"q91 ran ${m.executions} SQL executions " +
+        "— a signal branch is materializing outside the shared output action")
+    } finally Session.release(spark)
   }
 }

@@ -245,9 +245,7 @@ class PropertySpec extends AnyFunSuite {
       assert(base == seven,
         s"$name diverges at 7 shuffle partitions: " +
           base.zip(seven).find { case (a, b) => a != b })
-      spark.catalog.clearCache(); alt.catalog.clearCache()
-      spark.sparkContext.getPersistentRDDs.values
-        .foreach(_.unpersist(blocking = false))
+      Session.release(spark); alt.catalog.clearCache()
     }
   }
 }

@@ -207,22 +207,9 @@ class SqlEntrySpec extends AnyFunSuite {
     // ensure the artifact chain exists, then registration must be
     // ZERO Spark jobs (the registerAll contract, VERDICT r9 #5)
     operators.Dedup.dupClusters(spark, Spec.sfDir).count()
-    val jobs = new java.util.concurrent.atomic.AtomicInteger
-    val l = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(
-          j: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-        jobs.incrementAndGet(); ()
-      }
-    }
-    spark.sparkContext.addSparkListener(l)
-    try {
-      Graft.registerAll(spark, Spec.sfDir)
-      // listener delivery is async; a small bounded wait keeps this
-      // deterministic without touching Spark internals
-      Thread.sleep(500)
-      assert(jobs.get == 0,
-        s"registerAll ran ${jobs.get} Spark jobs; the contract is zero")
-    } finally spark.sparkContext.removeSparkListener(l)
+    val (_, m) = Metrics.during(spark)(Graft.registerAll(spark, Spec.sfDir))
+    assert(m.jobs == 0,
+      s"registerAll ran ${m.jobs} Spark jobs; the contract is zero")
     val s = spark
     // near_dup_edges: symmetric closure of the canonical pair artifact
     val edgesSql = s.sql("SELECT ea, eb FROM near_dup_edges")

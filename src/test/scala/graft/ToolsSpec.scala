@@ -27,4 +27,25 @@ class ToolsSpec extends AnyFunSuite {
     }
     assert(e.getMessage.contains("documents.parquet has no rows"), e.getMessage)
   }
+
+  test("StageProbe reports a header and one line per stage for each measured rep") {
+    val lines = tools.StageProbe.report(spark, Spec.sfDir,
+      Seq("q01_pricing_summary"), reps = 2)
+    val (stages, Seq(header)) =
+      lines.partition(_.startsWith("[stageprobe]   stage "))
+    def count(key: String): Int =
+      s" $key=(\\d+) ".r.findFirstMatchIn(header).get.group(1).toInt
+    assert(count("jobs") > 0 && count("stages") == stages.size, lines)
+    assert(stages.nonEmpty)
+    val e = intercept[RuntimeException](
+      tools.StageProbe.report(spark, Spec.sfDir, Seq("q00_nope"), reps = 1))
+    assert(e.getMessage.contains("unknown query"), e.getMessage)
+  }
+
+  test("the JSON string escaper round-trips quotes, backslashes and control characters") {
+    val s = "a\"b\\c\td\ne\u0001"
+    val back = new com.fasterxml.jackson.databind.ObjectMapper()
+      .readValue(Json.str(s), classOf[String])
+    assert(back == s)
+  }
 }
