@@ -156,8 +156,10 @@ object Relational {
     * assignment and bench attribution survive the thread hop. The wait
     * is unbounded: each branch fails loudly on its own errors, and a
     * 15-minute cap turned a legitimately long layout build at a large
-    * scale rung into a spurious TimeoutException. */
-  private def concurrently[A](fs: Seq[() => A]): Seq[A] = {
+    * scale rung into a spurious TimeoutException. An empty `fs` returns
+    * empty without building a pool. */
+  private[graft] def concurrently[A](fs: Seq[() => A]): Seq[A] = {
+    if (fs.isEmpty) return Seq.empty
     import scala.concurrent.{Await, ExecutionContext, Future, blocking}
     import scala.concurrent.duration.Duration
     val sc = org.apache.spark.sql.SparkSession.active.sparkContext

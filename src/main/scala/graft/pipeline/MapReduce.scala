@@ -5,6 +5,7 @@ import java.nio.file.{Files, Path, Paths}
 import java.security.MessageDigest
 
 import org.apache.spark.Partitioner
+import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -25,6 +26,14 @@ import org.apache.spark.sql.functions._
   * arbitrary stdin/stdout executables via `RDD.pipe` — exact parity with
   * the reference's executable contract
   * (`/root/reference/mapreduce/worker/__main__.py:167-186`, `:218-252`).
+  *
+  * Every job routes its output through exactly one `repartitionById`
+  * exchange, so the part file a record lands in is a pure function of
+  * its key (or line) and `R`: neither `EnsureRequirements` nor AQE may
+  * drop or coalesce it. A DataFrame `Reducer` is a relational transform:
+  * Spark plans its own exchange (with a map-side combine for aggregates)
+  * and it sees no particular row order. Only executable reducers
+  * (`runPipe`, `pipeReduce`) see a key-sorted stream per partition.
   */
 object MapReduce {
 
@@ -32,7 +41,8 @@ object MapReduce {
     * one line may produce 0..N records, like a streaming executable. */
   type Mapper = Dataset[String] => DataFrame
 
-  /** A reducer sees, per shuffle partition, a key-sorted KV stream. */
+  /** A reducer is a relational transform of the mapper's KV rows; Spark
+    * plans whatever exchange it needs (aggregates combine map-side). */
   type Reducer = DataFrame => DataFrame
 
   // ---------------------------------------------------------------- sources
@@ -84,7 +94,7 @@ object MapReduce {
   def pipeMap(cmd: String): Mapper = { lines =>
     val spark = lines.sparkSession
     import spark.implicits._
-    lines.rdd.pipe(Seq("/bin/sh", "-c", cmd))
+    shell(lines.rdd, cmd)
       .map { line =>
         val i = line.indexOf('\t')
         if (i < 0) (line, "") else (line.substring(0, i), line.substring(i + 1))
@@ -111,13 +121,15 @@ object MapReduce {
 
   /** Arbitrary-executable reducer (reference A9): the executable sees a
     * key-sorted stream per partition, exactly like the reference's
-    * `heapq.merge` output (`worker/__main__.py:248`). */
+    * `heapq.merge` output (`worker/__main__.py:248`). A reducer's input
+    * arrives in no particular order, so it shuffles by key and sorts
+    * each partition itself. */
   def pipeReduce(cmd: String): Reducer = { kv =>
     val spark = kv.sparkSession
     import spark.implicits._
-    kv.select(concat_ws("\t", col("key"), col("value")).as("line"))
-      .as[String]
-      .rdd.pipe(Seq("/bin/sh", "-c", cmd))
+    shell(kv.repartition(col("key")).sortWithinPartitions("key", "value")
+      .select(concat_ws("\t", col("key"), col("value")).as("line"))
+      .as[String].rdd, cmd)
       .map { line =>
         val i = line.indexOf('\t')
         if (i < 0) (line, "") else (line.substring(0, i), line.substring(i + 1))
@@ -125,19 +137,54 @@ object MapReduce {
       .toDF("key", "value")
   }
 
+  /** Stream each partition's lines through `sh -c cmd`, one subprocess
+    * per partition. The pipe is UTF-8 both ways, as the reference reads
+    * and writes its files, whatever the JVM's default charset is. */
+  private def shell(lines: RDD[String], cmd: String): RDD[String] =
+    lines.pipe(Seq("/bin/sh", "-c", cmd), encoding = "UTF-8")
+
   // ------------------------------------------------------------ partitioning
 
   /** Bit-exact reference partition routing: `int(md5(key),16) % R`
     * (`/root/reference/mapreduce/worker/__main__.py:62-65`). Only the
     * intermediate layout depends on this — final results don't — but it
-    * makes per-partition outputs byte-comparable with the reference. */
+    * makes per-partition outputs byte-comparable with the reference.
+    *
+    * The residue is taken by Horner's rule over the 16 digest bytes, and
+    * results are memoised per instance like the reference's
+    * `lru_cache(1024)`: a direct-mapped table of `Md5Partitioner.MemoSlots`
+    * immutable entries, so a colliding key simply replaces the slot and
+    * concurrent callers never see a torn entry. */
   final class Md5Partitioner(r: Int) extends Partitioner {
+    import Md5Partitioner._
+    @transient private lazy val memo = new Array[Entry](MemoSlots)
     override def numPartitions: Int = r
     override def getPartition(key: Any): Int = {
-      val d = MessageDigest.getInstance("MD5")
-        .digest(String.valueOf(key).getBytes(StandardCharsets.UTF_8))
-      (BigInt(1, d) % r).toInt
+      val k = String.valueOf(key)
+      val slot = k.hashCode & (MemoSlots - 1)
+      val e = memo(slot)
+      if (e != null && e.key == k) e.part
+      else {
+        val part = residue(k)
+        memo(slot) = new Entry(k, part)
+        part
+      }
     }
+    private def residue(k: String): Int = {
+      val d = MessageDigest.getInstance("MD5")
+        .digest(k.getBytes(StandardCharsets.UTF_8))
+      var acc = 0L
+      d.foreach(b => acc = (acc * 256 + (b & 0xff)) % r)
+      acc.toInt
+    }
+  }
+
+  object Md5Partitioner {
+    /** Memo size per instance, a power of two. A direct-mapped table
+      * loses more to collisions than an LRU of the same size, hence 4x
+      * the reference's 1024. */
+    private[graft] val MemoSlots = 4096
+    private final class Entry(val key: String, val part: Int)
   }
 
   /** Extract the partition key of a full `key\tvalue` line — the text
@@ -164,49 +211,62 @@ object MapReduce {
   }
 
   /** Run a job with DataFrame mapper/reducer: the idiomatic scale path.
-    * One shuffle (`repartition(R, key)`), per-partition key sort, reduce,
-    * `part-%05d` output files — the reference's whole lifecycle
-    * (SURVEY §3) as a single Spark action. */
+    * Map, reduce, route, per-partition sort, `part-%05d` output files —
+    * the reference's whole lifecycle (SURVEY §3) as a single Spark
+    * action. */
   def run(spark: SparkSession, input: String, output: String,
           mapper: Mapper, reducer: Reducer, numReducers: Int,
-          numMappers: Option[Int] = None): Unit = {
-    val kv = mapper(textDirM(spark, input, numMappers))
-    val shuffled = kv.repartition(numReducers, col("key"))
-      .sortWithinPartitions("key", "value")
-    val out = reducer(shuffled)
-    // Each part file must be internally key-sorted and keyed rows must be
-    // co-located by key (tests/test_worker_08.py final asserts): partition
-    // reduce output by key where one exists, by whole line otherwise.
-    val lines =
-      if (out.columns.contains("key"))
-        out.repartition(numReducers, col("key"))
-          .sortWithinPartitions("key", "value")
-          .select(concat_ws("\t", col("key"), col("value")).as("line"))
-      else
-        out.select(col("value").as("line"))
-          .repartition(numReducers, col("line"))
-          .sortWithinPartitions("line")
-    writePartFiles(lines, output, numReducers, preservePartitions = true)
+          numMappers: Option[Int] = None): Unit =
+    writePartFiles(runLines(spark, input, mapper, reducer, numReducers,
+      numMappers), output, numReducers, preservePartitions = true)
+
+  /** The plan of `run` up to its sink: one `line` column in R
+    * partitions. The reducer applies straight to the mapper output, so
+    * an aggregate combines map-side in its own exchange. Each part file
+    * must be internally key-sorted and keyed rows co-located by key
+    * (tests/test_worker_08.py final asserts), so the output is routed by
+    * key where one exists, by whole line otherwise, with the same
+    * Murmur3 bucket `repartition(R, key)` would pick. It goes through
+    * `repartitionById` because a plain `repartition` on the aggregate's
+    * own key is dropped by `EnsureRequirements` when
+    * `spark.sql.shuffle.partitions == R`, and AQE then coalesces the
+    * aggregate's exchange, down to a single part file. */
+  private[graft] def runLines(spark: SparkSession, input: String,
+                              mapper: Mapper, reducer: Reducer,
+                              numReducers: Int,
+                              numMappers: Option[Int] = None): DataFrame = {
+    val out = reducer(mapper(textDirM(spark, input, numMappers)))
+    def routed(df: DataFrame, by: String) =
+      df.repartitionById(numReducers, pmod(hash(col(by)), lit(numReducers)))
+    if (out.columns.contains("key"))
+      routed(out, "key")
+        .sortWithinPartitions("key", "value")
+        .select(concat_ws("\t", col("key"), col("value")).as("line"))
+    else
+      routed(out.select(col("value").as("line")), "line")
+        .sortWithinPartitions("line")
   }
 
   /** Executable-parity job: MD5 partition routing + whole-line byte sort
     * + subprocess reducer over the sorted stream — byte-compatible with
-    * the reference pipeline end to end. */
+    * the reference pipeline end to end. Each mapper task tags its lines
+    * with their reference bucket through one memoised `Md5Partitioner`;
+    * the SQL shuffle routes on that tag and sorts each partition by
+    * UTF-8 bytes, the order of the reference's `sort` and `heapq.merge`. */
   def runPipe(spark: SparkSession, input: String, output: String,
               mapCmd: String, reduceCmd: String, numReducers: Int,
               numMappers: Option[Int] = None): Unit = {
     import spark.implicits._
-    val mapped = textDirM(spark, input, numMappers).rdd
-      .pipe(Seq("/bin/sh", "-c", mapCmd))
-    val sorted = mapped.map(line => (line, ()))
-      .repartitionAndSortWithinPartitions(new Partitioner {
-        private val md5 = new Md5Partitioner(numReducers)
-        override def numPartitions: Int = numReducers
-        override def getPartition(key: Any): Int =
-          md5.getPartition(keyOf(String.valueOf(key)))
-      })
-      .keys
-    val reduced = sorted.pipe(Seq("/bin/sh", "-c", reduceCmd)).toDS()
+    val tagged = shell(textDirM(spark, input, numMappers).rdd, mapCmd)
+      .mapPartitions { lines =>
+        val md5 = new Md5Partitioner(numReducers)
+        lines.map(line => (md5.getPartition(keyOf(line)), line))
+      }
+    val sorted = tagged.toDF("pid", "line")
+      .repartitionById(numReducers, col("pid"))
+      .sortWithinPartitions("line")
+      .select(col("line")).as[String]
+    val reduced = shell(sorted.rdd, reduceCmd).toDS()
     writePartFiles(reduced.toDF("line"), output, numReducers,
       preservePartitions = true)
   }

@@ -55,6 +55,14 @@ class ConcurrencySpec extends AnyFunSuite {
     SparkEntry.queries(name)(spark, dir).collect()
       .map(_.toString).sorted.toSeq
 
+  test("Relational.concurrently returns empty for no branches, in order otherwise") {
+    // an empty Seq once reached newFixedThreadPool(0), which throws
+    assert(graft.operators.Relational.concurrently(Seq.empty[() => Int]).isEmpty)
+    spark // branches run on the active session's SparkContext
+    assert(graft.operators.Relational.concurrently(
+      Seq(() => 1, () => 2, () => 3, () => 4)) == Seq(1, 2, 3, 4))
+  }
+
   test("mixed query panel under 4- and 8-way concurrency matches sequential") {
     val t0 = System.nanoTime()
     val baseline = panel.map(q => q -> rows(q, d)).toMap

@@ -2,7 +2,14 @@ package graft
 
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.SparkPlan
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.aggregate.HashAggregateExec
+import org.apache.spark.sql.catalyst.expressions.aggregate.Partial
+import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
+import org.apache.spark.sql.execution.exchange.{REPARTITION_BY_NUM, ShuffleExchangeExec}
+import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.pipeline.MapReduce
@@ -99,6 +106,15 @@ class MapReduceSpec extends AnyFunSuite {
       Set("world", "hadoop", "goodbye"))
   }
 
+  test("pipeReduce under run sees a key-sorted stream per partition") {
+    val out = Files.createTempDirectory("graft-pipered").toString + "/out"
+    // uniq -c counts runs of equal keys: right only on key-sorted input
+    MapReduce.run(spark, corpus, out, MapReduce.wcMapTr,
+      MapReduce.pipeReduce("""cut -f1 | uniq -c | awk '{print $2"\t"$1}'"""),
+      numReducers = 2)
+    assert(readParts(out).flatMap(_._2).sorted == wcExpected.sorted)
+  }
+
   test("runPipe keeps the TRUE partition index when earlier partitions are empty") {
     val dir = mkCorpus(Seq(Seq("solo")))
     val out = Files.createTempDirectory("graft-solo").toString + "/out"
@@ -145,5 +161,68 @@ class MapReduceSpec extends AnyFunSuite {
     MapReduce.wordCount(spark, dir, out, numReducers = 1)
     assert(!Files.exists(Paths.get(out, "stale")))
     assert(readParts(out).flatMap(_._2) == Seq("x\t1", "y\t1"))
+  }
+
+  test("runPipe sorts each reducer stream by UTF-8 bytes, like sort(1)") {
+    // UTF-16 order puts U+1F600 (a surrogate pair, 0xD83D...) before
+    // U+FFFD; byte order (EF BF BD < F0 9F 98 80) puts U+FFFD first
+    val dir = mkCorpus(Seq(Seq("\uD83D\uDE00\t1", "\uFFFD\t1")))
+    val out = Files.createTempDirectory("graft-bytes").toString + "/out"
+    MapReduce.runPipe(spark, dir, out, mapCmd = "cat", reduceCmd = "cat",
+      numReducers = 1)
+    assert(readParts(out) ==
+      Seq("part-00000" -> Seq("\uFFFD\t1", "\uD83D\uDE00\t1")))
+  }
+
+  // 240 distinct words: enough that every one of 4 buckets gets keys
+  private lazy val manyKeys = mkCorpus((0 until 4).map(f =>
+    (0 until 60).map(i => s"w${f * 60 + i} common")))
+
+  private val aqe = new AdaptiveSparkPlanHelper {}
+  private def exchanges(df: DataFrame): Seq[ShuffleExchangeExec] = {
+    df.write.format("noop").mode("overwrite").save()
+    aqe.collect(df.queryExecution.executedPlan) { case e: ShuffleExchangeExec => e }
+  }
+
+  test("wordCount routes every key to part pmod(hash(key), R), all R parts used") {
+    // shuffle partitions == R (4) is the case where a plain repartition
+    // on the aggregate's key was dropped and AQE coalesced to one part
+    assert(spark.conf.get("spark.sql.shuffle.partitions") == "4")
+    val out = Files.createTempDirectory("graft-route").toString + "/out"
+    MapReduce.wordCount(spark, manyKeys, out, numReducers = 4)
+    val parts = readParts(out)
+    assert(parts.map(_._1) == (0 until 4).map(i => f"part-$i%05d"))
+    assert(parts.forall(_._2.nonEmpty), parts.map(_._2.size))
+    import spark.implicits._
+    val keyed = parts.zipWithIndex.flatMap { case ((_, ls), i) =>
+      ls.map(l => (l.split("\t", -1)(0), i)) }
+    assert(keyed.size == 241)
+    val wrong = keyed.toDF("key", "part")
+      .filter(pmod(hash(col("key")), lit(4)) =!= col("part")).collect()
+    assert(wrong.isEmpty, wrong.mkString(", "))
+  }
+
+  test("run plans a map-side combine and exactly one routing exchange") {
+    val ex = exchanges(MapReduce.runLines(spark, manyKeys,
+      MapReduce.wcMapTr, MapReduce.reduceSum, numReducers = 4))
+    def partialAgg(p: SparkPlan) = aqe.find(p) {
+      case a: HashAggregateExec => a.aggregateExpressions.forall(_.mode == Partial)
+      case _ => false
+    }.isDefined
+    // the first exchange (nearest the scan) ships partial aggregates
+    val first = ex.filter(e => aqe.find(e.child)(_.isInstanceOf[ShuffleExchangeExec]).isEmpty)
+    assert(first.size == 1 && partialAgg(first.head.child), ex.mkString("\n"))
+    assert(ex.count(_.shuffleOrigin == REPARTITION_BY_NUM) == 1, ex.mkString("\n"))
+  }
+
+  test("grep plans no exchange keyed on its constant key") {
+    val ex = exchanges(MapReduce.runLines(spark, manyKeys,
+      MapReduce.grepMap("common"), MapReduce.reduceValues, numReducers = 4))
+    assert(!ex.exists(_.outputPartitioning match {
+      case h: HashPartitioning => h.expressions.forall(_.foldable) ||
+        h.references.exists(_.name == "key")
+      case _ => false
+    }), ex.mkString("\n"))
+    assert(ex.map(_.shuffleOrigin) == Seq(REPARTITION_BY_NUM), ex.mkString("\n"))
   }
 }

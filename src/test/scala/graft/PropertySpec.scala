@@ -1,6 +1,9 @@
 package graft
 
-import org.scalacheck.{Gen, Prop, Test => SCTest}
+import java.nio.charset.StandardCharsets
+import java.security.MessageDigest
+
+import org.scalacheck.{Arbitrary, Gen, Prop, Test => SCTest}
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.pipeline.MapReduce
@@ -31,6 +34,31 @@ class PropertySpec extends AnyFunSuite {
     check(Prop.forAll { (key: String) =>
       new MapReduce.Md5Partitioner(1).getPartition(key) == 0
     })
+  }
+
+  /** `int(md5(key),16) % R` the long way, as the reference computes it. */
+  private def md5Mod(key: String, r: Int): Int =
+    (BigInt(1, MessageDigest.getInstance("MD5")
+      .digest(key.getBytes(StandardCharsets.UTF_8))) % r).toInt
+
+  // arbitrary Unicode: BMP strings plus supplementary code points
+  private val unicodeKey: Gen[String] = Gen.oneOf(Arbitrary.arbitrary[String],
+    Gen.listOf(Gen.choose(0, 0x10FFFF).suchThat(c => c < 0xD800 || c > 0xDFFF))
+      .map(cps => new String(cps.toArray, 0, cps.size)))
+
+  test("Md5Partitioner equals BigInt(md5(utf8(key))) % R, memo hits included") {
+    check(Prop.forAll(Gen.listOf(unicodeKey), Gen.choose(1, 64)) { (keys, r) =>
+      val p = new MapReduce.Md5Partitioner(r)
+      (keys ++ keys.reverse ++ keys).forall(k => p.getPartition(k) == md5Mod(k, r))
+    })
+  }
+
+  test("Md5Partitioner stays exact past its memo bound") {
+    check(Prop.forAll(Gen.choose(1, 64), Gen.alphaStr) { (r, prefix) =>
+      val p = new MapReduce.Md5Partitioner(r)
+      val keys = (0 until 3 * MapReduce.Md5Partitioner.MemoSlots).map(prefix + _)
+      (keys ++ keys.reverse).forall(k => p.getPartition(k) == md5Mod(k, r))
+    }, n = 5)
   }
 
   test("wcMapPy tokenization is exactly whitespace-run split, empties dropped") {
