@@ -243,6 +243,8 @@ object Graft {
     // graft_bloom_contains(bloomBytes, hash64): Spark's codegen'd
     // BloomFilterMightContain under an explicit SQL name (q129's probe)
     functions.Sketches.ensureRegistered(spark)
+    // wgram_fps(toks, W) / shingles3(toks): the dedup token-window kernels
+    functions.GramOps.ensureRegistered(spark)
     val reg = spark.sessionState.functionRegistry
     // graft_norm_fp(text): the exact-dedup normalization fingerprint —
     // md5(trim(collapse-whitespace(lower(text)))), composed from

@@ -1,0 +1,190 @@
+package graft.functions
+
+import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.catalyst.FunctionIdentifier
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
+import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo,
+  GenericInternalRow, UnaryExpression, XXH64}
+import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext,
+  ExprCode, FalseLiteral}
+import org.apache.spark.sql.catalyst.expressions.codegen.Block._
+import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
+import org.apache.spark.sql.functions.{call_function, lit}
+import org.apache.spark.sql.types.{ArrayType, DataType, IntegerType, LongType,
+  StringType, StructField, StructType}
+import org.apache.spark.unsafe.types.UTF8String
+
+/** One-pass token-window kernels for the dedup hot path.
+  *
+  * The W-gram fingerprints of the exact-substring detector and the
+  * word-trigram shingles were built as `transform(sequence(...), i ->
+  * ...)` over the token array. Higher-order functions are
+  * `CodegenFallback`: each array element runs a lambda through the
+  * interpreted expression walker, and the W-gram form also allocates a
+  * `slice` array per window. [[WGramFps]] and [[Shingles3]] loop over a
+  * row's token array once, inside whole-stage codegen, with no lambda
+  * and no per-window array, and return exactly what the HOF forms
+  * returned:
+  *
+  *  - `wgram_fps(toks, W)` = `transform(sequence(0, n − W), i -> struct(
+  *    xxhash64(1, slice(toks, i + 1, W)) AS h1, xxhash64(2, slice(...))
+  *    AS h2))`: each hash chains seed 42, the int tag, then every
+  *    non-null token of the window, as `xxhash64` does;
+  *  - `shingles3(toks)` = `array_distinct(transform(sequence(0, n − 3),
+  *    i -> concat_ws(' ', toks[i], toks[i + 1], toks[i + 2])))`: nulls
+  *    skipped as `concat_ws` skips them, first occurrences kept in
+  *    order as `array_distinct` keeps them.
+  *
+  * A row with fewer than W (3) tokens, or a null array, yields an empty
+  * array. Registered like [[VecOps]]: through [[graft.GraftExtensions]]
+  * and idempotently per session via [[GramOps.ensureRegistered]].
+  */
+object GramOps {
+
+  private val FpType = StructType(Seq(
+    StructField("h1", LongType, nullable = false),
+    StructField("h2", LongType, nullable = false)))
+
+  private val Empty: ArrayData = new GenericArrayData(Array.empty[Any])
+  private val Space = UTF8String.fromString(" ")
+  // xxhash64(lit(tag), ...) hashes its int tag first, from seed 42
+  private val Seed1 = XXH64.hashInt(1, 42L)
+  private val Seed2 = XXH64.hashInt(2, 42L)
+
+  /** The `wgram_fps` kernel; called from generated code. */
+  def wgramKernel(toks: ArrayData, w: Int): ArrayData = {
+    val n = if (toks == null) 0 else toks.numElements()
+    if (n < w) return Empty
+    val out = new Array[Any](n - w + 1)
+    var s = 0
+    while (s < out.length) {
+      var h1 = Seed1
+      var h2 = Seed2
+      var i = s
+      while (i < s + w) {
+        if (!toks.isNullAt(i)) {
+          val t = toks.getUTF8String(i)
+          h1 = XXH64.hashUnsafeBytes(t.getBaseObject, t.getBaseOffset,
+            t.numBytes, h1)
+          h2 = XXH64.hashUnsafeBytes(t.getBaseObject, t.getBaseOffset,
+            t.numBytes, h2)
+        }
+        i += 1
+      }
+      out(s) = new GenericInternalRow(Array[Any](h1, h2))
+      s += 1
+    }
+    new GenericArrayData(out)
+  }
+
+  /** The `shingles3` kernel; called from generated code. */
+  def shinglesKernel(toks: ArrayData): ArrayData = {
+    val n = if (toks == null) 0 else toks.numElements()
+    if (n < 3) return Empty
+    def tok(i: Int) = if (toks.isNullAt(i)) null else toks.getUTF8String(i)
+    val seen = new java.util.HashSet[UTF8String]()
+    val out = new java.util.ArrayList[UTF8String]()
+    var i = 0
+    while (i <= n - 3) {
+      val sh = UTF8String.concatWs(Space, tok(i), tok(i + 1), tok(i + 2))
+      if (seen.add(sh)) out.add(sh)
+      i += 1
+    }
+    new GenericArrayData(out.toArray)
+  }
+
+  /** A non-null `array` of one kernel over an `array<string>` child:
+    * a null child array is an empty result, not a null one. */
+  sealed trait TokenKernel extends UnaryExpression {
+    /** The static kernel call on `toks` (an ArrayData, maybe null). */
+    protected def call(toks: String): String
+    protected def kernel(toks: ArrayData): ArrayData
+
+    override def nullable: Boolean = false
+
+    override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
+      case ArrayType(StringType, _) => TypeCheckResult.TypeCheckSuccess
+      case t => TypeCheckResult.TypeCheckFailure(
+        s"$prettyName needs an array<string> argument, got ${t.catalogString}")
+    }
+
+    override def eval(input: InternalRow): Any =
+      kernel(child.eval(input).asInstanceOf[ArrayData])
+
+    override protected def doGenCode(ctx: CodegenContext,
+                                     ev: ExprCode): ExprCode = {
+      val t = child.genCode(ctx)
+      ev.copy(code = code"""
+        |${t.code}
+        |ArrayData ${ev.value} = ${call(s"${t.isNull} ? null : ${t.value}")};
+        """.stripMargin, isNull = FalseLiteral)
+    }
+  }
+
+  /** `wgram_fps(toks, W)`: the two seeded fingerprints of every
+    * stride-1 W-token window, in start order. */
+  case class WGramFps(child: Expression, width: Int) extends TokenKernel {
+    override def dataType: DataType = ArrayType(FpType, containsNull = false)
+    override def prettyName: String = "wgram_fps"
+    override protected def kernel(toks: ArrayData): ArrayData =
+      wgramKernel(toks, width)
+    override protected def call(toks: String): String =
+      s"graft.functions.GramOps.wgramKernel($toks, $width)"
+    override protected def withNewChildInternal(c: Expression): WGramFps =
+      copy(child = c)
+  }
+
+  /** `shingles3(toks)`: the distinct word trigrams, first occurrences
+    * in order. */
+  case class Shingles3(child: Expression) extends TokenKernel {
+    override def dataType: DataType = ArrayType(StringType, containsNull = false)
+    override def prettyName: String = "shingles3"
+    override protected def kernel(toks: ArrayData): ArrayData =
+      shinglesKernel(toks)
+    override protected def call(toks: String): String =
+      s"graft.functions.GramOps.shinglesKernel($toks)"
+    override protected def withNewChildInternal(c: Expression): Shingles3 =
+      copy(child = c)
+  }
+
+  private def wgramBuilder(args: Seq[Expression]): Expression = {
+    require(args.length == 2, s"wgram_fps takes 2 arguments, got ${args.length}")
+    val w = args(1)
+    require(w.foldable && w.dataType == IntegerType,
+      "wgram_fps needs a literal int width")
+    val width = w.eval().asInstanceOf[Int]
+    require(width >= 1, s"wgram_fps needs a width >= 1, got $width")
+    WGramFps(args(0), width)
+  }
+
+  private def shinglesBuilder(args: Seq[Expression]): Expression = {
+    require(args.length == 1, s"shingles3 takes 1 argument, got ${args.length}")
+    Shingles3(args(0))
+  }
+
+  private val builders: Seq[(String, Class[_], Seq[Expression] => Expression)] =
+    Seq(("wgram_fps", classOf[WGramFps], wgramBuilder _),
+      ("shingles3", classOf[Shingles3], shinglesBuilder _))
+
+  /** Descriptors for `SparkSessionExtensions.injectFunction`. */
+  val descriptors: Seq[(FunctionIdentifier, ExpressionInfo,
+      Seq[Expression] => Expression)] = builders.map { case (n, c, b) =>
+    (FunctionIdentifier(n), new ExpressionInfo(c.getCanonicalName, n), b)
+  }
+
+  /** Register on a caller-built session that didn't go through
+    * [[graft.Session.build]]'s extensions. Idempotent. */
+  def ensureRegistered(s: SparkSession): Unit = {
+    val reg = s.sessionState.functionRegistry
+    builders.foreach { case (n, _, b) =>
+      if (!reg.functionExists(FunctionIdentifier(n)))
+        reg.createOrReplaceTempFunction(n, b, "built-in")
+    }
+  }
+
+  /** Column-level entry points (resolve through the registry). */
+  def wgramFps(toks: Column, w: Int): Column =
+    call_function("wgram_fps", toks, lit(w))
+  def shingles3(toks: Column): Column = call_function("shingles3", toks)
+}

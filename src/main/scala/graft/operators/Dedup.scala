@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.{Q, Tables}
+import graft.functions.GramOps
 
 /** Deduplication suite over `documents` — exact, MinHash+LSH, SimHash,
   * and n-gram Jaccard. The reference has no dedup operators (SURVEY
@@ -40,28 +41,18 @@ object Dedup {
   private[graft] val normFp: Column =
     md5(trim(regexp_replace(lower(col("text")), "\\s+", " ")).cast("binary"))
 
-  /** Word-trigram shingles, 0-based `get` indexing; docs with <3 tokens
-    * produce none (guard needed: Spark `sequence(1, n)` with n<1 would
-    * produce a DESCENDING sequence, not an empty one).
-    *
-    * The token array is materialized as its own projection FIRST: a
-    * `split(...)` referenced inside a lambda is re-evaluated per array
-    * element (no common-subexpression elimination across higher-order
-    * function boundaries), which would make shingling O(tokens²) per
-    * document. */
+  /** Word-trigram shingles `(doc_id, shingle)`, distinct per document:
+    * the [[GramOps]] `shingles3` kernel walks each
+    * token array once and keeps each trigram's first occurrence, then
+    * explode. Docs with < 3 tokens produce none. The per-doc dedup
+    * happens in the ARRAY before the explode — the distinct set is
+    * identical to a global DISTINCT (doc_id, shingle) but costs zero
+    * shuffle: dedup is within-row, so no row ever needs to meet
+    * another. */
   private[operators] def shingles(s: SparkSession, d: String): DataFrame = {
-    val t = col("toks")
-    val n = size(t)
-    val idx = when(n >= 3, sequence(lit(0), n - 3))
-      .otherwise(array().cast("array<int>"))
-    // per-doc dedup happens in the ARRAY (array_distinct) before the
-    // explode — the distinct set is identical to a global
-    // DISTINCT (doc_id, shingle) but costs zero shuffle: dedup is
-    // within-row, so no row ever needs to meet another.
-    exsubDocs(s, d)
-      .select(col("doc_id"), explode(array_distinct(transform(idx, i =>
-        concat_ws(" ", get(t, i), get(t, i + 1), get(t, i + 2)))))
-        .as("shingle"))
+    GramOps.ensureRegistered(s)
+    exsubDocs(s, d).select(col("doc_id"),
+      explode(GramOps.shingles3(col("toks"))).as("shingle"))
   }
 
   // ----- the exact-substring detector (q198/q199/q200) --------------------
@@ -87,25 +78,17 @@ object Dedup {
 
   /** Every stride-1 [[EXSUB_W]]-token window of a `(doc_id, toks)`
     * frame as `(doc_id, n_tokens, s, fp)`: `s` is the 0-based start and
-    * `fp` a 16-byte `struct(h1, h2)` of two seeded xxhash64s over ONE
-    * shared token slice. Built in-row — the token array must already be
-    * its own column (a `split()` referenced inside a lambda re-evaluates
-    * per element, the [[shingles]] rule) — then posexplode: pos IS the
-    * start. Docs shorter than W produce no grams (`sequence(0, n − W)`
-    * would otherwise DESCEND). */
+    * `fp` a 16-byte `struct(h1, h2)` of two seeded xxhash64s over the
+    * window's tokens, bit-identical to `xxhash64(lit(1|2), slice)`.
+    * The [[GramOps]] `wgram_fps` kernel hashes each
+    * doc's windows in one pass over its token array, then posexplode:
+    * pos IS the start. Docs shorter than W produce no grams. */
   private[graft] def exsubGrams(docs: DataFrame): DataFrame = {
-    val w = EXSUB_W
+    GramOps.ensureRegistered(docs.sparkSession)
     val t = col("toks")
-    val n = size(t)
-    val idx = when(n >= w, sequence(lit(0), n - w))
-      .otherwise(array().cast("array<int>"))
     docs
-      .select(col("doc_id"), n.cast("long").as("n_tokens"),
-        posexplode(transform(
-          transform(idx, i => slice(t, i + lit(1), lit(w))),
-          sl => struct(
-            xxhash64(lit(1), sl).as("h1"),
-            xxhash64(lit(2), sl).as("h2")))))
+      .select(col("doc_id"), size(t).cast("long").as("n_tokens"),
+        posexplode(GramOps.wgramFps(t, EXSUB_W)))
       .select(col("doc_id"), col("n_tokens"),
         col("pos").as("s"), col("col").as("fp"))
   }

@@ -157,15 +157,24 @@ object Relational {
     * is unbounded: each branch fails loudly on its own errors, and a
     * 15-minute cap turned a legitimately long layout build at a large
     * scale rung into a spurious TimeoutException. An empty `fs` returns
-    * empty without building a pool. */
+    * empty without building a pool.
+    *
+    * Each call tags its branches' jobs with one fresh job tag (a tag,
+    * not a job group, so the caller's inherited group is untouched).
+    * When a branch fails, the caller cancels every job under that tag
+    * before it rethrows, so sibling jobs do not run on after the call
+    * has failed; a sibling between two jobs at that moment has its next
+    * jobs cancelled as they start, until every branch has settled. */
   private[graft] def concurrently[A](fs: Seq[() => A]): Seq[A] = {
     if (fs.isEmpty) return Seq.empty
     import scala.concurrent.{Await, ExecutionContext, Future, blocking}
     import scala.concurrent.duration.Duration
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
     val sc = org.apache.spark.sql.SparkSession.active.sparkContext
     val inherit = Seq("spark.scheduler.pool", "spark.job.description",
       "spark.jobGroup.id", "spark.job.interruptOnCancel")
       .map(k => k -> sc.getLocalProperty(k))
+    val tag = s"graft-branches-${java.util.UUID.randomUUID()}"
     val pool = java.util.concurrent.Executors.newFixedThreadPool(
       fs.size.min(3),
       (r: Runnable) => {
@@ -173,12 +182,28 @@ object Relational {
       })
     implicit val ec: ExecutionContext =
       ExecutionContext.fromExecutorService(pool)
-    try {
-      val work = Future.sequence(fs.map(f => Future {
-        inherit.foreach { case (k, v) => sc.setLocalProperty(k, v) }
-        f()
-      }).toList)
-      blocking { Await.result(work, Duration.Inf) }.toSeq
+    val branches = fs.map(f => Future {
+      inherit.foreach { case (k, v) => sc.setLocalProperty(k, v) }
+      sc.addJobTag(tag)
+      f()
+    }).toList
+    try blocking { Await.result(Future.sequence(branches), Duration.Inf) }.toSeq
+    catch {
+      case e: Throwable =>
+        val reason = "a sibling branch failed"
+        val late = new SparkListener {
+          override def onJobStart(j: SparkListenerJobStart): Unit =
+            if (Option(j.properties).flatMap(p => Option(
+                p.getProperty("spark.job.tags"))).exists(_.split(",").contains(tag)))
+              sc.cancelJob(j.jobId, reason)
+        }
+        sc.addSparkListener(late)
+        sc.cancelJobsWithTag(tag, reason)
+        val running = new java.util.concurrent.atomic.AtomicInteger(branches.size)
+        branches.foreach(_.onComplete { _ =>
+          if (running.decrementAndGet() == 0) sc.removeSparkListener(late)
+        }(ExecutionContext.parasitic))
+        throw e
     } finally pool.shutdown()
   }
 

@@ -1689,7 +1689,8 @@ object TextOps {
     }) { (s, d) =>
       val (k, div) = (4, 17)
       // 12-bit md5-prefix token hashes, materialized as a column FIRST
-      // (the Dedup.shingles lambda-CSE rule)
+      // (a split() inside a lambda would re-evaluate per element: no
+      // CSE across higher-order functions)
       val th = transform(col("toks"),
         t => conv(substring(md5(t.cast("binary")), 1, 3), 16, 10)
           .cast("long"))

@@ -122,14 +122,18 @@ object MapReduce {
   /** Arbitrary-executable reducer (reference A9): the executable sees a
     * key-sorted stream per partition, exactly like the reference's
     * `heapq.merge` output (`worker/__main__.py:248`). A reducer's input
-    * arrives in no particular order, so it shuffles by key and sorts
-    * each partition itself. */
+    * arrives in no particular order, so it goes through [[pipeRuns]]
+    * into `spark.sql.shuffle.partitions` partitions, and one `sh`
+    * subprocess runs per partition, empty ones included. The stream is
+    * sorted by whole `key\tvalue` line, which keeps each key's lines
+    * contiguous: every line of key k starts with `k\t`, so any other
+    * line sorts before or after all of them. */
   def pipeReduce(cmd: String): Reducer = { kv =>
     val spark = kv.sparkSession
     import spark.implicits._
-    shell(kv.repartition(col("key")).sortWithinPartitions("key", "value")
-      .select(concat_ws("\t", col("key"), col("value")).as("line"))
-      .as[String].rdd, cmd)
+    val lines = kv.select(concat_ws("\t", col("key"), col("value"))).as[String]
+    reduceRuns(pipeRuns(spark, lines.rdd,
+      spark.sessionState.conf.numShufflePartitions), cmd)
       .map { line =>
         val i = line.indexOf('\t')
         if (i < 0) (line, "") else (line.substring(0, i), line.substring(i + 1))
@@ -205,10 +209,19 @@ object MapReduce {
                numMappers: Option[Int]): Dataset[String] = {
     import spark.implicits._
     numMappers match {
-      case Some(m) => spark.createDataset(spark.sparkContext.textFile(dir, m))
+      case Some(_) => spark.createDataset(textRddM(spark, dir, numMappers))
       case None => textDir(spark, dir)
     }
   }
+
+  /** [[textDirM]] as the RDD an executable mapper pipes: with a mapper
+    * count it is `sc.textFile` itself, with no Dataset round trip. */
+  private def textRddM(spark: SparkSession, dir: String,
+                       numMappers: Option[Int]): RDD[String] =
+    numMappers match {
+      case Some(m) => spark.sparkContext.textFile(dir, m)
+      case None => textDir(spark, dir).rdd
+    }
 
   /** Run a job with DataFrame mapper/reducer: the idiomatic scale path.
     * Map, reduce, route, per-partition sort, `part-%05d` output files —
@@ -249,26 +262,107 @@ object MapReduce {
 
   /** Executable-parity job: MD5 partition routing + whole-line byte sort
     * + subprocess reducer over the sorted stream — byte-compatible with
-    * the reference pipeline end to end. Each mapper task tags its lines
-    * with their reference bucket through one memoised `Md5Partitioner`;
-    * the SQL shuffle routes on that tag and sorts each partition by
-    * UTF-8 bytes, the order of the reference's `sort` and `heapq.merge`. */
+    * the reference pipeline end to end. The mapper output goes through
+    * [[pipeRuns]], so where a map task's lines repeat, equal lines cross
+    * the shuffle once with their count, and [[reduceRuns]] writes each
+    * line back that many times into the reducer's stdin. */
   def runPipe(spark: SparkSession, input: String, output: String,
               mapCmd: String, reduceCmd: String, numReducers: Int,
               numMappers: Option[Int] = None): Unit = {
     import spark.implicits._
-    val tagged = shell(textDirM(spark, input, numMappers).rdd, mapCmd)
-      .mapPartitions { lines =>
-        val md5 = new Md5Partitioner(numReducers)
-        lines.map(line => (md5.getPartition(keyOf(line)), line))
-      }
-    val sorted = tagged.toDF("pid", "line")
-      .repartitionById(numReducers, col("pid"))
-      .sortWithinPartitions("line")
-      .select(col("line")).as[String]
-    val reduced = shell(sorted.rdd, reduceCmd).toDS()
+    val mapped = shell(textRddM(spark, input, numMappers), mapCmd)
+    val reduced = reduceRuns(pipeRuns(spark, mapped, numReducers), reduceCmd)
     writePartFiles(reduced.toDF("line"), output, numReducers,
       preservePartitions = true)
+  }
+
+  /** Estimated heap bytes of distinct lines one map task of
+    * [[pipeRuns]] holds before it flushes its runs downstream. */
+  private val RunBytes = 8L << 20
+
+  /** Lines a map task of [[pipeRuns]] folds before it checks that
+    * folding pays: if fewer than a quarter of them repeated an earlier
+    * one, the rest of the task passes through as runs of one. */
+  private[graft] val ProbeLines = 1024
+
+  /** The reducer-side input of an executable job, run-length encoded:
+    * `(line, n)` rows in `numPartitions` partitions, each sorted by
+    * line in UTF-8 byte order (Spark's string order, the order of the
+    * reference's `sort` and `heapq.merge`), where writing every line `n`
+    * times gives exactly the sorted stream of all the input lines that
+    * route there. Each map task folds equal lines into a hash map of at
+    * most [[RunBytes]], flushing it when full, and tags each run with
+    * the reference bucket of its key through one memoised
+    * [[Md5Partitioner]]; then a single `repartitionById` exchange routes
+    * the runs. A stream of repeated lines (a word count's `word\t1`)
+    * thus ships and sorts about one row per distinct line per map task
+    * instead of one per line. A task whose first [[ProbeLines]] lines
+    * are mostly distinct (a grep's matched lines) stops folding, so it
+    * costs no hash map insert per line. */
+  private[graft] def pipeRuns(spark: SparkSession, lines: RDD[String],
+                              numPartitions: Int): DataFrame = {
+    import spark.implicits._
+    lines.mapPartitions { it =>
+      val md5 = new Md5Partitioner(numPartitions)
+      foldRuns(it).map { case (line, n) =>
+        (md5.getPartition(keyOf(line)), line, n)
+      }
+    }.toDF("pid", "line", "n")
+      .repartitionById(numPartitions, col("pid"))
+      .sortWithinPartitions("line")
+      .select("line", "n")
+  }
+
+  /** Equal lines of `lines` as `(line, count)` runs, in batches of at
+    * most [[RunBytes]] estimated bytes: a line seen again after its
+    * batch was flushed starts a new run. If more than three quarters of
+    * the first [[ProbeLines]] lines are distinct, every later line is its
+    * own run. */
+  private def foldRuns(lines: Iterator[String]): Iterator[(String, Long)] = {
+    final class Count(var n: Long)
+    val counts = new java.util.HashMap[String, Count]()
+    var seen, distinct = 0L
+    var folding = true
+    val folded = Iterator.continually {
+      counts.clear()
+      var held = 0L
+      while (folding && held < RunBytes && lines.hasNext) {
+        val line = lines.next()
+        val c = counts.get(line)
+        if (c != null) c.n += 1
+        else {
+          counts.put(line, new Count(1))
+          held += 64 + 2L * line.length
+          distinct += 1
+        }
+        seen += 1
+        if (seen == ProbeLines && distinct > ProbeLines * 3 / 4) folding = false
+      }
+      val batch = new Array[(String, Long)](counts.size)
+      var i = 0
+      counts.forEach { (line, c) => batch(i) = (line, c.n); i += 1 }
+      batch
+    }.takeWhile(_.nonEmpty).flatten
+    folded ++ lines.map(line => (line, 1L))
+  }
+
+  /** Pipe the runs of [[pipeRuns]] through `sh -c cmd`, one subprocess
+    * per partition, writing each line as many times as it occurred. */
+  private def reduceRuns(runs: DataFrame, cmd: String): RDD[String] = {
+    val spark = runs.sparkSession
+    import spark.implicits._
+    shell(runs.as[(String, Long)].rdd.mapPartitions { it =>
+      new scala.collection.AbstractIterator[String] {
+        private var line: String = _
+        private var left = 0L
+        def hasNext: Boolean = left > 0 || it.hasNext
+        def next(): String = {
+          if (left == 0) { val (l, n) = it.next(); line = l; left = n }
+          left -= 1
+          line
+        }
+      }
+    }, cmd)
   }
 
   /** Overwrite-sink with reference file naming: delete + recreate the

@@ -81,7 +81,7 @@ object ScaleData {
       hotFp: Int = 0): Unit = {
     // token array projected as a column FIRST: a split() referenced
     // inside the transform lambda would re-evaluate per element
-    // (no CSE across higher-order functions — the Dedup.shingles rule)
+    // (no CSE across higher-order functions)
     val docs = Tables.documents(spark, sfDir)
       .select(col("doc_id"), col("text"), split(col("text"), " ").as("toks"),
         col("lang"), col("source"),

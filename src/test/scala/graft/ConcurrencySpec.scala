@@ -63,6 +63,25 @@ class ConcurrencySpec extends AnyFunSuite {
       Seq(() => 1, () => 2, () => 3, () => 4)) == Seq(1, 2, 3, 4))
   }
 
+  test("a failing branch of Relational.concurrently cancels its siblings' jobs") {
+    import scala.concurrent.Promise
+    import scala.concurrent.duration._
+    val sc = spark.sparkContext // branches run on the active session's context
+    val sibling = Promise[String]()
+    val boom = intercept[IllegalStateException] {
+      graft.operators.Relational.concurrently(Seq(
+        () => throw new IllegalStateException("branch failed at once"),
+        () =>
+          try { ConcurrencySpec.sleepingJob(sc, 45.seconds)
+            sibling.success("finished") }
+          catch { case e: Throwable => sibling.success(e.getMessage); throw e }))
+    }
+    assert(boom.getMessage == "branch failed at once")
+    // the sibling's job sleeps up to 45 s; cancelled, it ends at once
+    val outcome = Await.result(sibling.future, 20.seconds)
+    assert(outcome.contains("cancelled"), outcome)
+  }
+
   test("mixed query panel under 4- and 8-way concurrency matches sequential") {
     val t0 = System.nanoTime()
     val baseline = panel.map(q => q -> rows(q, d)).toMap
@@ -130,5 +149,19 @@ class ConcurrencySpec extends AnyFunSuite {
       finally listing.close()
     assert(residue.isEmpty, s"temp staging residue after the race: " +
       residue.mkString(", "))
+  }
+}
+
+object ConcurrencySpec {
+  /** Two tasks that sleep until `limit` passes or the task is killed. */
+  def sleepingJob(sc: org.apache.spark.SparkContext,
+                  limit: scala.concurrent.duration.FiniteDuration): Unit = {
+    val ms = limit.toMillis
+    sc.parallelize(1 to 2, 2).foreach { _ =>
+      val t0 = System.currentTimeMillis()
+      val ctx = org.apache.spark.TaskContext.get()
+      while (!ctx.isInterrupted() && System.currentTimeMillis() - t0 < ms)
+        Thread.sleep(20)
+    }
   }
 }

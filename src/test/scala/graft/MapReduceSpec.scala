@@ -225,4 +225,100 @@ class MapReduceSpec extends AnyFunSuite {
     }), ex.mkString("\n"))
     assert(ex.map(_.shuffleOrigin) == Seq(REPARTITION_BY_NUM), ex.mkString("\n"))
   }
+
+  // heavy duplicates within and across map tasks: every file repeats
+  // lines of its own and lines shared with the others, plus keys that
+  // are prefixes of each other and non-ASCII keys
+  private lazy val dupLines: Seq[Seq[String]] = (0 until 4).map { f =>
+    Seq.fill(40)("common\t1") ++ Seq.fill(7 + f)(s"own$f\t1") ++
+      Seq.fill(3)("a\tz") ++ Seq.fill(2)("a b\t1") ++
+      Seq.fill(f)("\uFFFD\t1") ++ Seq.fill(2)("\uD83D\uDE00\t9") ++
+      (0 until 30).map(i => s"w${i % 11}\t${f % 2}") ++ Seq(s"solo$f")
+  }
+  private lazy val dupCorpus = mkCorpus(dupLines)
+
+  private def utf8Sorted(ls: Seq[String]): Seq[String] =
+    ls.sortBy(_.getBytes("UTF-8").toSeq)(Ordering.Implicits.seqOrdering[Seq, Byte](
+      Ordering.by[Byte, Int](_ & 0xff)))
+
+  test("runPipe feeds a cat reducer the exact sorted multiset of its partition") {
+    for (r <- Seq(1, 3)) {
+      val out = Files.createTempDirectory("graft-runs").toString + "/out"
+      MapReduce.runPipe(spark, dupCorpus, out, mapCmd = "cat",
+        reduceCmd = "cat", numReducers = r, numMappers = Some(4))
+      val md5 = new MapReduce.Md5Partitioner(r)
+      val expected = dupLines.flatten
+        .groupBy(l => md5.getPartition(l.takeWhile(_ != '\t')))
+      readParts(out).zipWithIndex.foreach { case ((_, lines), p) =>
+        assert(lines == utf8Sorted(expected.getOrElse(p, Nil)), s"R=$r part $p")
+      }
+    }
+  }
+
+  test("pipeReduce feeds a cat reducer each key's lines, byte-sorted, all of them") {
+    import spark.implicits._
+    val kv = dupLines.flatten.map { l =>
+      val i = l.indexOf('\t')
+      if (i < 0) (l, "") else (l.substring(0, i), l.substring(i + 1))
+    }
+    for (r <- Seq(1, 3)) {
+      val s = spark.newSession()
+      s.conf.set("spark.sql.shuffle.partitions", r.toString)
+      val parts = MapReduce.pipeReduce("cat")(
+        s.createDataset(kv).toDF("key", "value").repartition(4))
+        .as[(String, String)].rdd.glom().collect()
+        .map(_.toSeq.map { case (k, v) => s"$k\t$v" })
+      assert(parts.length == r)
+      parts.foreach(p => assert(p == utf8Sorted(p), s"R=$r"))
+      assert(parts.flatten.sorted.toSeq ==
+        kv.map { case (k, v) => s"$k\t$v" }.sorted, s"R=$r")
+      val keysOf = parts.map(_.map(_.takeWhile(_ != '\t')).toSet)
+      assert(keysOf.flatten.length == keysOf.flatten.distinct.length,
+        s"R=$r: a key reached two reducers")
+    }
+  }
+
+  test("pipeRuns combines map-side below its one routing exchange") {
+    val lines = spark.sparkContext.parallelize(dupLines.flatten, 4)
+    val runs = MapReduce.pipeRuns(spark, lines, 3)
+    val counts = runs.collect().map(_.getLong(1))
+    val ex = aqe.collect(runs.queryExecution.executedPlan) {
+      case e: ShuffleExchangeExec => e
+    }
+    assert(ex.map(_.shuffleOrigin) == Seq(REPARTITION_BY_NUM), ex.mkString("\n"))
+    // the fold runs in the map tasks: fewer rows cross the exchange than
+    // lines went in, and the counts add up to every line
+    val shipped = ex.head.metrics("shuffleRecordsWritten").value
+    assert(shipped == counts.length && shipped < dupLines.flatten.size,
+      s"$shipped rows shipped")
+    assert(counts.sum == dupLines.flatten.size)
+  }
+
+  test("pipeRuns stops folding a task whose first lines are mostly distinct") {
+    import spark.implicits._
+    val probe = MapReduce.ProbeLines
+    // task 0 opens with distinct lines, task 1 with one repeated line;
+    // both end with the same 500 repeats of "late"
+    val distinctFirst = (0 until probe).map(i => s"d$i") ++ Seq.fill(500)("late")
+    val repeatsFirst = Seq.fill(probe)("r") ++ Seq.fill(500)("late")
+    val runs = MapReduce.pipeRuns(spark, spark.sparkContext
+      .parallelize(Seq(distinctFirst, repeatsFirst), 2).flatMap(identity), 1)
+      .as[(String, Long)].collect().toSeq
+    assert(runs.count(_._1 == "late") == 501, "late runs: 500 of one, 1 of 500")
+    assert(runs.count(_._1 == "r") == 1 && runs.count(_._1.startsWith("d")) == probe)
+    assert(runs.map(_._2).sum == distinctFirst.size + repeatsFirst.size)
+    // the reducer still reads every line, byte-sorted (one map task per
+    // file: the first and last stop folding, the middle one folds)
+    for (r <- Seq(1, 3)) {
+      val files = Seq(distinctFirst, repeatsFirst, distinctFirst.reverse)
+      val out = Files.createTempDirectory("graft-runs").toString + "/out"
+      MapReduce.runPipe(spark, mkCorpus(files), out, mapCmd = "cat",
+        reduceCmd = "cat", numReducers = r, numMappers = Some(1))
+      val md5 = new MapReduce.Md5Partitioner(r)
+      val expected = files.flatten.groupBy(md5.getPartition(_))
+      readParts(out).zipWithIndex.foreach { case ((_, lines), p) =>
+        assert(lines == utf8Sorted(expected.getOrElse(p, Nil)), s"R=$r part $p")
+      }
+    }
+  }
 }

@@ -332,6 +332,33 @@ class PlanAuditSpec extends AnyFunSuite {
     }
   }
 
+  test("gram and shingle generators of q198 and q71 run one-pass kernels, no lambda") {
+    // the W-gram fingerprints and the trigram shingles come from the
+    // GramOps kernels; a higher-order function here would put an
+    // interpreted lambda back on every array element. q71 persists its
+    // shingles, so its generator sits under the in-memory scan.
+    import org.apache.spark.sql.catalyst.expressions.LambdaFunction
+    import org.apache.spark.sql.execution.{GenerateExec, SparkPlan}
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+    import graft.functions.GramOps.{Shingles3, WGramFps}
+    val h = new AdaptiveSparkPlanHelper {}
+    def generators(p: SparkPlan): Seq[GenerateExec] =
+      h.collect(p) { case g: GenerateExec => g } ++ h.collect(p) {
+        case m: InMemoryTableScanExec => m }.flatMap(m =>
+          generators(m.relation.cachedPlan))
+    try Seq("q198_exact_substring" -> classOf[WGramFps],
+      "q71_decontamination" -> classOf[Shingles3]).foreach { case (q, kernel) =>
+      val df = SparkEntry.queries(q)(spark, Spec.sfDir)
+      df.collect()
+      val gens = generators(df.queryExecution.executedPlan)
+      assert(gens.exists(_.generator.exists(kernel.isInstance)),
+        s"$q: no ${kernel.getSimpleName} generator\n${df.queryExecution.executedPlan}")
+      assert(!gens.exists(_.generator.exists(_.isInstanceOf[LambdaFunction])),
+        s"$q: lambda in a generator\n${df.queryExecution.executedPlan}")
+    } finally Session.release(spark)
+  }
+
   test("skew advisor attaches totals by one-row broadcast") {
     val p = plan("q108_skew_advisor")
     assert(p.contains("BroadcastNestedLoopJoin") ||

@@ -6,6 +6,7 @@ import java.security.MessageDigest
 import org.scalacheck.{Arbitrary, Gen, Prop, Test => SCTest}
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.operators.Dedup
 import graft.pipeline.MapReduce
 
 /** Property-based layer (SURVEY §5 carry-over): invariants that must
@@ -59,6 +60,55 @@ class PropertySpec extends AnyFunSuite {
       val keys = (0 until 3 * MapReduce.Md5Partitioner.MemoSlots).map(prefix + _)
       (keys ++ keys.reverse).forall(k => p.getPartition(k) == md5Mod(k, r))
     }, n = 5)
+  }
+
+  // The HOF forms the GramOps kernels replaced, kept as the reference:
+  // a lambda per window over `sequence(0, n - W)`.
+  private def hofWgramFps(t: org.apache.spark.sql.Column, w: Int) = {
+    import org.apache.spark.sql.functions._
+    val n = size(t)
+    val idx = when(n >= w, sequence(lit(0), n - w))
+      .otherwise(array().cast("array<int>"))
+    transform(transform(idx, i => slice(t, i + lit(1), lit(w))),
+      sl => struct(xxhash64(lit(1), sl).as("h1"), xxhash64(lit(2), sl).as("h2")))
+  }
+  private def hofShingles3(t: org.apache.spark.sql.Column) = {
+    import org.apache.spark.sql.functions._
+    val n = size(t)
+    val idx = when(n >= 3, sequence(lit(0), n - 3))
+      .otherwise(array().cast("array<int>"))
+    array_distinct(transform(idx, i =>
+      concat_ws(" ", get(t, i), get(t, i + 1), get(t, i + 2))))
+  }
+
+  test("wgram_fps and shingles3 kernels equal their HOF forms on arbitrary token arrays") {
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.functions.col
+    import org.apache.spark.sql.types.{ArrayType, StringType, StructField, StructType}
+    import graft.functions.GramOps
+    val spark = Spec.spark
+    GramOps.ensureRegistered(spark)
+    // a small vocabulary forces repeated tokens and repeated windows;
+    // null tokens test concat_ws's and xxhash64's null skipping
+    val token: Gen[String] = Gen.frequency(6 -> Gen.oneOf("a", "b", "ab", ""),
+      3 -> unicodeKey, 1 -> Gen.const(null: String))
+    val array: Gen[Seq[String]] = Gen.frequency(1 -> Gen.const(null: Seq[String]),
+      8 -> Gen.choose(0, 20).flatMap(k => Gen.listOfN(k, token)))
+    val schema = StructType(Seq(StructField("toks", ArrayType(StringType))))
+    check(Prop.forAll(Gen.listOfN(12, array), Gen.oneOf(1, 2, 3, 5, Dedup.EXSUB_W)) {
+      (rows, w) =>
+      val local = spark.createDataFrame(
+        java.util.Arrays.asList(rows.map(Row(_)): _*), schema)
+      // an RDD source keeps the projection out of local-relation
+      // folding, so the kernels also run through their generated code
+      val viaRdd = spark.createDataFrame(
+        spark.sparkContext.parallelize(rows.map(Row(_)), 2), schema)
+      Seq(local, viaRdd).forall { df =>
+        df.select(GramOps.wgramFps(col("toks"), w), hofWgramFps(col("toks"), w),
+          GramOps.shingles3(col("toks")), hofShingles3(col("toks")))
+          .collect().forall(r => r.get(0) == r.get(1) && r.get(2) == r.get(3))
+      }
+    }, n = 20)
   }
 
   test("wcMapPy tokenization is exactly whitespace-run split, empties dropped") {
