@@ -110,7 +110,7 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
+    val cpus = Session.cpus
     val reps = sys.env.getOrElse("SPARK_GRAFT_BENCH_REPS", "3").toInt.max(1)
     // Bench-only micro-batch depth for the two stream-drain queries
     // (q192/q194): 2 epochs instead of 4/8 — the per-epoch protocol is
@@ -127,7 +127,7 @@ object Bench {
     val streamEpochs =
       sys.env.getOrElse("SPARK_GRAFT_STREAM_EPOCHS", "2").toInt.max(2)
     sys.props("graft.bench.streamEpochs") = streamEpochs.toString
-    val spark = Session.build(s"local[$cpus]", cpus.toInt, "graft-bench")
+    val spark = Session.build(s"local[$cpus]", cpus, "graft-bench")
     spark.sparkContext.setLogLevel("WARN")
     // NOTE the heap itself is pre-touched at JVM start (-Xms = -Xmx
     // + -XX:+AlwaysPreTouch, build.sbt): on this host first-touch page

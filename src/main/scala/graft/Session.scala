@@ -8,6 +8,18 @@ import org.apache.spark.sql.SparkSession
   */
 object Session {
 
+  /** The session width every CLI entry point runs at (`local[N]` and
+    * the shuffle partition count): `SPARK_GRAFT_CPUS` when set,
+    * otherwise the host's available processors. */
+  def cpus: Int = cpusFrom(sys.env.get("SPARK_GRAFT_CPUS"))
+
+  private[graft] def cpusFrom(v: Option[String]): Int =
+    v.fold(Runtime.getRuntime.availableProcessors) { x =>
+      val n = x.trim.toIntOption.getOrElse(0)
+      require(n > 0, s"SPARK_GRAFT_CPUS must be a positive integer, got '$x'")
+      n
+    }
+
   /** `extra` lets fault-injection harnesses (FaultDemo) tighten the
     * speculation knobs or point executors at the right classpath while
     * still running THIS config — the point is to exercise the session
@@ -136,15 +148,14 @@ object Session {
     // even though names and types match exactly (IDs-only mismatch;
     // rebinding is positional, results hash-gated). Every verify log
     // carried ~20 copies of what reads like a planner bug; targeted at
-    // the one logger, not a blanket level change. Opt back in with
-    // SPARK_GRAFT_LOGICALRDD_WARN=1 (e.g. when debugging a REAL
-    // name/type rebind mismatch, which this level would also hide),
-    // and guarded so a non-log4j2 logging backend can't throw here.
-    if (!sys.env.get("SPARK_GRAFT_LOGICALRDD_WARN").contains("1"))
-      try org.apache.logging.log4j.core.config.Configurator.setLevel(
-        "org.apache.spark.sql.execution.LogicalRDD",
-        org.apache.logging.log4j.Level.ERROR)
-      catch { case _: NoClassDefFoundError | _: RuntimeException => }
+    // the one logger, not a blanket level change (debugging a REAL
+    // name/type rebind mismatch, which this level would also hide,
+    // means raising that logger again through log4j), and guarded so
+    // a non-log4j2 logging backend can't throw here.
+    try org.apache.logging.log4j.core.config.Configurator.setLevel(
+      "org.apache.spark.sql.execution.LogicalRDD",
+      org.apache.logging.log4j.Level.ERROR)
+    catch { case _: NoClassDefFoundError | _: RuntimeException => }
     sp
   }
 

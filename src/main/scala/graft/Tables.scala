@@ -125,24 +125,28 @@ object Tables {
     rgCache.computeIfAbsent((d, Artifacts.fingerprint(d), name),
       _ => footerSum(s, d, name)(_.getRowGroups.size.toLong))
 
-  /** A fixture scan WIDENED for a CPU-bound generator (guide §2.5
-    * "input skew: one huge unsplittable file… repartition immediately
-    * after the read"). The corpus fixtures are written as one file
-    * with one row group, so every scan of them is ONE task — harmless
-    * for byte-bound consumers, but a generator whose per-row CPU is
-    * orders of magnitude above its input bytes (W-gram fingerprinting
-    * at ~2·W hashes per token position, shingling) then runs the whole
-    * corpus on one core while the other N−1 idle; measured 11.9 s of
-    * 13.5 s wall for q198 at the 16× rung. The decision derives from
-    * the INPUT LAYOUT, not a tuned constant: if the table's natural
-    * split count (its row-group total — the parquet split floor) is at
-    * or above the session's parallelism, the scan already spreads and
-    * this is the identity (the 100 TB case: thousands of row groups,
-    * adding a corpus shuffle there would be a pessimization); only a
-    * layout-capped scan pays one hash exchange on `key` to session
-    * width. Identical subtrees in one query reuse the exchange
-    * (ReuseExchange), so a detector that consumes the same spread scan
-    * twice shuffles the bytes once. */
+  /** THE scan-width rule: a fixture scan widened for a CPU-bound
+    * consumer (guide §2.5 "input skew: one huge unsplittable file…
+    * repartition immediately after the read"). Every operator whose
+    * CPU-bound per-row work sits on a fixture scan — gram and shingle
+    * kernels, media codecs, vector quantization, q84's pair expansion,
+    * the width-guarded lineitem stages — reads through this call, and
+    * no other code widens a scan. The call site says "CPU-bound here",
+    * knowledge the plan does not carry (q21 and q84 explode tokens over
+    * the same scan; only q84 needs the width); this decides whether to
+    * widen and how far. The corpus fixtures are one file with one row
+    * group, so every scan of them is ONE task: a generator whose
+    * per-row CPU dwarfs its input bytes then runs the corpus on one
+    * core (11.9 s of 13.5 s wall for q198 at the 16× rung). The
+    * decision derives from the INPUT LAYOUT, not a tuned constant: if
+    * the table's row-group total (the parquet split floor) is at or
+    * above the session's parallelism, the scan already spreads and
+    * this is the identity (the 100 TB case: adding a corpus shuffle
+    * there would be a pessimization); only a layout-capped scan pays
+    * one hash exchange on `key` to session width. Identical subtrees
+    * in one query reuse the exchange (ReuseExchange). Join and loop
+    * pins (`.repartition(p, key)` on a shuffled frame) are a different
+    * decision and stay at their call sites. */
   def spread(s: SparkSession, d: String, name: String, key: String): DataFrame = {
     val p = s.sparkContext.defaultParallelism
     val df = apply(s, d, name)

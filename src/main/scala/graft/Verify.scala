@@ -6,8 +6,8 @@ import java.nio.file.{Files, Paths}
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = Session.build(s"local[$cpus]", cpus.toInt, "graft-verify")
+    val cpus = Session.cpus
+    val spark = Session.build(s"local[$cpus]", cpus, "graft-verify")
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
     // Optional comma-separated subset for local iteration (shared

@@ -4,6 +4,7 @@ import java.awt.image.BufferedImage
 import java.io.{ByteArrayInputStream, ByteArrayOutputStream}
 import javax.imageio.ImageIO
 
+import org.apache.spark.sql.{Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.{Q, Tables}
@@ -296,6 +297,22 @@ object Multimodal {
     }
   }
 
+  /** One synthesized `fmt` payload per document id, the ingest stand-in
+    * every codec query decodes. Codec work is CPU-bound per row, and a
+    * small parquet input is one split → one task → one core doing every
+    * decode, so the id scan goes through [[Tables.spread]]: on a
+    * layout-capped input it hash-shuffles the (tiny) id rows to session
+    * width BEFORE the codec stages — the shuffle moves longs, the decode
+    * uses every core — and on an input already split that wide it adds
+    * no shuffle at all. */
+  private def mediaRows(s: SparkSession, d: String, fmt: String,
+      synth: Long => Array[Byte]): Dataset[MediaRow] = {
+    import s.implicits._
+    Tables.spread(s, d, "documents", "doc_id")
+      .select(col("doc_id")).as[Long]
+      .mapPartitions(_.map(id => MediaRow(id, fmt, synth(id))))
+  }
+
   val queries: Seq[Q] = Seq(
 
     // ----- binary ingestion + metadata (functions-only, oracle-checked) ----
@@ -337,17 +354,7 @@ object Multimodal {
         |CROSS JOIN unnest(range(0, 16 + d.doc_id % 17)) AS x(x)
         |GROUP BY d.doc_id""".stripMargin) { (s, d) =>
       import s.implicits._
-      // codec work is CPU-bound per row, and a small parquet input is
-      // one split → one task → one core doing every decode. Repartition
-      // the (tiny) id rows to the session's parallelism BEFORE the
-      // codec stages: the shuffle moves longs, the decode uses every
-      // core — the partition count of a codec stage must track cores,
-      // not input bytes.
-      Tables.documents(s, d)
-        .select(col("doc_id")).as[Long]
-        .repartition(s.sparkContext.defaultParallelism)
-        .mapPartitions(_.map(id =>
-          MediaRow(id, "png", MediaCodec.synthPng(id))))
+      mediaRows(s, d, "png", MediaCodec.synthPng)
         .mapPartitions(MediaCodec.decodePng _)
         .toDF()
         .select(col("doc_id"), col("fmt"), col("width"), col("height"),
@@ -369,12 +376,7 @@ object Multimodal {
         |  CAST(44 + (256 + doc_id % 256) * 2 AS BIGINT) AS n_bytes
         |FROM documents""".stripMargin) { (s, d) =>
       import s.implicits._
-      // same core-matched repartition as q37 — see the comment there
-      Tables.documents(s, d)
-        .select(col("doc_id")).as[Long]
-        .repartition(s.sparkContext.defaultParallelism)
-        .mapPartitions(_.map(id =>
-          MediaRow(id, "wav", MediaCodec.synthWav(id))))
+      mediaRows(s, d, "wav", MediaCodec.synthWav)
         .mapPartitions(MediaCodec.decodeWav _)
         .toDF()
         .select(col("doc_id"), col("sample_rate"), col("n_channels"),
@@ -401,12 +403,7 @@ object Multimodal {
         |        FROM unnest(range(0, 32)) AS u(j)) AS BIGINT) AS sampled_sum
         |FROM p""".stripMargin) { (s, d) =>
       import s.implicits._
-      // same core-matched repartition as q37 — see the comment there
-      Tables.documents(s, d)
-        .select(col("doc_id")).as[Long]
-        .repartition(s.sparkContext.defaultParallelism)
-        .mapPartitions(_.map(id =>
-          MediaRow(id, "wav", MediaCodec.synthWav(id))))
+      mediaRows(s, d, "wav", MediaCodec.synthWav)
         .mapPartitions(MediaCodec.frameSample(_, 32))
         .toDF()
         .select(col("doc_id"), col("n_samples"), col("stride"),
@@ -420,12 +417,7 @@ object Multimodal {
         |  CAST(8 AS INTEGER) AS thumb_w, CAST(8 AS INTEGER) AS thumb_h
         |FROM documents""".stripMargin) { (s, d) =>
       import s.implicits._
-      // same core-matched repartition as q37 — see the comment there
-      Tables.documents(s, d)
-        .select(col("doc_id")).as[Long]
-        .repartition(s.sparkContext.defaultParallelism)
-        .mapPartitions(_.map(id =>
-          MediaRow(id, "png", MediaCodec.synthPng(id))))
+      mediaRows(s, d, "png", MediaCodec.synthPng)
         .mapPartitions(MediaCodec.thumbnail _)
         .toDF()
         .select(col("doc_id"), col("src_w"), col("src_h"),
@@ -444,9 +436,9 @@ object Multimodal {
     // drift of even one pixel breaks the hash match. Packed as two
     // 32-bit halves: Hamming distance downstream is
     // bit_count(h1a^h1b) + bit_count(h2a^h2b) in positive int64, no
-    // two's-complement hazard. Codec stages repartition to cores
-    // (CPU-bound per row, the q37 rule); the hash output is 4 longs
-    // per image — the 100 TB shape where pixels never shuffle.
+    // two's-complement hazard. Codec stages widen through mediaRows
+    // (CPU-bound per row); the hash output is 4 longs per image — the
+    // 100 TB shape where pixels never shuffle.
     Q("q154_image_ahash",
       """WITH px AS (
         |  SELECT d.doc_id, 16 + d.doc_id % 13 AS h, 16 + d.doc_id % 17 AS w,
@@ -478,12 +470,7 @@ object Multimodal {
         |  CAST(sum(bit) AS BIGINT) AS n_bits
         |FROM bits GROUP BY doc_id""".stripMargin) { (s, d) =>
       import s.implicits._
-      // same core-matched repartition as q37 — see the comment there
-      Tables.documents(s, d)
-        .select(col("doc_id")).as[Long]
-        .repartition(s.sparkContext.defaultParallelism)
-        .mapPartitions(_.map(id =>
-          MediaRow(id, "png", MediaCodec.synthPng(id))))
+      mediaRows(s, d, "png", MediaCodec.synthPng)
         .mapPartitions(MediaCodec.ahashPng _)
         .toDF()
         .select(col("doc_id"), col("h1"), col("h2"), col("n_bits"))

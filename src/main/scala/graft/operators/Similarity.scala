@@ -407,6 +407,32 @@ object Similarity {
     k
   }
 
+  /** q104/q115's shared assignment input: the quantized vectors with
+    * their self-dots `(vec_id, sv, xx)`, persisted — read once, then
+    * reused by the centroid collect, the assignment and (q104) both
+    * pair sides, since re-scanning the corpus per branch is the waste
+    * the q49 rule exists for — plus the [[graft.functions.CentroidIndex]]
+    * over its first [[sdK]] vectors. Quantizing and assigning are
+    * CPU-bound per row, and a single parquet split (one ~50 MB file
+    * holds 512k vectors at 256×) must not serialize them, so the scan
+    * goes through [[Tables.spread]]. */
+  private def quantCentroids(s: SparkSession, d: String)
+      : (DataFrame, graft.functions.CentroidIndex) = {
+    graft.functions.VecOps.ensureRegistered(s)
+    val k = sdK(Tables.rowCount(s, d, "embeddings"))
+    val e = Tables.spread(s, d, "embeddings", "vec_id")
+      .select(col("vec_id"), quant(col("embedding")).as("sv"))
+      .withColumn("xx", dot(col("sv"), col("sv")))
+      .persist()
+    val centIdx = graft.functions.CentroidIndex.build(
+      e.filter(col("vec_id").between(1, k))
+        .select(col("vec_id").cast("long"), col("sv"), col("xx"))
+        .collect().toSeq
+        .map(r => (r.getLong(0), r.getSeq[Double](1).toArray,
+          r.getDouble(2))))
+    (e, centIdx)
+  }
+
   private val NK_SQL =
     "SELECT greatest(8, (count(*) + 255) // 256) AS k FROM embeddings"
 
@@ -877,17 +903,7 @@ object Similarity {
          |ORDER BY d2, vec_a, vec_b
          |LIMIT 20""".stripMargin
     }) { (s, d) =>
-      val k = sdK({ graft.functions.VecOps.ensureRegistered(s); Tables.rowCount(s, d, "embeddings") })
-      // quantized vectors + self-dots: read once, reused by assignment
-      // AND both pair sides — the per-query artifact (q35 rule)
-      val e = embTable(s, d)
-        .select(col("vec_id"), quant(col("embedding")).as("sv"))
-        // CPU-bound from here on: a single parquet split (one ~50 MB
-        // file holds 512k vectors at 256×) must not serialize the
-        // assignment pass — spread it over the executor slots
-        .repartition(s.sparkContext.defaultParallelism)
-        .withColumn("xx", dot(col("sv"), col("sv")))
-        .persist()
+      val (e, centIdx) = quantCentroids(s, d)
       // Assignment (round 16): a norm-bound-pruned EXACT arg-min per
       // row ([[graft.functions.CentroidIndex]]) — the n×K crossJoin +
       // min_by aggregate it replaces paid Θ(n×K) dot products AND an
@@ -896,15 +912,7 @@ object Similarity {
       // evaluations via the Cauchy–Schwarz norm bound while keeping
       // the (dc, cid) arg-min bit-identical, and the whole assignment
       // collapses to ONE codegen'd projection over the corpus: no
-      // candidate rows, no aggregate, no join-back, no shuffle. The
-      // collected centroid table is the same K = n/256 rows the old
-      // plan broadcast.
-      val centIdx = graft.functions.CentroidIndex.build(
-        e.filter(col("vec_id").between(1, k))
-          .select(col("vec_id").cast("long"), col("sv"), col("xx"))
-          .collect().toSeq
-          .map(r => (r.getLong(0), r.getSeq[Double](1).toArray,
-            r.getDouble(2))))
+      // candidate rows, no aggregate, no join-back, no shuffle.
       // persisted: BOTH pair-join sides read the assignment (the q49
       // rule — without the persist the scan+assign runs once per
       // branch)
@@ -991,26 +999,9 @@ object Similarity {
          |FROM asg a JOIN documents d ON d.doc_id = a.vec_id
          |GROUP BY a.cid, d.lang""".stripMargin
     }) { (s, d) =>
-      val k = sdK({ graft.functions.VecOps.ensureRegistered(s); Tables.rowCount(s, d, "embeddings") })
-      // persisted: the quantized frame feeds the centroid filter AND
-      // the assignment probe — re-scanning the corpus per branch is
-      // the 100 TB waste the q49 rule exists for
-      val e = embTable(s, d)
-        .select(col("vec_id"), quant(col("embedding")).as("sv"))
-        // CPU-bound from here on: a single parquet split (one ~50 MB
-        // file holds 512k vectors at 256×) must not serialize the
-        // assignment pass — spread it over the executor slots
-        .repartition(s.sparkContext.defaultParallelism)
-        .withColumn("xx", dot(col("sv"), col("sv")))
-        .persist()
       // same bound-pruned exact assignment as q104 — one codegen'd
       // projection pass instead of the n×K crossJoin + min_by
-      val centIdx = graft.functions.CentroidIndex.build(
-        e.filter(col("vec_id").between(1, k))
-          .select(col("vec_id").cast("long"), col("sv"), col("xx"))
-          .collect().toSeq
-          .map(r => (r.getLong(0), r.getSeq[Double](1).toArray,
-            r.getDouble(2))))
+      val (e, centIdx) = quantCentroids(s, d)
       val assigned = e.select(col("vec_id"),
         graft.functions.CentroidOps.nearestCentroid(centIdx,
           col("sv"), col("xx")).as("cid"))

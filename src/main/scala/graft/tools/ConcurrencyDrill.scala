@@ -74,8 +74,8 @@ object ConcurrencyDrill {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
     val threads = if (args.length > 1) args(1).toInt else 8
     val loopSec = if (args.length > 2) args(2).toInt else 60
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = Session.build(s"local[$cpus]", cpus.toInt, "graft-conc",
+    val cpus = Session.cpus
+    val spark = Session.build(s"local[$cpus]", cpus, "graft-conc",
       extra = Map("spark.scheduler.mode" -> "FAIR"))
     spark.sparkContext.setLogLevel("WARN")
     require(spark.sparkContext.getConf.get("spark.scheduler.mode") == "FAIR",

@@ -55,7 +55,7 @@ object MemoryPressureDrill {
 
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val cpus = Session.cpus
     // cluster-default task retry budget (spark.task.maxFailures=4):
     // plain local[N] runs at maxFailures=1, where a single transient
     // UNABLE_TO_ACQUIRE_MEMORY — 32 tasks racing a ~140 MB squeezed
@@ -66,7 +66,7 @@ object MemoryPressureDrill {
     // nonzero spill, and hashes identical to the big-heap run, and the
     // artifact records how many task attempts failed (`tasks_failed`)
     // so a retry-heavy pass is visible, not laundered.
-    val spark = Session.build(s"local[$cpus,4]", cpus.toInt, "graft-mem")
+    val spark = Session.build(s"local[$cpus,4]", cpus, "graft-mem")
     spark.sparkContext.setLogLevel("WARN")
     def timed(f: => Unit): Double = {
       val t0 = System.nanoTime(); f; (System.nanoTime() - t0) / 1e9

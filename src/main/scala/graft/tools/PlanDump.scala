@@ -18,8 +18,8 @@ object PlanDump {
     val names = args(1).split(",").map(_.trim).filter(_.nonEmpty).toSeq
     val unknown = names.filterNot(SparkEntry.queries.contains)
     require(unknown.isEmpty, s"unknown queries: $unknown")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = Session.build(s"local[$cpus]", cpus.toInt, "graft-plandump")
+    val cpus = Session.cpus
+    val spark = Session.build(s"local[$cpus]", cpus, "graft-plandump")
     spark.sparkContext.setLogLevel("ERROR")
     names.foreach { q =>
       println(s"===== $q")

@@ -26,8 +26,8 @@ object SkewAb {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
     val reps = if (args.length > 1) args(1).toInt else 3
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = Session.build(s"local[$cpus]", cpus.toInt, "graft-skewab")
+    val cpus = Session.cpus
+    val spark = Session.build(s"local[$cpus]", cpus, "graft-skewab")
     spark.sparkContext.setLogLevel("WARN")
 
     def li = Tables.lineitem(spark, sfDir)

@@ -35,7 +35,7 @@ import graft.operators.Dedup
   * fires on at 100 TB.
   *
   * Usage: `runMain graft.tools.SkewProbe [nDocs] [tailTokens]`
-  * (defaults 400000 / 1; honors SPARK_GRAFT_CPUS).
+  * (defaults 400000 / 1; session width from [[graft.Session.cpus]]).
   *
   * DIR MODE (VERDICT-r17 task #1): `runMain graft.tools.SkewProbe
   * corpusDir` — any first argument that is not all digits is a corpus
@@ -44,9 +44,10 @@ import graft.operators.Dedup
   * (e.g. a ScaleData rung with the hot-fp cohort planted) and runs the
   * same three shapes at Spark's DEFAULT AQE skew thresholds (256 MB /
   * factor 5), so the split under test is the exact rule production
-  * fires, not a probe-scaled one. The corpus scan is spread to session
-  * width first (all three shapes share the identical gram table, so
-  * the comparison isolates the detector shape).
+  * fires, not a probe-scaled one. The corpus is read through the
+  * shipped detector's own scan ([[Dedup.exsubDocs]], width-guarded by
+  * [[graft.Tables.spread]]); all three shapes share the identical gram
+  * table, so the comparison isolates the detector shape.
   */
 object SkewProbe {
 
@@ -67,7 +68,7 @@ object SkewProbe {
     val nDocs = if (dirMode) 0 else
       args.headOption.map(_.toInt).getOrElse(400000)
     val tail = args.drop(1).headOption.map(_.toInt).getOrElse(1)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8").toInt
+    val cpus = Session.cpus
     val w = Dedup.EXSUB_W
     val spark = Session.build(s"local[$cpus]", cpus, "graft-skewprobe",
       if (dirMode) Map.empty[String, String]
@@ -92,13 +93,10 @@ object SkewProbe {
     // boundary-crossing grams are per-doc unique background. tail=1
     // makes the hot fingerprint ~16× a 16-partition background; larger
     // tails dilute it toward the uniform corpora ScaleData plants.
-    // DIR MODE instead reads the real corpus (spread to session width
-    // so all three shapes share one wide gram table).
+    // DIR MODE instead reads the real corpus through the shipped
+    // detector's own scan, [[Dedup.exsubDocs]].
     val hot = (0 until w).map(i => s"hotgram$i").mkString(" ")
-    val docs = (if (dirMode)
-      spark.read.parquet(s"${args(0)}/documents.parquet")
-        .repartition(cpus, col("doc_id"))
-        .select(col("doc_id"), split(lower(col("text")), " ", -1).as("toks"))
+    val docs = (if (dirMode) Dedup.exsubDocs(spark, args(0))
     else spark.range(1, nDocs + 1L).toDF("doc_id")
       .select(col("doc_id"), concat_ws(" ",
           lit(hot) +: (0 until tail).map(j =>

@@ -72,7 +72,7 @@ object StageProbe {
       "usage: StageProbe <sfDir> <q1>[,<q2>...] [reps]")
     val names = args(1).split(",").map(_.trim).filter(_.nonEmpty).toSeq
     val reps = if (args.length > 2) args(2).toInt else 2
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
+    val cpus = Session.cpus
     val spark = Session.build(s"local[$cpus]", cpus, "graft-stageprobe")
     spark.sparkContext.setLogLevel("WARN")
     report(spark, args(0), names, reps).foreach(println)

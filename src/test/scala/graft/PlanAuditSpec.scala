@@ -359,6 +359,59 @@ class PlanAuditSpec extends AnyFunSuite {
     } finally Session.release(spark)
   }
 
+  test("fixture-scan widening goes through Tables.spread: one hash exchange on a one-row-group scan, none on a wide layout (q37, q104)") {
+    // q37's codec stage and q104's quant stage (inside its persisted
+    // quantized frame) are CPU-bound per row: on the one-row-group
+    // fixture the id/vector scan pays exactly one hash exchange on its
+    // key to session width; on a layout already split that wide the
+    // scan feeds the stage directly. Both layouts give the same rows.
+    import org.apache.spark.sql.catalyst.expressions.Attribute
+    import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
+    import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+    import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+    val p = spark.sparkContext.defaultParallelism
+    val wide = java.nio.file.Files.createTempDirectory("graft-wide").toString
+    Seq("documents", "embeddings").foreach { t =>
+      Tables(spark, Spec.sfDir, t).repartition(p)
+        .write.mode("overwrite").parquet(s"$wide/$t.parquet")
+    }
+    def initial(plan: SparkPlan): SparkPlan = plan match {
+      case a: AdaptiveSparkPlanExec => a.initialPlan
+      case other => other
+    }
+    def scansOf(plan: SparkPlan, table: String) = plan.collect {
+      case f: FileSourceScanExec
+          if f.relation.location.rootPaths.exists(_.getName == s"$table.parquet") => f }
+    // the exchanges between `table`'s scan and its first consumer, in
+    // the query plan or in any persisted frame under it
+    def scanExchanges(plan: SparkPlan, table: String): Seq[ShuffleExchangeExec] = {
+      val init = initial(plan)
+      init.collect { case e: ShuffleExchangeExec if scansOf(e, table).nonEmpty => e } ++
+        init.collect { case m: InMemoryTableScanExec => m.relation.cachedPlan }
+          .distinct.flatMap(scanExchanges(_, table))
+    }
+    def hashedOn(e: ShuffleExchangeExec, key: String): Boolean =
+      e.outputPartitioning match {
+        case HashPartitioning(Seq(k: Attribute), n) => k.name == key && n == p
+        case _ => false
+      }
+    try Seq(("q37_media_decode", "documents", "doc_id"),
+      ("q104_semantic_dedup", "embeddings", "vec_id")).foreach { case (q, table, key) =>
+      val narrow = SparkEntry.queries(q)(spark, Spec.sfDir)
+      val ex = scanExchanges(narrow.queryExecution.executedPlan, table)
+      assert(ex.size == 1 && hashedOn(ex.head, key),
+        s"$q: expected one hashpartitioning($key, $p)\n${ex.mkString("\n")}")
+      if (q == "q37_media_decode")
+        assert(ex.head.output.map(_.name) == Seq("doc_id"), ex.head.output)
+      val onWide = SparkEntry.queries(q)(spark, wide)
+      val plan = onWide.queryExecution.executedPlan
+      assert(scanExchanges(plan, table).isEmpty, s"$q: exchange on a wide scan\n$plan")
+      assert(onWide.collect().toSet == narrow.collect().toSet, q)
+    } finally Session.release(spark)
+  }
+
   test("skew advisor attaches totals by one-row broadcast") {
     val p = plan("q108_skew_advisor")
     assert(p.contains("BroadcastNestedLoopJoin") ||

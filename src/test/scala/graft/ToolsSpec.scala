@@ -42,6 +42,17 @@ class ToolsSpec extends AnyFunSuite {
     assert(e.getMessage.contains("unknown query"), e.getMessage)
   }
 
+  test("Session.cpus takes SPARK_GRAFT_CPUS when set, the host's processors when unset, and rejects anything but a positive integer") {
+    // parsing only: no session is built at any of these widths
+    assert(Session.cpusFrom(Some("6")) == 6)
+    assert(Session.cpusFrom(Some(" 32 ")) == 32)
+    assert(Session.cpusFrom(None) == Runtime.getRuntime.availableProcessors)
+    Seq("0", "-4", "four", "", "2.5", "99999999999").foreach { v =>
+      val e = intercept[IllegalArgumentException](Session.cpusFrom(Some(v)))
+      assert(e.getMessage.contains("SPARK_GRAFT_CPUS"), v)
+    }
+  }
+
   test("the JSON string escaper round-trips quotes, backslashes and control characters") {
     val s = "a\"b\\c\td\ne\u0001"
     val back = new com.fasterxml.jackson.databind.ObjectMapper()
