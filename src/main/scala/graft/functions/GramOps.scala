@@ -4,8 +4,8 @@ import org.apache.spark.sql.{Column, SparkSession}
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo,
-  GenericInternalRow, UnaryExpression, XXH64}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression,
+  ExpressionInfo, GenericInternalRow, UnaryExpression, XXH64}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext,
   ExprCode, FalseLiteral}
 import org.apache.spark.sql.catalyst.expressions.codegen.Block._
@@ -15,14 +15,16 @@ import org.apache.spark.sql.types.{ArrayType, DataType, IntegerType, LongType,
   StringType, StructField, StructType}
 import org.apache.spark.unsafe.types.UTF8String
 
-/** One-pass token-window kernels for the dedup hot path.
+/** One-pass token-array kernels for the dedup hot path.
   *
-  * The W-gram fingerprints of the exact-substring detector and the
-  * word-trigram shingles were built as `transform(sequence(...), i ->
-  * ...)` over the token array. Higher-order functions are
-  * `CodegenFallback`: each array element runs a lambda through the
-  * interpreted expression walker, and the W-gram form also allocates a
-  * `slice` array per window. [[WGramFps]] and [[Shingles3]] loop over a
+  * The W-gram fingerprints of the exact-substring detector, the
+  * word-trigram shingles and the scrubbed text were built as
+  * higher-order functions over the token array (`transform(sequence(...),
+  * i -> ...)`, `filter(toks, (t, i) -> ...)`). Higher-order functions
+  * are `CodegenFallback`: each array element runs a lambda through the
+  * interpreted expression walker; the W-gram form also allocates a
+  * `slice` array per window, and the scrub scans the cut positions per
+  * token. [[WGramFps]], [[Shingles3]] and [[ScrubText]] loop over a
   * row's token array once, inside whole-stage codegen, with no lambda
   * and no per-window array, and return exactly what the HOF forms
   * returned:
@@ -34,7 +36,13 @@ import org.apache.spark.unsafe.types.UTF8String
   *  - `shingles3(toks)` = `array_distinct(transform(sequence(0, n − 3),
   *    i -> concat_ws(' ', toks[i], toks[i + 1], toks[i + 2])))`: nulls
   *    skipped as `concat_ws` skips them, first occurrences kept in
-  *    order as `array_distinct` keeps them.
+  *    order as `array_distinct` keeps them;
+  *  - `scrub_text(toks, cut)` = `array_join(filter(toks, (t, i) ->
+  *    NOT array_contains(cut, i)), ' ')`: the tokens at the 0-based
+  *    positions not in `cut`, in order, null tokens skipped as
+  *    `array_join` skips them. As there, a null `cut`, or a null in
+  *    `cut`, makes every predicate null and keeps no token, and a null
+  *    `toks` is a null result.
   *
   * A row with fewer than W (3) tokens, or a null array, yields an empty
   * array. Registered like [[VecOps]]: through [[graft.GraftExtensions]]
@@ -94,6 +102,28 @@ object GramOps {
     new GenericArrayData(out.toArray)
   }
 
+  /** The `scrub_text` kernel; called from generated code. */
+  def scrubKernel(toks: ArrayData, cut: ArrayData): UTF8String = {
+    if (toks == null) return null
+    if (cut == null) return UTF8String.EMPTY_UTF8
+    val n = toks.numElements()
+    val drop = new Array[Boolean](n)
+    var j = 0
+    while (j < cut.numElements()) {
+      if (cut.isNullAt(j)) return UTF8String.EMPTY_UTF8
+      val p = cut.getInt(j)
+      if (p >= 0 && p < n) drop(p) = true
+      j += 1
+    }
+    val kept = new Array[UTF8String](n)
+    var k, i = 0
+    while (i < n) {
+      if (!drop(i) && !toks.isNullAt(i)) { kept(k) = toks.getUTF8String(i); k += 1 }
+      i += 1
+    }
+    UTF8String.concatWs(Space, java.util.Arrays.copyOf(kept, k): _*)
+  }
+
   /** A non-null `array` of one kernel over an `array<string>` child:
     * a null child array is an empty result, not a null one. */
   sealed trait TokenKernel extends UnaryExpression {
@@ -148,6 +178,44 @@ object GramOps {
       copy(child = c)
   }
 
+  /** `scrub_text(toks, cut)`: the tokens not at a cut position, joined
+    * by single spaces. */
+  case class ScrubText(left: Expression, right: Expression) extends BinaryExpression {
+    override def dataType: DataType = StringType
+    override def nullable: Boolean = left.nullable
+    override def prettyName: String = "scrub_text"
+
+    override def checkInputDataTypes(): TypeCheckResult =
+      (left.dataType, right.dataType) match {
+        case (ArrayType(StringType, _), ArrayType(IntegerType, _)) =>
+          TypeCheckResult.TypeCheckSuccess
+        case (l, r) => TypeCheckResult.TypeCheckFailure(
+          s"scrub_text needs array<string> and array<int> arguments, got " +
+            s"${l.catalogString} and ${r.catalogString}")
+      }
+
+    override def eval(input: InternalRow): Any =
+      scrubKernel(left.eval(input).asInstanceOf[ArrayData],
+        right.eval(input).asInstanceOf[ArrayData])
+
+    override protected def doGenCode(ctx: CodegenContext,
+                                     ev: ExprCode): ExprCode = {
+      val t = left.genCode(ctx)
+      val c = right.genCode(ctx)
+      ev.copy(code = code"""
+        |${t.code}
+        |${c.code}
+        |UTF8String ${ev.value} = graft.functions.GramOps.scrubKernel(
+        |  ${t.isNull} ? null : ${t.value}, ${c.isNull} ? null : ${c.value});
+        |boolean ${ev.isNull} = ${ev.value} == null;
+        """.stripMargin)
+    }
+
+    override protected def withNewChildrenInternal(l: Expression,
+                                                   r: Expression): ScrubText =
+      copy(left = l, right = r)
+  }
+
   private def wgramBuilder(args: Seq[Expression]): Expression = {
     require(args.length == 2, s"wgram_fps takes 2 arguments, got ${args.length}")
     val w = args(1)
@@ -163,9 +231,15 @@ object GramOps {
     Shingles3(args(0))
   }
 
+  private def scrubBuilder(args: Seq[Expression]): Expression = {
+    require(args.length == 2, s"scrub_text takes 2 arguments, got ${args.length}")
+    ScrubText(args(0), args(1))
+  }
+
   private val builders: Seq[(String, Class[_], Seq[Expression] => Expression)] =
     Seq(("wgram_fps", classOf[WGramFps], wgramBuilder _),
-      ("shingles3", classOf[Shingles3], shinglesBuilder _))
+      ("shingles3", classOf[Shingles3], shinglesBuilder _),
+      ("scrub_text", classOf[ScrubText], scrubBuilder _))
 
   /** Descriptors for `SparkSessionExtensions.injectFunction`. */
   val descriptors: Seq[(FunctionIdentifier, ExpressionInfo,
@@ -187,4 +261,6 @@ object GramOps {
   def wgramFps(toks: Column, w: Int): Column =
     call_function("wgram_fps", toks, lit(w))
   def shingles3(toks: Column): Column = call_function("shingles3", toks)
+  def scrubText(toks: Column, cut: Column): Column =
+    call_function("scrub_text", toks, cut)
 }

@@ -137,7 +137,8 @@ object Dedup {
     * token array minus every position in some [s, s+W), in order. The
     * cover folds into ONE position-set row per affected doc
     * (collect_set dedups overlapping spans in the doc_id shuffle a
-    * distinct would need) and is marked in-row against the token ARRAY.
+    * distinct would need) and is cut in-row from the token ARRAY by the
+    * [[GramOps]] `scrub_text` kernel, one pass per doc.
     * The join is per-DOC — one row per affected doc, never per token:
     * the earlier token-level mark join carried every corpus token
     * through a (doc_id, p) shuffle and died at the 256× rung twice over
@@ -149,6 +150,7 @@ object Dedup {
     * sort-merge — the only fully spillable strategy — and an inner
     * join, since the output IS the affected-doc set. */
   private[graft] def scrub(docs: DataFrame, occurrences: DataFrame): DataFrame = {
+    GramOps.ensureRegistered(docs.sparkSession)
     val covSet = occurrences
       .select(col("doc_id"),
         explode(sequence(col("s"), col("s") + EXSUB_W - 1)).as("p"))
@@ -158,9 +160,7 @@ object Dedup {
       .join(covSet.hint("merge"), Seq("doc_id"), "inner")
       .select(col("doc_id"),
         (size(col("toks")) - size(col("cps"))).cast("long").as("n_kept"),
-        array_join(filter(col("toks"),
-          (t, i) => !array_contains(col("cps"), i)), " ")
-          .as("scrubbed_text"))
+        GramOps.scrubText(col("toks"), col("cps")).as("scrubbed_text"))
   }
 
   private[operators] val SHINGLE_SQL =

@@ -1,13 +1,16 @@
 package graft.pipeline
 
+import java.io.BufferedOutputStream
 import java.nio.charset.StandardCharsets
-import java.nio.file.{Files, Path, Paths}
+import java.nio.file.{Files, Path, Paths, StandardCopyOption}
 import java.security.MessageDigest
 
-import org.apache.spark.Partitioner
+import org.apache.spark.{Partitioner, TaskContext}
 import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Encoders, SparkSession}
+import org.apache.spark.sql.execution.SQLExecution
 import org.apache.spark.sql.functions._
+import org.apache.spark.unsafe.types.UTF8String
 
 /** Reference-parity map/reduce job surface (SURVEY.md §1, §2.A).
   *
@@ -34,6 +37,11 @@ import org.apache.spark.sql.functions._
   * Spark plans its own exchange (with a map-side combine for aggregates)
   * and it sees no particular row order. Only executable reducers
   * (`runPipe`, `pipeReduce`) see a key-sorted stream per partition.
+  *
+  * Reduce task `i` writes its own `part-%05d` file, as a reference
+  * worker does (`worker/__main__.py:237-250`); [[writePartFiles]] states
+  * the protocol. Like the reference's shared output directory, `output`
+  * must be a POSIX path that the driver and every task can reach.
   */
 object MapReduce {
 
@@ -91,16 +99,8 @@ object MapReduce {
   /** Arbitrary-executable mapper (reference A3): stream lines through a
     * shell pipeline, one subprocess per partition (the reference runs one
     * per input file — same contract, better amortization). */
-  def pipeMap(cmd: String): Mapper = { lines =>
-    val spark = lines.sparkSession
-    import spark.implicits._
-    shell(lines.rdd, cmd)
-      .map { line =>
-        val i = line.indexOf('\t')
-        if (i < 0) (line, "") else (line.substring(0, i), line.substring(i + 1))
-      }
-      .toDF("key", "value")
-  }
+  def pipeMap(cmd: String): Mapper = lines =>
+    kvRows(lines.sparkSession, shell(lines.rdd, cmd))
 
   // ---------------------------------------------------------------- reducers
 
@@ -130,15 +130,19 @@ object MapReduce {
     * line sorts before or after all of them. */
   def pipeReduce(cmd: String): Reducer = { kv =>
     val spark = kv.sparkSession
+    val lines = kv.select(concat_ws("\t", col("key"), col("value"))).as(Encoders.STRING)
+    kvRows(spark, reduceRuns(pipeRuns(spark, lines.rdd,
+      spark.sessionState.conf.numShufflePartitions), cmd))
+  }
+
+  /** An executable's output lines as KV rows: the key is the text
+    * before the first tab, the value the rest (empty without a tab). */
+  private def kvRows(spark: SparkSession, lines: RDD[String]): DataFrame = {
     import spark.implicits._
-    val lines = kv.select(concat_ws("\t", col("key"), col("value"))).as[String]
-    reduceRuns(pipeRuns(spark, lines.rdd,
-      spark.sessionState.conf.numShufflePartitions), cmd)
-      .map { line =>
-        val i = line.indexOf('\t')
-        if (i < 0) (line, "") else (line.substring(0, i), line.substring(i + 1))
-      }
-      .toDF("key", "value")
+    lines.map { line =>
+      val i = line.indexOf('\t')
+      if (i < 0) (line, "") else (line.substring(0, i), line.substring(i + 1))
+    }.toDF("key", "value")
   }
 
   /** Stream each partition's lines through `sh -c cmd`, one subprocess
@@ -206,22 +210,15 @@ object MapReduce {
     * Spark splits by bytes rather than whole files — same parallelism
     * contract, and it still scales when one file is 10 TB. */
   def textDirM(spark: SparkSession, dir: String,
-               numMappers: Option[Int]): Dataset[String] = {
-    import spark.implicits._
-    numMappers match {
-      case Some(_) => spark.createDataset(textRddM(spark, dir, numMappers))
-      case None => textDir(spark, dir)
-    }
-  }
+               numMappers: Option[Int]): Dataset[String] =
+    if (numMappers.isEmpty) textDir(spark, dir)
+    else spark.createDataset(textRddM(spark, dir, numMappers))(Encoders.STRING)
 
   /** [[textDirM]] as the RDD an executable mapper pipes: with a mapper
     * count it is `sc.textFile` itself, with no Dataset round trip. */
   private def textRddM(spark: SparkSession, dir: String,
                        numMappers: Option[Int]): RDD[String] =
-    numMappers match {
-      case Some(m) => spark.sparkContext.textFile(dir, m)
-      case None => textDir(spark, dir).rdd
-    }
+    numMappers.fold(textDir(spark, dir).rdd)(spark.sparkContext.textFile(dir, _))
 
   /** Run a job with DataFrame mapper/reducer: the idiomatic scale path.
     * Map, reduce, route, per-partition sort, `part-%05d` output files —
@@ -265,15 +262,15 @@ object MapReduce {
     * the reference pipeline end to end. The mapper output goes through
     * [[pipeRuns]], so where a map task's lines repeat, equal lines cross
     * the shuffle once with their count, and [[reduceRuns]] writes each
-    * line back that many times into the reducer's stdin. */
+    * line back that many times into the reducer's stdin. Each reducer
+    * subprocess's stdout goes straight to its partition's part file
+    * through the [[writePartFiles]] protocol, with no DataFrame between. */
   def runPipe(spark: SparkSession, input: String, output: String,
               mapCmd: String, reduceCmd: String, numReducers: Int,
               numMappers: Option[Int] = None): Unit = {
-    import spark.implicits._
     val mapped = shell(textRddM(spark, input, numMappers), mapCmd)
     val reduced = reduceRuns(pipeRuns(spark, mapped, numReducers), reduceCmd)
-    writePartFiles(reduced.toDF("line"), output, numReducers,
-      preservePartitions = true)
+    publish(reduced.map(UTF8String.fromString), output, numReducers)
   }
 
   /** Estimated heap bytes of distinct lines one map task of
@@ -348,61 +345,76 @@ object MapReduce {
 
   /** Pipe the runs of [[pipeRuns]] through `sh -c cmd`, one subprocess
     * per partition, writing each line as many times as it occurred. */
-  private def reduceRuns(runs: DataFrame, cmd: String): RDD[String] = {
-    val spark = runs.sparkSession
-    import spark.implicits._
-    shell(runs.as[(String, Long)].rdd.mapPartitions { it =>
+  private def reduceRuns(runs: DataFrame, cmd: String): RDD[String] =
+    shell(runs.rdd.mapPartitions { it =>
       new scala.collection.AbstractIterator[String] {
         private var line: String = _
         private var left = 0L
         def hasNext: Boolean = left > 0 || it.hasNext
         def next(): String = {
-          if (left == 0) { val (l, n) = it.next(); line = l; left = n }
+          if (left == 0) { val r = it.next(); line = r.getString(0); left = r.getLong(1) }
           left -= 1
           line
         }
       }
     }, cmd)
-  }
 
-  /** Overwrite-sink with reference file naming: delete + recreate the
-    * output dir (`manager/__main__.py:344-355`), emit exactly R files
-    * named `part-%05d` (`worker/__main__.py:237-250`).
+  /** Overwrite-sink with reference file naming: exactly R files named
+    * `part-%05d` (`worker/__main__.py:237-250`), replacing the whole
+    * output dir (`manager/__main__.py:344-355`). `lines` is one `line`
+    * column; with `preservePartitions` its R partitions are the parts,
+    * otherwise it is first routed and sorted by line.
     *
-    * Spark emits NO file for an empty shuffle partition and names files
-    * `part-NNNNN-<uuid>`; the reference names each reduce output by its
-    * TRUE partition number (`worker/__main__.py:237`: part_num from the
-    * input path). So each surviving file is renamed to its original
-    * partition index (parsed from the Spark file name — sequential
-    * renumbering would shift data into lower-numbered parts whenever an
-    * empty partition precedes a non-empty one), and empty `part-%05d`
-    * files are created only for truly-empty partitions. */
+    * The protocol, shared with [[runPipe]]: reduce task `i` writes its
+    * lines as UTF-8, each followed by `\n` (a null line as an empty
+    * one), to an attempt-unique hidden file in the sibling staging dir
+    * `output.staging`, then renames it atomically to `part-%05d` there
+    * ([[writePart]]). An empty partition writes an empty file; a retried
+    * or speculative attempt renames identical bytes over the same name.
+    * After the job, the driver drops any attempt file a failed attempt
+    * left, deletes the old output dir and renames the staging dir into
+    * its place. The old output survives until the job has succeeded. */
   def writePartFiles(lines: DataFrame, output: String, numReducers: Int,
                      preservePartitions: Boolean = false): Unit = {
-    val tmp = output + ".spark-tmp"
     val df = if (preservePartitions) lines
       else lines.repartition(numReducers, col("line")).sortWithinPartitions("line")
-    df.write.mode("overwrite").text(tmp)
-    val outDir = Paths.get(output)
-    deleteRecursively(outDir)
-    Files.createDirectories(outDir)
-    val stream = Files.list(Paths.get(tmp))
-    val parts =
-      try stream.toArray.map(_.asInstanceOf[Path]) finally stream.close()
-    val written = parts
-      .filter(_.getFileName.toString.startsWith("part-"))
-      .map { p =>
-        // Spark task output: part-NNNNN-<uuid>[.ext]; NNNNN is the
-        // partition index this file's rows were shuffled to.
-        val idx = p.getFileName.toString.stripPrefix("part-")
-          .takeWhile(_.isDigit).toInt
-        Files.move(p, outDir.resolve(f"part-$idx%05d"))
-        idx
-      }.toSet
-    (0 until numReducers).filterNot(written).foreach { i =>
-      Files.createFile(outDir.resolve(f"part-$i%05d"))
+    val qe = df.select(col("line")).queryExecution
+    SQLExecution.withNewExecutionId(qe, Some("writePartFiles")) {
+      publish(qe.toRdd.map(r => if (r.isNullAt(0)) null else r.getUTF8String(0)),
+        output, numReducers)
     }
-    deleteRecursively(Paths.get(tmp))
+  }
+
+  /** The driver side of the [[writePartFiles]] protocol. */
+  private def publish(lines: RDD[UTF8String], output: String,
+                      numReducers: Int): Unit = {
+    require(lines.getNumPartitions == numReducers,
+      s"routed output has ${lines.getNumPartitions} partitions, not numReducers = $numReducers")
+    val outDir = Paths.get(output).toAbsolutePath
+    val staging = Paths.get(s"$outDir.staging")
+    deleteRecursively(staging)
+    Files.createDirectories(staging)
+    val dir = staging.toString
+    lines.sparkContext.runJob(lines, (ctx: TaskContext, it: Iterator[UTF8String]) =>
+      writePart(dir, ctx.partitionId(), ctx.taskAttemptId(), it))
+    staging.toFile.listFiles.filter(_.getName.startsWith(".")).foreach(_.delete())
+    deleteRecursively(outDir)
+    Files.move(staging, outDir, StandardCopyOption.ATOMIC_MOVE)
+  }
+
+  /** The task side of the [[writePartFiles]] protocol: attempt `attempt`
+    * of reduce task `index` writes `lines` into the staging dir. */
+  private[graft] def writePart(staging: String, index: Int, attempt: Long,
+                               lines: Iterator[UTF8String]): Unit = {
+    val dir = Paths.get(staging)
+    val part = f"part-$index%05d"
+    val tmp = dir.resolve(s".$part.$attempt")
+    try {
+      val out = new BufferedOutputStream(Files.newOutputStream(tmp), 1 << 16)
+      try lines.foreach { l => if (l != null) l.writeTo(out); out.write('\n') }
+      finally out.close()
+      Files.move(tmp, dir.resolve(part), StandardCopyOption.ATOMIC_MOVE)
+    } finally Files.deleteIfExists(tmp)
   }
 
   private def deleteRecursively(p: Path): Unit =

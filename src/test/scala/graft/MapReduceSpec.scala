@@ -10,6 +10,7 @@ import org.apache.spark.sql.catalyst.expressions.aggregate.Partial
 import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
 import org.apache.spark.sql.execution.exchange.{REPARTITION_BY_NUM, ShuffleExchangeExec}
 import org.apache.spark.sql.functions._
+import org.apache.spark.unsafe.types.UTF8String
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.pipeline.MapReduce
@@ -172,6 +173,74 @@ class MapReduceSpec extends AnyFunSuite {
       numReducers = 1)
     assert(readParts(out) ==
       Seq("part-00000" -> Seq("\uFFFD\t1", "\uD83D\uDE00\t1")))
+  }
+
+  private def listing(dir: java.nio.file.Path): Seq[String] = {
+    val s = Files.list(dir)
+    try s.toArray.map(_.asInstanceOf[java.nio.file.Path].getFileName.toString)
+      .toSeq.sorted finally s.close()
+  }
+
+  test("a retried attempt of one reduce task leaves one part file, same bytes, no attempt file") {
+    val staging = Files.createTempDirectory("graft-attempt")
+    // a null line is written as an empty one, as Spark's text sink does
+    def attempt(id: Long): Array[Byte] = {
+      MapReduce.writePart(staging.toString, 3, id,
+        Iterator("\u00e9\t1", "", null).map(UTF8String.fromString))
+      Files.readAllBytes(staging.resolve("part-00003"))
+    }
+    val first = attempt(7)
+    val second = attempt(8)
+    assert(listing(staging) == Seq("part-00003"))
+    assert(first.toSeq == "\u00e9\t1\n\n\n".getBytes("UTF-8").toSeq)
+    assert(second.toSeq == first.toSeq)
+  }
+
+  test("the writer replaces an existing output dir whole") {
+    val dir = mkCorpus(Seq(Seq("x y")))
+    val out = Paths.get(Files.createTempDirectory("graft-replace").toString, "out")
+    Files.createDirectories(out.resolve("sub"))
+    Files.write(out.resolve("part-00009"), "stale\n".getBytes)
+    Files.write(out.resolve("sub").resolve("stray"), "junk".getBytes)
+    MapReduce.wordCount(spark, dir, out.toString, numReducers = 2)
+    assert(listing(out) == Seq("part-00000", "part-00001"))
+    assert(listing(out.getParent) == Seq("out"), "staging dir left behind")
+    assert(readParts(out.toString).flatMap(_._2).sorted == Seq("x\t1", "y\t1"))
+  }
+
+  test("a routed frame whose partition count is not R fails before the old output is touched") {
+    val out = Paths.get(Files.createTempDirectory("graft-count").toString, "out")
+    Files.createDirectories(out)
+    Files.write(out.resolve("part-00000"), "old\n".getBytes)
+    val lines = spark.range(6).repartition(3)
+      .select(col("id").cast("string").as("line"))
+    val e = intercept[IllegalArgumentException] {
+      MapReduce.writePartFiles(lines, out.toString, 4, preservePartitions = true)
+    }
+    assert(e.getMessage.contains("3 partitions") &&
+      e.getMessage.contains("numReducers = 4"), e.getMessage)
+    assert(listing(out) == Seq("part-00000"))
+    assert(new String(Files.readAllBytes(out.resolve("part-00000"))) == "old\n")
+  }
+
+  test("run and runPipe write exact UTF-8 bytes: non-ASCII, empty key, CR in a value") {
+    val dir = mkCorpus(Seq(Seq("|empty key", "\u00e9|\u00fc~x", "\u65e5\u672c|\u8a9e")))
+    def part0(out: String) = Files.readAllBytes(Paths.get(out, "part-00000")).toSeq
+    // key before the `|`, value after it with `~` turned into CR
+    val split: MapReduce.Mapper = ls => ls.select(
+      substring_index(col("value"), "|", 1).as("key"),
+      translate(substring_index(col("value"), "|", -1), "~", "\r").as("value"))
+    val runOut = Files.createTempDirectory("graft-utf8").toString + "/out"
+    MapReduce.run(spark, dir, runOut, split, kv => kv, numReducers = 1)
+    assert(part0(runOut) ==
+      "\tempty key\n\u00e9\t\u00fc\rx\n\u65e5\u672c\t\u8a9e\n".getBytes("UTF-8").toSeq)
+    // the reducer emits the CR; RDD.pipe reads its stdout as lines and
+    // ends a line at a lone CR, so the value arrives split in two
+    val pipeOut = Files.createTempDirectory("graft-utf8").toString + "/out"
+    MapReduce.runPipe(spark, dir, pipeOut, mapCmd = "tr '|' '\\t'",
+      reduceCmd = "tr '~' '\\r'", numReducers = 1)
+    assert(part0(pipeOut) ==
+      "\tempty key\n\u00e9\t\u00fc\nx\n\u65e5\u672c\t\u8a9e\n".getBytes("UTF-8").toSeq)
   }
 
   // 240 distinct words: enough that every one of 4 buckets gets keys

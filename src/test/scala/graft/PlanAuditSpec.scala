@@ -332,30 +332,53 @@ class PlanAuditSpec extends AnyFunSuite {
     }
   }
 
+  /** Every node of query `q`'s executed plan after one run, those under
+    * its in-memory scans included. */
+  private def planNodes(q: String): Seq[org.apache.spark.sql.execution.SparkPlan] = {
+    import org.apache.spark.sql.execution.SparkPlan
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+    val h = new AdaptiveSparkPlanHelper {}
+    def nodes(p: SparkPlan): Seq[SparkPlan] = h.collect(p) { case n => n } ++
+      h.collect(p) { case m: InMemoryTableScanExec => m }.flatMap(m =>
+        nodes(m.relation.cachedPlan))
+    val df = SparkEntry.queries(q)(spark, Spec.sfDir)
+    df.collect()
+    nodes(df.queryExecution.executedPlan)
+  }
+
   test("gram and shingle generators of q198 and q71 run one-pass kernels, no lambda") {
     // the W-gram fingerprints and the trigram shingles come from the
     // GramOps kernels; a higher-order function here would put an
     // interpreted lambda back on every array element. q71 persists its
     // shingles, so its generator sits under the in-memory scan.
     import org.apache.spark.sql.catalyst.expressions.LambdaFunction
-    import org.apache.spark.sql.execution.{GenerateExec, SparkPlan}
-    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
-    import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+    import org.apache.spark.sql.execution.GenerateExec
     import graft.functions.GramOps.{Shingles3, WGramFps}
-    val h = new AdaptiveSparkPlanHelper {}
-    def generators(p: SparkPlan): Seq[GenerateExec] =
-      h.collect(p) { case g: GenerateExec => g } ++ h.collect(p) {
-        case m: InMemoryTableScanExec => m }.flatMap(m =>
-          generators(m.relation.cachedPlan))
     try Seq("q198_exact_substring" -> classOf[WGramFps],
       "q71_decontamination" -> classOf[Shingles3]).foreach { case (q, kernel) =>
-      val df = SparkEntry.queries(q)(spark, Spec.sfDir)
-      df.collect()
-      val gens = generators(df.queryExecution.executedPlan)
+      val gens = planNodes(q).collect { case g: GenerateExec => g }
       assert(gens.exists(_.generator.exists(kernel.isInstance)),
-        s"$q: no ${kernel.getSimpleName} generator\n${df.queryExecution.executedPlan}")
+        s"$q: no ${kernel.getSimpleName} generator\n${gens.mkString("\n")}")
       assert(!gens.exists(_.generator.exists(_.isInstanceOf[LambdaFunction])),
-        s"$q: lambda in a generator\n${df.queryExecution.executedPlan}")
+        s"$q: lambda in a generator\n${gens.mkString("\n")}")
+    } finally Session.release(spark)
+  }
+
+  test("scrub projections of q199 and q200 run the one-pass scrub_text kernel, no lambda") {
+    // the scrubbed text is the token array minus the cut positions, in
+    // one pass per doc; `filter(toks, (t, i) -> !array_contains(...))`
+    // ran an interpreted lambda and a linear scan of the cut per token
+    import org.apache.spark.sql.catalyst.expressions.LambdaFunction
+    import org.apache.spark.sql.execution.ProjectExec
+    import graft.functions.GramOps.ScrubText
+    try Seq("q199_substring_scrub", "q200_substring_keep_one").foreach { q =>
+      val projects = planNodes(q).collect { case p: ProjectExec => p }
+      val exprs = projects.flatMap(_.projectList)
+      assert(exprs.exists(_.exists(_.isInstanceOf[ScrubText])),
+        s"$q: no scrub_text projection\n${projects.mkString("\n")}")
+      assert(!exprs.exists(_.exists(_.isInstanceOf[LambdaFunction])),
+        s"$q: lambda in a projection\n${projects.mkString("\n")}")
     } finally Session.release(spark)
   }
 

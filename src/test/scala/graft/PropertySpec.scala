@@ -111,6 +111,38 @@ class PropertySpec extends AnyFunSuite {
     }, n = 20)
   }
 
+  test("scrub_text kernel equals its HOF form on arbitrary token arrays and cuts") {
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.functions._
+    import org.apache.spark.sql.types.{ArrayType, IntegerType, StringType,
+      StructField, StructType}
+    import graft.functions.GramOps
+    val spark = Spec.spark
+    GramOps.ensureRegistered(spark)
+    val token: Gen[String] = Gen.frequency(6 -> Gen.oneOf("a", "b", "ab", ""),
+      3 -> unicodeKey, 1 -> Gen.const(null: String))
+    val toks: Gen[Seq[String]] = Gen.frequency(1 -> Gen.const(null: Seq[String]),
+      8 -> Gen.choose(0, 20).flatMap(k => Gen.listOfN(k, token)))
+    // positions past either end, repeats, and now and then a null
+    val pos: Gen[Integer] = Gen.frequency(20 -> Gen.choose(-2, 22).map(Int.box),
+      1 -> Gen.const(null: Integer))
+    val cut: Gen[Seq[Integer]] = Gen.frequency(1 -> Gen.const(null: Seq[Integer]),
+      8 -> Gen.choose(0, 12).flatMap(k => Gen.listOfN(k, pos)))
+    val schema = StructType(Seq(StructField("toks", ArrayType(StringType)),
+      StructField("cut", ArrayType(IntegerType))))
+    check(Prop.forAll(Gen.listOfN(12, Gen.zip(toks, cut))) { rows =>
+      val data = rows.map { case (t, c) => Row(t, c) }
+      val local = spark.createDataFrame(java.util.Arrays.asList(data: _*), schema)
+      val viaRdd = spark.createDataFrame(spark.sparkContext.parallelize(data, 2), schema)
+      Seq(local, viaRdd).forall { df =>
+        df.select(GramOps.scrubText(col("toks"), col("cut")),
+          array_join(filter(col("toks"),
+            (_, i) => !array_contains(col("cut"), i)), " "))
+          .collect().forall(r => r.get(0) == r.get(1))
+      }
+    }, n = 20)
+  }
+
   test("wcMapPy tokenization is exactly whitespace-run split, empties dropped") {
     import Spec.spark.implicits._
     val lineGen = Gen.listOfN(6, Gen.oneOf("a b", "x\ty", " lead", "trail ",
