@@ -143,19 +143,40 @@ object Tables {
     * above the session's parallelism, the scan already spreads and
     * this is the identity (the 100 TB case: adding a corpus shuffle
     * there would be a pessimization); only a layout-capped scan pays
-    * one hash exchange on `key` to session width. Identical subtrees
-    * in one query reuse the exchange (ReuseExchange). Join and loop
-    * pins (`.repartition(p, key)` on a shuffled frame) are a different
-    * decision and stay at their call sites. */
+    * one hash exchange on `key` to session width ([[pin]]). Identical
+    * subtrees in one query reuse the exchange (ReuseExchange). Join and
+    * loop pins on already-shuffled frames go through [[pin]] too. */
   def spread(s: SparkSession, d: String, name: String, key: String): DataFrame = {
-    val p = s.sparkContext.defaultParallelism
     val df = apply(s, d, name)
     rowGroupCount(s, d, name) match {
-      case Some(n) if n < p =>
-        df.repartition(p, org.apache.spark.sql.functions.col(key))
+      case Some(n) if n < s.sparkContext.defaultParallelism => pin(df, key)
       case _ => df // wide enough, or unknown layout: never add a shuffle
     }
   }
+
+  /** THE join-width rule: `df` hash-partitioned on `key` into the
+    * session's `defaultParallelism` partitions, through an exchange of
+    * origin `REPARTITION_BY_NUM`, which AQE neither coalesces nor
+    * skew-splits. Every pinned frame in engine code goes through here,
+    * for one of two reasons:
+    *   - a CPU-bound fan-out join (q32, q134's [[graft.operators.Dedup]]
+    *     candidate join and verify, q180, q133's wedges): each input row
+    *     fans out to many matches or an `array_intersect`, so the work
+    *     after the shuffle is ~50× its bytes, and AQE's byte-based
+    *     coalescer (a few MB reads as "parallel enough") would pack it
+    *     onto a fraction of the cores (measured: q134's verify 747 ms on
+    *     4 tasks of a 1.7 s query at sf0.1, q133's wedges 910 ms of
+    *     1.5 s on one task);
+    *   - a cached loop invariant that must stay clustered on the loop's
+    *     join key (q69's node set), so every round joins it without a
+    *     re-shuffle.
+    * The cost: task count follows core count, not data, and a hot key
+    * stays in one task, because AQE cannot split a pinned exchange. The
+    * width derives from the session, so a 1000-executor cluster spreads
+    * the same plan over its real core count. */
+  def pin(df: DataFrame, key: String): DataFrame =
+    df.repartition(df.sparkSession.sparkContext.defaultParallelism,
+      org.apache.spark.sql.functions.col(key))
 
   def region(s: SparkSession, d: String): DataFrame    = apply(s, d, "region")
   def nation(s: SparkSession, d: String): DataFrame    = apply(s, d, "nation")

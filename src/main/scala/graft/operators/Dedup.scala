@@ -1123,10 +1123,8 @@ object Dedup {
       // round. Per-round shuffles are unchanged (the groupBy(eb) re-key
       // inherent to the graph); both loop constants stay hash-clustered
       // on their join keys in the cache.
-      val p = s.conf.get("spark.sql.shuffle.partitions").toInt
-      val nodes = Tables.documents(s, d)
-        .select(col("doc_id").as("node"))
-        .repartition(p, col("node"))
+      val nodes = Tables.pin(Tables.documents(s, d)
+        .select(col("doc_id").as("node")), "node")
         .persist()
       var ranks = nodes.withColumn("rank", lit(1000000L))
       (1 to iters).foreach { _ =>
@@ -1420,22 +1418,12 @@ object Dedup {
          |LIMIT 20""".stripMargin) { (s, d) =>
       val shd = shinglesCapped(s, d)
       val sizes = shd.groupBy(col("doc_id")).agg(count(lit(1)).as("n"))
-      // The inverted-index self-join is CPU-bound, not byte-bound: each
-      // input row fans out to ≤ DF_CAP matches, so post-shuffle work is
-      // ~50× the shuffled bytes and AQE's size-based coalescer (which
-      // sees ~1 MB/partition as "parallel enough") packs it onto a
-      // fraction of the cores. Explicit repartition by the join key at
-      // session parallelism pins the join's width — the documented
-      // exception mirroring Session.scala's parallelismFirst note; the
-      // partition count derives from the session, not a literal, so a
-      // 1000-executor cluster spreads the same plan over its real
-      // core count.
-      val p = s.sparkContext.defaultParallelism
-      val a = shd.select(col("doc_id").as("doc_a"), col("shingle"))
-        .repartition(p, col("shingle"))
-      val b = shd.select(col("doc_id").as("doc_b"),
-        col("shingle").as("shingle2"))
-        .repartition(p, col("shingle2"))
+      // the inverted-index self-join fans out to ≤ DF_CAP matches per
+      // input row: a CPU-bound join, width-pinned (Tables.pin)
+      val a = Tables.pin(shd.select(col("doc_id").as("doc_a"), col("shingle")),
+        "shingle")
+      val b = Tables.pin(shd.select(col("doc_id").as("doc_b"),
+        col("shingle").as("shingle2")), "shingle2")
       val inter = a.join(b, col("shingle") === col("shingle2") &&
           col("doc_a") < col("doc_b"))
         .groupBy(col("doc_a"), col("doc_b"))
@@ -1625,11 +1613,9 @@ object Dedup {
     // ceil(9x/10) = (9x+9) DIV 10, ceil(3x/5) = (3x+4) DIV 5), so one
     // chain artifact serves both thresholds, rank-filtered. Per-token
     // fan-out ≤ DF_CAP keeps generation linear in corpus size; the
-    // exact verify intersects the materialized per-doc profile arrays
-    // ([[setsimProfiles]] — no per-query re-fold of the shingle
-    // table). Same CPU-bound-join width pin as q134: fan-out joins
-    // defeat AQE's byte-based coalescing, so the width derives from
-    // session parallelism.
+    // exact verify is q134's ([[profiled]]): it intersects the
+    // materialized per-doc profile arrays, no per-query re-fold of the
+    // shingle table.
     Q("q180_containment_join",
       s"""WITH shd AS ($SHINGLE_CAPPED_SQL),
          |sizes AS (SELECT doc_id, count(*) AS n FROM shd GROUP BY doc_id),
@@ -1643,17 +1629,14 @@ object Dedup {
          |FROM inter JOIN sizes sa ON sa.doc_id = doc_a
          |WHERE sa.n >= 8 AND m * 10 >= sa.n * 9
          |ORDER BY doc_a, doc_b""".stripMargin) { (s, d) =>
-      val p = s.sparkContext.defaultParallelism
       // miss budget ba = sz − ceil(9·sz/10); extended prefix 2·ba + 1
-      val probe = setsimPrefix(s, d)
+      val probe = Tables.pin(setsimPrefix(s, d)
         .filter(col("sz") >= 8 &&
           col("rk") <= lit(2) * (col("sz") - expr("(9 * sz + 9) DIV 10"))
             + 1)
-        .select(col("doc_id").as("doc_a"), col("shingle"), col("sz"))
-        .repartition(p, col("shingle"))
-      val index = shinglesCapped(s, d)
-        .select(col("doc_id").as("doc_b"), col("shingle").as("sh2"))
-        .repartition(p, col("sh2"))
+        .select(col("doc_id").as("doc_a"), col("shingle"), col("sz")), "shingle")
+      val index = Tables.pin(shinglesCapped(s, d)
+        .select(col("doc_id").as("doc_b"), col("shingle").as("sh2")), "sh2")
       val cand = probe.join(index,
           col("shingle") === col("sh2") && col("doc_a") =!= col("doc_b"))
         .groupBy(col("doc_a"), col("doc_b"))
@@ -1662,16 +1645,7 @@ object Dedup {
         // unmatched probes are the only budget spent inside the prefix
         .filter(col("cp") >= col("sa") - expr("(9 * sa + 9) DIV 10") + 1)
         .select(col("doc_a"), col("doc_b"))
-        // verify-width pin (the setsimJoin note): array_intersect per
-        // candidate is CPU-bound, AQE's byte-based coalescer packs it
-        // onto a handful of tasks; width derives from the session
-        .repartition(p, col("doc_a"))
-      val prof = setsimProfiles(s, d)
-      cand
-        .join(prof.select(col("doc_id").as("doc_a"), col("toks").as("ta")),
-          "doc_a")
-        .join(prof.select(col("doc_id").as("doc_b"), col("toks").as("tb")),
-          "doc_b")
+      profiled(s, d, cand)
         .select(col("doc_a"), col("doc_b"),
           size(array_intersect(col("ta"), col("tb"))).cast("long")
             .as("n_inter"),
@@ -1896,11 +1870,6 @@ object Dedup {
   )
 
 
-  /** Exact thresholded set-similarity join at τ = 3/5 over the capped
-    * shingle universe — q134's entire plan (prefix-index candidates,
-    * PPJoin positional + last-match filters, profile-array verify),
-    * exposed unordered so the q177 quality harness can treat it as the
-    * ground-truth pair set without re-stating the plan. */
   /** [[setsimJoin]]'s result as a chain artifact — the ground-truth
     * pair set a nightly dedup-quality audit (q177) keeps next to the
     * corpus snapshot rather than re-deriving per audit run. q134 stays
@@ -1912,6 +1881,11 @@ object Dedup {
     graft.Artifacts.derived(s, d, s"setsim_pairs_df${DF_CAP}_t35")(
       setsimJoin(s, d))
 
+  /** Exact thresholded set-similarity join at τ = 3/5 over the capped
+    * shingle universe — q134's entire plan (prefix-index candidates,
+    * PPJoin positional + last-match filters, profile-array verify),
+    * exposed unordered so the q177 quality harness can treat it as the
+    * ground-truth pair set without re-stating the plan. */
   private[graft] def setsimJoin(s: SparkSession, d: String): DataFrame = {
       // The prefix index is a materialized chain artifact (one
       // rare-first window pass per corpus snapshot, [[setsimPrefix]]);
@@ -1929,16 +1903,10 @@ object Dedup {
       // its true intersection is ≤ the bound and ≥ the requirement),
       // and it also subsumes the τ·sb ≤ sa length filter (rka=rkb=1
       // reduces the bound to min(sa, sb)).
-      // same CPU-bound-join width pin as q32: the candidate join fans
-      // out per shingle, so AQE's byte-based coalescing underestimates
-      // its cost; partition count derives from the session
-      val p = s.sparkContext.defaultParallelism
-      val a = pref.select(col("doc_id").as("doc_a"), col("shingle"),
-        col("rk").as("rka"), col("sz").as("sa"))
-        .repartition(p, col("shingle"))
-      val b = pref.select(col("doc_id").as("doc_b"),
-        col("shingle").as("sh2"), col("rk").as("rkb"), col("sz").as("sb"))
-        .repartition(p, col("sh2"))
+      val a = Tables.pin(pref.select(col("doc_id").as("doc_a"), col("shingle"),
+        col("rk").as("rka"), col("sz").as("sa")), "shingle")
+      val b = Tables.pin(pref.select(col("doc_id").as("doc_b"),
+        col("shingle").as("sh2"), col("rk").as("rkb"), col("sz").as("sb")), "sh2")
       // LAST-MATCH count filter on top: the candidate dedup is a
       // counting aggregate anyway (same shuffle as distinct), and the
       // matched prefix tokens bound the intersection EXACTLY. Both
@@ -1973,34 +1941,7 @@ object Dedup {
           least(col("sa") - col("ma"), col("sb") - col("mb")) >=
           expr("(3 * (sa + sb) + 7) DIV 8"))
         .select(col("doc_a"), col("doc_b"))
-        // verify-width pin (same class as the candidate join above):
-        // the exact verify is array_intersect per candidate — CPU ~50×
-        // its bytes — and AQE's byte-based coalescer otherwise packs
-        // the surviving candidates onto a handful of tasks (measured:
-        // 747 ms on 4 tasks of a 1.7 s query at sf0.1); derived from
-        // session parallelism, not a literal
-        .repartition(p, col("doc_a"))
-      // Exact verify over document PROFILES: one sorted array of
-      // capped shingles per doc (the narrow per-doc sketch a
-      // similarity system keeps next to its index), joined to each
-      // candidate side, intersected with codegen'd array_intersect -
-      // |A / B| directly, |A| and |B| from the array sizes, no
-      // expansion shuffle of the shingle table and no size-table
-      // joins. The profile table is the [[setsimProfiles]] chain
-      // artifact (one narrow row per doc, built once per corpus
-      // snapshot — its groupBy-collect fold of the shingle table is
-      // NOT a per-query cost), small enough that the planner
-      // broadcasts it at bench scale; at cluster scale it
-      // shuffle-joins on doc id - either way the verify cost tracks
-      // the CANDIDATE count, which the positional and last-match
-      // filters keep proportional to the true near-dup volume, not
-      // the prefix-collision volume.
-      val prof = setsimProfiles(s, d)
-      cand
-        .join(prof.select(col("doc_id").as("doc_a"), col("toks").as("ta")),
-          "doc_a")
-        .join(prof.select(col("doc_id").as("doc_b"), col("toks").as("tb")),
-          "doc_b")
+      profiled(s, d, cand)
         .select(col("doc_a"), col("doc_b"),
           size(array_intersect(col("ta"), col("tb"))).cast("long")
             .as("n_inter"),
@@ -2008,5 +1949,28 @@ object Dedup {
         .withColumn("n_union", col("n_ab") - col("n_inter"))
         .filter(col("n_inter") * 5 >= col("n_union") * 3)
         .select(col("doc_a"), col("doc_b"), col("n_inter"), col("n_union"))
+  }
+
+  /** The exact verify's input for the set-similarity candidate pairs
+    * `cand` (`doc_a`, `doc_b`) of q134 and q180: `cand` width-pinned on
+    * `doc_a` ([[Tables.pin]]: the `array_intersect` per candidate is
+    * CPU ~50× its bytes), with each side's document PROFILE attached as
+    * `ta`/`tb` — one sorted array of capped shingles per doc (the narrow
+    * per-doc sketch a similarity system keeps next to its index), so
+    * the caller intersects with codegen'd `array_intersect`, no
+    * expansion shuffle of the shingle table and no size-table joins.
+    * The profile table is the [[setsimProfiles]] chain artifact (one
+    * narrow row per doc, built once per corpus snapshot — its
+    * groupBy-collect fold of the shingle table is NOT a per-query
+    * cost), small enough that the planner broadcasts it at bench
+    * scale; at cluster scale it shuffle-joins on doc id — either way
+    * the verify cost tracks the CANDIDATE count, which the prefix
+    * filters keep proportional to the true near-dup volume, not the
+    * prefix-collision volume. */
+  private def profiled(s: SparkSession, d: String, cand: DataFrame): DataFrame = {
+    val prof = setsimProfiles(s, d)
+    Tables.pin(cand, "doc_a")
+      .join(prof.select(col("doc_id").as("doc_a"), col("toks").as("ta")), "doc_a")
+      .join(prof.select(col("doc_id").as("doc_b"), col("toks").as("tb")), "doc_b")
   }
 }

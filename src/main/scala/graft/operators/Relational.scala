@@ -1980,15 +1980,10 @@ object Relational {
     val ed = if (forView) copurchaseEdgesPlan(s, d) else copurchaseEdges(s, d)
     val e = ed.select(col("u"), col("v"))
     val lowerFirst = ed.select(col("s"), col("t"))
-    // Wedge-width pin: at bench scale the edge artifact broadcasts, so
-    // the whole wedge+close enumeration (the CPU-bound O(m√m) fan-out)
-    // would run on the artifact scan's task count — ONE task for a
-    // single-file artifact (measured 910 ms of a 1.5 s query at
-    // sf0.1). Hash-repartition the probe side by the wedge key at
-    // session width; at cluster scale the join shuffles on s anyway,
-    // so the exchange is reused, not added.
-    val p = s.sparkContext.defaultParallelism
-    val wedges = lowerFirst.repartition(p, col("s"))
+    // the O(m√m) wedge+close fan-out, width-pinned on the wedge key
+    // (Tables.pin); at cluster scale the join shuffles on s anyway, so
+    // the exchange is reused, not added
+    val wedges = Tables.pin(lowerFirst, "s")
       .join(lowerFirst.select(col("s").as("s2"), col("t").as("t2")),
         col("s") === col("s2") && col("t") < col("t2"))
       .select(col("s"), col("t").as("t1"), col("t2"))

@@ -204,18 +204,12 @@ object MapReduce {
 
   // ------------------------------------------------------------------- jobs
 
-  /** Directory source with an explicit map-task-count floor, mirroring
-    * the reference job spec's `num_mappers`
-    * (`manager/__main__.py:181-192`, round-robin file split `:330-334`).
-    * Spark splits by bytes rather than whole files — same parallelism
-    * contract, and it still scales when one file is 10 TB. */
-  def textDirM(spark: SparkSession, dir: String,
-               numMappers: Option[Int]): Dataset[String] =
-    if (numMappers.isEmpty) textDir(spark, dir)
-    else spark.createDataset(textRddM(spark, dir, numMappers))(Encoders.STRING)
-
-  /** [[textDirM]] as the RDD an executable mapper pipes: with a mapper
-    * count it is `sc.textFile` itself, with no Dataset round trip. */
+  /** The lines an executable mapper pipes. With a map-task-count floor,
+    * mirroring the reference job spec's `num_mappers`
+    * (`manager/__main__.py:181-192`, round-robin file split `:330-334`),
+    * it is `sc.textFile` itself. Spark splits by bytes rather than whole
+    * files — same parallelism contract, and it still scales when one
+    * file is 10 TB. */
   private def textRddM(spark: SparkSession, dir: String,
                        numMappers: Option[Int]): RDD[String] =
     numMappers.fold(textDir(spark, dir).rdd)(spark.sparkContext.textFile(dir, _))
@@ -223,12 +217,11 @@ object MapReduce {
   /** Run a job with DataFrame mapper/reducer: the idiomatic scale path.
     * Map, reduce, route, per-partition sort, `part-%05d` output files —
     * the reference's whole lifecycle (SURVEY §3) as a single Spark
-    * action. */
+    * action. Spark sizes the map side from the input bytes. */
   def run(spark: SparkSession, input: String, output: String,
-          mapper: Mapper, reducer: Reducer, numReducers: Int,
-          numMappers: Option[Int] = None): Unit =
-    writePartFiles(runLines(spark, input, mapper, reducer, numReducers,
-      numMappers), output, numReducers, preservePartitions = true)
+          mapper: Mapper, reducer: Reducer, numReducers: Int): Unit =
+    writePartFiles(runLines(spark, input, mapper, reducer, numReducers),
+      output, numReducers)
 
   /** The plan of `run` up to its sink: one `line` column in R
     * partitions. The reducer applies straight to the mapper output, so
@@ -243,9 +236,8 @@ object MapReduce {
     * aggregate's exchange, down to a single part file. */
   private[graft] def runLines(spark: SparkSession, input: String,
                               mapper: Mapper, reducer: Reducer,
-                              numReducers: Int,
-                              numMappers: Option[Int] = None): DataFrame = {
-    val out = reducer(mapper(textDirM(spark, input, numMappers)))
+                              numReducers: Int): DataFrame = {
+    val out = reducer(mapper(textDir(spark, input)))
     def routed(df: DataFrame, by: String) =
       df.repartitionById(numReducers, pmod(hash(col(by)), lit(numReducers)))
     if (out.columns.contains("key"))
@@ -362,8 +354,9 @@ object MapReduce {
   /** Overwrite-sink with reference file naming: exactly R files named
     * `part-%05d` (`worker/__main__.py:237-250`), replacing the whole
     * output dir (`manager/__main__.py:344-355`). `lines` is one `line`
-    * column; with `preservePartitions` its R partitions are the parts,
-    * otherwise it is first routed and sorted by line.
+    * column, already routed and sorted ([[runLines]]): its R partitions
+    * are the parts, and any other partition count fails before the old
+    * output is touched.
     *
     * The protocol, shared with [[runPipe]]: reduce task `i` writes its
     * lines as UTF-8, each followed by `\n` (a null line as an empty
@@ -374,11 +367,8 @@ object MapReduce {
     * After the job, the driver drops any attempt file a failed attempt
     * left, deletes the old output dir and renames the staging dir into
     * its place. The old output survives until the job has succeeded. */
-  def writePartFiles(lines: DataFrame, output: String, numReducers: Int,
-                     preservePartitions: Boolean = false): Unit = {
-    val df = if (preservePartitions) lines
-      else lines.repartition(numReducers, col("line")).sortWithinPartitions("line")
-    val qe = df.select(col("line")).queryExecution
+  def writePartFiles(lines: DataFrame, output: String, numReducers: Int): Unit = {
+    val qe = lines.select(col("line")).queryExecution
     SQLExecution.withNewExecutionId(qe, Some("writePartFiles")) {
       publish(qe.toRdd.map(r => if (r.isNullAt(0)) null else r.getUTF8String(0)),
         output, numReducers)

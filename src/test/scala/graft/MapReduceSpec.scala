@@ -215,7 +215,7 @@ class MapReduceSpec extends AnyFunSuite {
     val lines = spark.range(6).repartition(3)
       .select(col("id").cast("string").as("line"))
     val e = intercept[IllegalArgumentException] {
-      MapReduce.writePartFiles(lines, out.toString, 4, preservePartitions = true)
+      MapReduce.writePartFiles(lines, out.toString, 4)
     }
     assert(e.getMessage.contains("3 partitions") &&
       e.getMessage.contains("numReducers = 4"), e.getMessage)

@@ -220,8 +220,8 @@ class PlanAuditSpec extends AnyFunSuite {
 
   test("q45's fixture has no AQE-visible skew: the salted path is exercised by construction, not need") {
     // VERDICT-r14 #6 adjudication: does AQE's native skew split handle
-    // the same join q45 hand-salts? Measured (tools/SkewAb, 4×,
-    // SURVEY §21): plain+AQE 0.57 s vs salted 1.79 s with
+    // the same join q45 hand-salts? Measured once (4×, SURVEY §21.7;
+    // this test guards the premise): plain+AQE 0.57 s vs salted 1.79 s with
     // `aqe_skew_fired=false` — lineitem's ≤7 rows per orderkey is
     // UNIFORM at partition granularity, so AQE (correctly) never
     // splits and salting is pure overhead on this data. The engine's
@@ -332,6 +332,12 @@ class PlanAuditSpec extends AnyFunSuite {
     }
   }
 
+  /** A query's physical plan before AQE re-plans any stage. */
+  private def initialPlan(plan: org.apache.spark.sql.execution.SparkPlan) = plan match {
+    case a: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec => a.initialPlan
+    case other => other
+  }
+
   /** Every node of query `q`'s executed plan after one run, those under
     * its in-memory scans included. */
   private def planNodes(q: String): Seq[org.apache.spark.sql.execution.SparkPlan] = {
@@ -391,7 +397,6 @@ class PlanAuditSpec extends AnyFunSuite {
     import org.apache.spark.sql.catalyst.expressions.Attribute
     import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
     import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
-    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
     import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
     import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
     val p = spark.sparkContext.defaultParallelism
@@ -400,17 +405,13 @@ class PlanAuditSpec extends AnyFunSuite {
       Tables(spark, Spec.sfDir, t).repartition(p)
         .write.mode("overwrite").parquet(s"$wide/$t.parquet")
     }
-    def initial(plan: SparkPlan): SparkPlan = plan match {
-      case a: AdaptiveSparkPlanExec => a.initialPlan
-      case other => other
-    }
     def scansOf(plan: SparkPlan, table: String) = plan.collect {
       case f: FileSourceScanExec
           if f.relation.location.rootPaths.exists(_.getName == s"$table.parquet") => f }
     // the exchanges between `table`'s scan and its first consumer, in
     // the query plan or in any persisted frame under it
     def scanExchanges(plan: SparkPlan, table: String): Seq[ShuffleExchangeExec] = {
-      val init = initial(plan)
+      val init = initialPlan(plan)
       init.collect { case e: ShuffleExchangeExec if scansOf(e, table).nonEmpty => e } ++
         init.collect { case m: InMemoryTableScanExec => m.relation.cachedPlan }
           .distinct.flatMap(scanExchanges(_, table))
@@ -432,6 +433,42 @@ class PlanAuditSpec extends AnyFunSuite {
       val plan = onWide.queryExecution.executedPlan
       assert(scanExchanges(plan, table).isEmpty, s"$q: exchange on a wide scan\n$plan")
       assert(onWide.collect().toSet == narrow.collect().toSet, q)
+    } finally Session.release(spark)
+  }
+
+  test("join and loop pins go through Tables.pin: hashpartitioning(key, defaultParallelism) on the pinned key (q32, q134, q180, q133, q69)") {
+    // These queries read artifacts, not fixture scans, so every
+    // REPARTITION_BY_NUM exchange in their plans is a Tables.pin: the
+    // fan-out join pins of q32/q134/q180/q133 in the query plan, and
+    // q69's loop-invariant node set inside its cached relation. A
+    // dropped, re-keyed or re-sized pin changes the list.
+    import org.apache.spark.sql.catalyst.expressions.Attribute
+    import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
+    import org.apache.spark.sql.execution.SparkPlan
+    import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+    import org.apache.spark.sql.execution.exchange.{REPARTITION_BY_NUM, ShuffleExchangeExec}
+    val p = spark.sparkContext.defaultParallelism
+    // the pins of `plan` and of the cached relations under it, each as
+    // its key's name, or the whole partitioning if it is not a hash of
+    // one key into p partitions
+    def pins(plan: SparkPlan, prefix: String = ""): Seq[String] = {
+      val init = initialPlan(plan)
+      init.collect { case e: ShuffleExchangeExec if e.shuffleOrigin == REPARTITION_BY_NUM =>
+        e.outputPartitioning match {
+          case HashPartitioning(Seq(k: Attribute), `p`) => prefix + k.name
+          case other => other.toString
+        }
+      } ++ init.collect { case m: InMemoryTableScanExec => m.relation.cachedPlan }
+        .distinct.flatMap(pins(_, "cached:"))
+    }
+    try Seq(
+      "q32_ngram_jaccard" -> Seq("shingle", "shingle2"),
+      "q134_setsim_join" -> Seq("doc_a", "sh2", "shingle"),
+      "q180_containment_join" -> Seq("doc_a", "sh2", "shingle"),
+      "q133_triangle_parts" -> Seq("s"),
+      "q69_pagerank" -> Seq("cached:node")).foreach { case (q, keys) =>
+      val plan = SparkEntry.queries(q)(spark, Spec.sfDir).queryExecution.executedPlan
+      assert(pins(plan).sorted == keys, s"$q\n$plan")
     } finally Session.release(spark)
   }
 
