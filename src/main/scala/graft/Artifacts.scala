@@ -67,14 +67,6 @@ object Artifacts {
     md.digest().take(8).map(b => f"$b%02x").mkString
   }
 
-  /** Reader-plan cache, keyed per (session, final artifact path): the
-    * same listing/footer dedup [[Tables]] applies to the fixtures. The
-    * path embeds the fixture fingerprint, so a regenerated fixture maps
-    * to a different key and naturally misses. */
-  private val dfCache =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), DataFrame]()
-  Caches.registerMap(dfCache)(_._1)
-
   /** Per-path build locks (JVM-local; cross-JVM races resolve at the
     * atomic rename). */
   private val locks =
@@ -88,12 +80,6 @@ object Artifacts {
   private[graft] val buildCount =
     new java.util.concurrent.atomic.AtomicLong()
 
-  /** The artifact named `name` derived from fixture `d`: read it if the
-    * current fixture fingerprint already has it, otherwise run `build`
-    * and materialize it first. `name` must embed every derivation
-    * parameter that is not a function of the fixture bytes (e.g. the
-    * LSH band-row count rides in the name so a corpus-count-driven
-    * layout change can never alias). */
   private def slugOf(d: String): String = {
     // The readable sanitization alone is NOT injective: fixture paths
     // differing only in non-[A-Za-z0-9._-] characters ("/data/sf 1" vs
@@ -108,69 +94,61 @@ object Artifacts {
     s"$readable.$pathHash"
   }
 
-  private def pathOf(d: String, name: String): Path =
-    root.resolve(s"${slugOf(d)}-${fingerprint(d)}").resolve(name)
-
   /** The artifact tree for fixture `d` at its CURRENT fingerprint
     * (test observability — FixturesSpec pins the retention GC). */
   private[graft] def dirOf(d: String): Path =
     root.resolve(s"${slugOf(d)}-${fingerprint(d)}")
 
+  private def pathOf(d: String, name: String): Path = dirOf(d).resolve(name)
+
   /** The artifact if (and only if) it is already materialized for the
     * CURRENT fixture fingerprint — never builds, never runs a job. View
     * registration uses this to stay job-free: present → the view reads
     * the artifact; absent → the caller falls back to a lazy derivation
-    * plan. */
-  def existing(s: SparkSession, d: String, name: String): Option[DataFrame] = {
-    val path = pathOf(d, name)
-    if (!Files.exists(path)) None
-    else {
-      val key = (s, path.toString)
-      val hit = dfCache.get(key)
-      if (hit != null) Some(hit)
-      else {
-        val df = s.read.parquet(path.toString)
-        val prev = dfCache.putIfAbsent(key, df)
-        Some(if (prev != null) prev else df)
-      }
-    }
-  }
+    * plan. Its reader plan is memoized under the same key as
+    * [[derived]]'s. */
+  def existing(s: SparkSession, d: String, name: String): Option[DataFrame] =
+    Option(Caches.memo(s, d, s"artifact:$name") {
+      val path = pathOf(d, name)
+      if (Files.exists(path)) s.read.parquet(path.toString) else null
+    })
 
+  /** The artifact named `name` derived from fixture `d`: read it if the
+    * current fixture fingerprint already has it, otherwise run `build`
+    * and materialize it first. `name` must embed every derivation
+    * parameter that is not a function of the fixture bytes (e.g. the
+    * LSH band-row count rides in the name so a corpus-count-driven
+    * layout change can never alias). */
   def derived(s: SparkSession, d: String, name: String)
-             (build: => DataFrame): DataFrame = {
-    val path = pathOf(d, name)
-    val dir = path.getParent
-    val key = (s, path.toString)
-    val hit = dfCache.get(key)
-    if (hit != null) return hit
-    Caches.sweep() // miss path: drop stopped sessions' plans first
-    val lock = locks.computeIfAbsent(path.toString, _ => new Object)
-    lock.synchronized {
-      if (!Files.exists(path)) {
-        Files.createDirectories(dir)
-        val tmp = dir.resolve(
-          s"$name.tmp-${java.util.UUID.randomUUID().toString.take(8)}")
-        build.write.parquet(tmp.toString)
-        try {
-          Files.move(tmp, path, StandardCopyOption.ATOMIC_MOVE)
-          // count only AFTER the move: a builder that loses the publish
-          // race below did not "materialize and rename a tree into
-          // place", and the bench *_built counts must match that
-          // documented semantics exactly
-          buildCount.incrementAndGet()
-        } catch {
-          case _: java.nio.file.FileAlreadyExistsException |
-               _: java.nio.file.AccessDeniedException =>
-            // another JVM won the race; its artifact is byte-equivalent
-            deleteRecursively(tmp)
+             (build: => DataFrame): DataFrame =
+    Caches.memo(s, d, s"artifact:$name") {
+      val path = pathOf(d, name)
+      val dir = path.getParent
+      val lock = locks.computeIfAbsent(path.toString, _ => new Object)
+      lock.synchronized {
+        if (!Files.exists(path)) {
+          Files.createDirectories(dir)
+          val tmp = dir.resolve(
+            s"$name.tmp-${java.util.UUID.randomUUID().toString.take(8)}")
+          build.write.parquet(tmp.toString)
+          try {
+            Files.move(tmp, path, StandardCopyOption.ATOMIC_MOVE)
+            // count only AFTER the move: a builder that loses the publish
+            // race below did not "materialize and rename a tree into
+            // place", and the bench *_built counts must match that
+            // documented semantics exactly
+            buildCount.incrementAndGet()
+          } catch {
+            case _: java.nio.file.FileAlreadyExistsException |
+                 _: java.nio.file.AccessDeniedException =>
+              // another JVM won the race; its artifact is byte-equivalent
+              deleteRecursively(tmp)
+          }
+          reapStale(d)
         }
-        reapStale(d)
       }
+      s.read.parquet(path.toString)
     }
-    val df = s.read.parquet(path.toString)
-    val prev = dfCache.putIfAbsent(key, df)
-    if (prev != null) prev else df
-  }
 
   /** Retention GC: delete SUPERSEDED artifact trees of fixture `d` —
     * sibling directories under the artifact root carrying `d`'s slug
@@ -211,20 +189,10 @@ object Artifacts {
           // TTL-old one is genuinely orphaned, not in-flight); without
           // this clause they never match the slug filter again and leak
           // forever — the exact orphan class this GC exists to
-          // eliminate. The legacy clause reclaims THIS fixture's trees
-          // from before the slug carried the path hash (same raw path →
-          // same owner, so reaping them is as safe as the current
-          // format).
-          val legacy = slug.substring(0, slug.lastIndexOf('.'))
+          // eliminate.
           n.startsWith(".reap-") ||
             (n != current && n.startsWith(s"$slug-") &&
-              n.stripPrefix(s"$slug-").matches("[0-9a-f]{16}")) ||
-            (n.startsWith(s"$legacy-") &&
-              n.stripPrefix(s"$legacy-").matches("[0-9a-f]{16}") &&
-              // never a CURRENT-format tree (<name>.<6hex>-<16hex>):
-              // guards the contrived case where this fixture's readable
-              // prefix ends in exactly another fixture's slug+path-hash
-              !n.matches(".*\\.[0-9a-f]{6}-[0-9a-f]{16}"))
+              n.stripPrefix(s"$slug-").matches("[0-9a-f]{16}"))
         }
         .filter(p => Files.getLastModifiedTime(p).toMillis < cutoff)
         .toSeq

@@ -1,64 +1,77 @@
 package graft
 
-import java.util.concurrent.{ConcurrentHashMap, CopyOnWriteArrayList}
+import java.util.concurrent.ConcurrentHashMap
 
 import org.apache.spark.sql.SparkSession
 
-/** Session-lifecycle hygiene for the JVM-global plan caches.
+/** The one memo for state derived from a fixture directory.
   *
-  * [[Tables]], [[Artifacts]] and [[Graft]] memoize analyzed DataFrames
-  * keyed on the OWNING [[SparkSession]] instance — correct (a stopped
-  * session's plans must never serve a new one) but, uncollected, a
-  * leak: a DataFrame strongly references its session, so a long-lived
-  * JVM that builds and stops many sessions (every test suite; a
-  * notebook service recycling per-tenant sessions) pins every dead
-  * session's whole plan graph for the process lifetime. Weak-keyed
-  * maps don't help — the VALUE (the DataFrame) references the key (its
-  * session), defeating weak-reference collection by construction — so
-  * the caches register a sweeper here instead, and [[sweep]] drops
-  * every entry whose owning session's SparkContext has stopped.
+  * Every fixture-derived value the engine keeps across calls — table
+  * and artifact reader plans ([[Tables]], [[Artifacts]]), footer counts
+  * ([[Tables.rowCount]]), SQL view plans ([[Graft]]) and the written-once
+  * scratch dirs of q118/q171/q175/q194 — lives in ONE map keyed
+  * `(session, dir, fingerprint(dir), key)`:
+  *   - the fingerprint ([[Artifacts.fingerprint]], a stat walk) means a
+  *     fixture regenerated in place in a live JVM misses and rebuilds
+  *     instead of serving state derived from the old bytes (the r7
+  *     incident class);
+  *   - the dir keeps two fixture copies with equal fingerprints (same
+  *     relative paths, sizes and mtimes) apart;
+  *   - the session means a stopped session's plans never serve a new
+  *     one. Uncollected, that key is a leak: a DataFrame strongly
+  *     references its session, so a JVM that builds and stops many
+  *     sessions (every test suite; a notebook service recycling
+  *     per-tenant sessions) would pin every dead session's plan graph.
+  *     Weak keys don't help — the VALUE references the key — so
+  *     [[sweep]] drops every entry whose session's SparkContext has
+  *     stopped, at session construction ([[Session.build]]) and on
+  *     every memo MISS. The map holds at most a few hundred entries,
+  *     one `isStopped` check each: microseconds against the build a
+  *     miss precedes.
   *
-  * Sweeps run at the natural boundaries where cache content changes
-  * anyway: session construction ([[Session.build]]) and every cache
-  * MISS (the hit path stays O(1)). The maps hold at most a few hundred
-  * entries — one stat-free `isStopped` check each — so a sweep is
-  * microseconds against the plan build it precedes.
+  * Callers prefix `key` with their own namespace (`table:`, `rows:`,
+  * `rowgroups:`, `artifact:`, `view:`, `dir:`) so names never collide.
   */
 object Caches {
 
-  private final case class Registrant(
-      doSweep: () => Unit, countFor: SparkSession => Int)
+  private val memos =
+    new ConcurrentHashMap[(SparkSession, String, String, String), AnyRef]()
 
-  private val registrants = new CopyOnWriteArrayList[Registrant]()
+  /** The value memoized for `key` on fixture dir `d` in session `s`,
+    * built by `mk` on a miss. The hit path costs one fingerprint stat
+    * walk and one map lookup. A `null` from `mk` is returned and not
+    * memoized (an artifact not yet built stays a miss).
+    *
+    * Get-then-putIfAbsent rather than computeIfAbsent: builds re-enter
+    * the memo (the typed events loader reads the raw table, an artifact
+    * build reads fixture tables, a view build runs a whole query) and a
+    * nested miss sweeps, i.e. removes entries of THIS map — mutating a
+    * ConcurrentHashMap from inside its own computeIfAbsent is forbidden
+    * and can deadlock or corrupt a bin. A lost race merely builds the
+    * same value twice; the first one published wins. */
+  def memo[V <: AnyRef](s: SparkSession, d: String, key: String)(mk: => V): V = {
+    val k = (s, d, Artifacts.fingerprint(d), key)
+    val hit = memos.get(k)
+    if (hit != null) hit.asInstanceOf[V]
+    else {
+      sweep()
+      val v = mk
+      if (v == null) v
+      else {
+        val prev = memos.putIfAbsent(k, v)
+        if (prev != null) prev.asInstanceOf[V] else v
+      }
+    }
+  }
 
-  /** Register a session-keyed cache map; `owner` extracts the owning
-    * session from a key. Called once per cache at class init. */
-  private[graft] def registerMap[K <: AnyRef, V](m: ConcurrentHashMap[K, V])(
-      owner: K => SparkSession): Unit =
-    registrants.add(Registrant(
-      () => {
-        val it = m.keySet().iterator()
-        while (it.hasNext) {
-          val k = it.next()
-          if (owner(k).sparkContext.isStopped) it.remove()
-        }
-      },
-      s => {
-        var n = 0
-        val it = m.keySet().iterator()
-        while (it.hasNext) if (owner(it.next()) eq s) n += 1
-        n
-      }))
+  /** Drop every memoized value owned by a stopped session. */
+  def sweep(): Unit = memos.keySet().removeIf(_._1.sparkContext.isStopped)
 
-  /** Drop every cached plan owned by a stopped session, in all
-    * registered caches. */
-  def sweep(): Unit = registrants.forEach(_.doSweep())
-
-  /** Entries owned by `s` across all registered caches (test
-    * observability — CacheHygieneSpec pins stop ⇒ sweep ⇒ 0). */
+  /** Entries owned by `s` (test observability — CacheHygieneSpec pins
+    * stop ⇒ sweep ⇒ 0). */
   private[graft] def entriesFor(s: SparkSession): Int = {
     var n = 0
-    registrants.forEach(r => n += r.countFor(s))
+    memos.keySet().forEach(k => if (k._1 eq s) n += 1)
     n
   }
 }

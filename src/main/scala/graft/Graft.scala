@@ -29,35 +29,6 @@ object Graft {
     * the q77 stage chain the fixture events actually contain. */
   val DefaultFunnel: Seq[String] = Seq("view", "click", "purchase")
 
-  /** Memoized view plans, keyed (session, fixture fingerprint, view):
-    * a long-lived SQL service re-registers on refresh, and view plans
-    * whose builders carry lazy `persist()` marks (q150's KMV sketches)
-    * would otherwise register FRESH CacheManager entries per call —
-    * unbounded growth, the leak CacheHygieneSpec pins. Re-registering
-    * the SAME DataFrame is a no-op on the cache; the fingerprint key
-    * drops memoized plans when a fixture is regenerated in place. */
-  private val viewPlanCache = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String, String), org.apache.spark.sql.DataFrame]()
-  Caches.registerMap(viewPlanCache)(_._1)
-  private def memoView(spark: SparkSession, sfDir: String, view: String)(
-      build: => org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
-    val k = (spark, Artifacts.fingerprint(sfDir), view)
-    val hit = viewPlanCache.get(k)
-    if (hit != null) hit
-    else {
-      Caches.sweep() // miss path: drop stopped sessions' plans first
-      // Build OUTSIDE any CHM compute (the Tables/Artifacts pattern):
-      // a view build's nested cache misses call Caches.sweep(), which
-      // iterator.remove()s from THIS map — mutating other mappings from
-      // within computeIfAbsent is forbidden by ConcurrentHashMap and
-      // can corrupt a bin when a session stops concurrently. A lost
-      // race just re-registers the winner's identical lazy plan.
-      val df = build
-      val prev = viewPlanCache.putIfAbsent(k, df)
-      if (prev != null) prev else df
-    }
-  }
-
   /** Register fixture tables, derived operator views, and scalar
     * functions on `spark` for SQL callers reading from `sfDir`.
     * Idempotent; safe to call on caller-built sessions. */
@@ -187,7 +158,12 @@ object Graft {
     // possible between what SQL callers read and what the gate
     // verifies. All of these build without running a job (the graph
     // operators, whose banding derives from a corpus rowCount at plan
-    // build, stay Scala-side for that reason).
+    // build, stay Scala-side for that reason). The plans are memoized: a
+    // long-lived SQL service re-registers on refresh, and view plans
+    // whose builders carry lazy `persist()` marks (q150's KMV sketches)
+    // would otherwise register FRESH CacheManager entries per call —
+    // unbounded growth, the leak CacheHygieneSpec pins. Re-registering
+    // the SAME DataFrame is a no-op on the cache.
     Seq(
       "scd2_user_state" -> "q145_scd2_history",
       "purchase_attribution" -> "q146_temporal_join",
@@ -199,8 +175,8 @@ object Graft {
       "filter_attrition" -> "q157_filter_attrition",
       "epoch_sample" -> "q158_epoch_sample"
     ).foreach { case (view, q) =>
-      memoView(spark, sfDir, view)(SparkEntry.queries(q)(spark, sfDir))
-        .createOrReplaceTempView(view)
+      Caches.memo(spark, sfDir, s"view:$view")(
+        SparkEntry.queries(q)(spark, sfDir)).createOrReplaceTempView(view)
     }
   }
 

@@ -16,7 +16,8 @@ object Tables {
     "region", "nation", "customer", "supplier", "part",
     "orders", "lineitem", "events", "documents", "embeddings")
 
-  /** Analyzed-DataFrame cache, keyed per (session, dir, table).
+  /** A fixture table's reader plan, memoized per (session, dir,
+    * fingerprint, table) in [[Caches.memo]].
     *
     * `spark.read.parquet` re-lists the path and re-reads parquet footers
     * on EVERY call — pure driver-side latency that a 142-query bench
@@ -26,60 +27,28 @@ object Tables {
     * analyzes/optimizes each enclosing query from scratch; only the
     * file-listing + schema-inference work is shared. This is the local
     * analog of a real deployment's catalog metastore, where table schema
-    * and file manifests are resolved once, not per query.
-    *
-    * A DataFrame snapshots its file listing at creation, so the key
-    * carries the fixture-dir content fingerprint (a stat walk,
-    * [[Artifacts.fingerprint]]): a fixture regenerated in place in a
-    * live JVM misses the cache and re-lists instead of reading a stale
-    * snapshot. Keyed on the session instance so a stopped session's
-    * plans are never handed to a new one.
+    * and file manifests are resolved once, not per query. A DataFrame
+    * snapshots its file listing at creation; the memo's fingerprint key
+    * makes a fixture regenerated in place re-list instead.
     */
-  private val dfCache =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String, String, String), DataFrame]()
-  Caches.registerMap(dfCache)(_._1)
-
-  // get-then-putIfAbsent rather than computeIfAbsent: the events
-  // loader re-enters this cache for the raw read while building the
-  // typed entry, and a reentrant computeIfAbsent deadlocks/throws on a
-  // concurrent resize. A lost race merely builds the same immutable
-  // plan twice.
-  private def cached(s: SparkSession, d: String, key: String)
-                    (mk: => DataFrame): DataFrame = {
-    val k = (s, d, Artifacts.fingerprint(d), key)
-    val hit = dfCache.get(k)
-    if (hit != null) hit
-    else {
-      Caches.sweep() // miss path: drop stopped sessions' plans first
-      val v = mk
-      val prev = dfCache.putIfAbsent(k, v)
-      if (prev != null) prev else v
-    }
-  }
-
   def apply(spark: SparkSession, dir: String, name: String): DataFrame =
-    cached(spark, dir, name)(spark.read.parquet(s"$dir/$name.parquet"))
+    Caches.memo(spark, dir, s"table:$name")(
+      spark.read.parquet(s"$dir/$name.parquet"))
 
-  /** Cached fixture-table row count — the ANALYZE TABLE statistics
+  /** Memoized fixture-table row count — the ANALYZE TABLE statistics
     * analog. The derive-from-n sizing rules (LSH band count, SimHash
     * width, k-means K, ANN table count …) need only `count(table)`, and
     * re-running that scan as a Spark job at every plan build is the
-    * single largest share of those queries' fixed overhead. Keyed by
-    * (dir, fixture fingerprint, table) — the count is a property of the
-    * fixture BYTES, not of any session, and the fingerprint component
-    * (a stat walk, [[Artifacts.fingerprint]]) means a fixture
-    * regenerated in place in a live JVM can never serve a stale
-    * derive-from-n parameter.
+    * single largest share of those queries' fixed overhead. Read from
+    * the parquet footers ([[footerSum]]): one footer walk per session,
+    * no Spark job; the memo's fingerprint key means a fixture
+    * regenerated in place can never serve a stale derive-from-n
+    * parameter.
     */
-  private val countCache =
-    new java.util.concurrent.ConcurrentHashMap[(String, String, String), java.lang.Long]()
-
   def rowCount(s: SparkSession, d: String, name: String): Long =
-    countCache.computeIfAbsent((d, Artifacts.fingerprint(d), name), _ => {
-      val n: Long = footerSum(s, d, name)(_.getRecordCount)
-        .getOrElse(apply(s, d, name).count())
-      java.lang.Long.valueOf(n)
-    })
+    Caches.memo(s, d, s"rows:$name")(java.lang.Long.valueOf(
+      footerSum(s, d, name)(_.getRecordCount)
+        .getOrElse(apply(s, d, name).count()))).longValue
 
   /** `field` summed over the parquet footers of a fixture table's files —
     * driver-side metadata I/O, ZERO Spark jobs. This is what lets
@@ -115,15 +84,11 @@ object Tables {
     * FLOOR of its scan: a row group never splits across tasks, so a
     * single-file single-row-group table scans as ONE task no matter
     * how many cores the session has or how low maxPartitionBytes is
-    * set. Cached like [[rowCount]] (a property of the fixture bytes,
-    * keyed by content fingerprint), None outcomes included, so an
+    * set. Memoized like [[rowCount]], None outcomes included, so an
     * unreadable layout costs one footer walk, not one per call. */
-  private val rgCache =
-    new java.util.concurrent.ConcurrentHashMap[(String, String, String), Option[Long]]()
-
   private def rowGroupCount(s: SparkSession, d: String, name: String): Option[Long] =
-    rgCache.computeIfAbsent((d, Artifacts.fingerprint(d), name),
-      _ => footerSum(s, d, name)(_.getRowGroups.size.toLong))
+    Caches.memo(s, d, s"rowgroups:$name")(
+      footerSum(s, d, name)(_.getRowGroups.size.toLong))
 
   /** THE scan-width rule: a fixture scan widened for a CPU-bound
     * consumer (guide §2.5 "input skew: one huge unsplittable file…
@@ -194,7 +159,8 @@ object Tables {
     * session-TZ `TimestampType` column with microsecond epoch values that
     * match DuckDB's reading of the same file.
     */
-  def events(s: SparkSession, d: String): DataFrame = cached(s, d, "events#typed") {
+  def events(s: SparkSession, d: String): DataFrame =
+    Caches.memo(s, d, "table:events#typed") {
     import org.apache.spark.sql.functions.{col, expr, timestamp_micros}
     import org.apache.spark.sql.types.{LongType, TimestampNTZType, TimestampType}
     val nanosKey = "spark.sql.legacy.parquet.nanosAsLong"

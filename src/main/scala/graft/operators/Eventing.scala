@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.{Q, Tables}
+import graft.{Caches, Q, Tables}
 import graft.streaming.Streams
 
 /** Event-time operators over the `events` table. The window transform is
@@ -1085,14 +1085,16 @@ object Eventing {
     // QUERYING THE CHECKPOINT — Spark 4's `statestore` data source
     // reads a checkpoint's state as rows (per state variable, per
     // partition) without replaying any stream. Here the
-    // [[Streams.StatsProcessor]] pipeline runs once per fixture
-    // (AvailableNow, RocksDB provider, noop sink — only the checkpoint
-    // matters), then the query is a pure batch read of the "stats"
-    // ValueState. The oracle recomputes the same per-user profile from
-    // the raw events table, so the hash gate certifies the checkpoint
-    // CONTENT — fold semantics, encoder round-trip, and reader — not
-    // just row counts. State rows arrive as (key struct, value struct,
-    // partition_id); the projection flattens the typed value.
+    // [[Streams.StatsProcessor]] pipeline runs once per session and
+    // fixture (AvailableNow, RocksDB provider, noop sink — only the
+    // checkpoint matters; re-running it per invocation would time the
+    // state WRITE, not the reader under test), then the query is a pure
+    // batch read of the "stats" ValueState. The oracle recomputes the
+    // same per-user profile from the raw events table, so the hash gate
+    // certifies the checkpoint CONTENT — fold semantics, encoder
+    // round-trip, and reader — not just row counts. State rows arrive as
+    // (key struct, value struct, partition_id); the projection flattens
+    // the typed value.
     Q("q175_state_reader",
       """SELECT user_id, CAST(count(*) AS BIGINT) AS n,
         |  CAST(sum(CAST(round(value * 100) AS BIGINT)) AS BIGINT)
@@ -1101,13 +1103,13 @@ object Eventing {
         |  CAST(max(epoch_us(ts)) AS BIGINT) AS max_t
         |FROM events GROUP BY user_id""".stripMargin) { (s, d) =>
       import s.implicits._
-      val ckpt = twsCheckpointDir.computeIfAbsent(d, { sfDir =>
+      val ckpt = Caches.memo(s, d, "dir:q175") {
         Streams.ensureTwsRuntime(s)
         val root = java.nio.file.Files
           .createTempDirectory("graft-tws-ckpt").toString
         // stage the fixture through Tables.events once so the stream's
         // declared schema is immune to fixture timestamp-encoding drift
-        Tables.events(s, sfDir)
+        Tables.events(s, d)
           .select(col("event_id"), col("ts"), col("user_id"),
             col("event_type"), col("value"))
           .write.parquet(s"$root/src")
@@ -1122,7 +1124,7 @@ object Eventing {
           .start()
         q.awaitTermination()
         s"$root/ckpt"
-      })
+      }
       s.read.format("statestore").option("path", ckpt)
         .option("stateVarName", "stats").load()
         .select(col("value.user_id").as("user_id"), col("value.n").as("n"),
@@ -1130,11 +1132,4 @@ object Eventing {
           col("value.min_t").as("min_t"), col("value.max_t").as("max_t"))
     }
   )
-
-  /** sfDir → written-once TWS checkpoint for q175 (the checkpoint is a
-    * function of the fixture; re-running the streaming job per
-    * invocation would time the state WRITE, not the reader under
-    * test). */
-  private val twsCheckpointDir =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
 }

@@ -3,7 +3,7 @@ package graft.sources
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.{Q, Tables}
+import graft.{Caches, Q, Tables}
 
 /** CSV and JSON file-format connectors (SURVEY §2.C row 1 names them as
   * the first extension beyond the reference's text-lines-only source).
@@ -38,14 +38,6 @@ object FileFormats {
     }))
     root
   }
-
-  /** sfDir → written-once evolved orders layout for q118 (see the
-    * query's comment for why this memoizes while roundTrip does not:
-    * q118's directory must hold exactly two schema generations, so
-    * re-writing per invocation would both skew the timed read and grow
-    * scratch unboundedly in a long session). */
-  private val evolvedOrdersDir =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
 
   /** Write `table` out in `fmt`, read it back with the original schema.
     * The directory is per-invocation (fresh subdir of the scratch
@@ -174,9 +166,10 @@ object FileFormats {
     // hash mismatch. mergeSchema costs a footer read per file — a
     // one-time planning cost, not a data pass. The evolved layout is a
     // deterministic function of the source table, so the write happens
-    // once per (JVM, sfDir) and is memoized — a long-lived bench/verify
-    // loop must neither re-pay the write inside the timed read path nor
-    // accumulate a two-column orders copy per invocation.
+    // once per (session, fixture bytes) ([[graft.Caches.memo]]) — a
+    // long-lived bench/verify loop must neither re-pay the write inside
+    // the timed read path nor accumulate a two-column orders copy per
+    // invocation.
     Q("q118_schema_evolution",
       """WITH m AS (
         |  SELECT o_orderkey, o_totalprice,
@@ -188,8 +181,8 @@ object FileFormats {
         |  CAST(count(*) - count(o_orderpriority) AS BIGINT) AS n_legacy,
         |  CAST(max(o_orderkey) AS BIGINT) AS max_key
         |FROM m""".stripMargin) { (s, d) =>
-      val dir = evolvedOrdersDir.computeIfAbsent(d, { sfDir =>
-        val orders = Tables.orders(s, sfDir)
+      val dir = Caches.memo(s, d, "dir:q118") {
+        val orders = Tables.orders(s, d)
         val out = java.nio.file.Files
           .createTempDirectory(scratchRoot, "orders_evolving").toString + "/t"
         orders.filter(col("o_orderkey") % 2 === 0)
@@ -200,7 +193,7 @@ object FileFormats {
             col("o_orderpriority"))
           .write.mode("append").parquet(out)
         out
-      })
+      }
       s.read.option("mergeSchema", "true").parquet(dir)
         .agg(count(lit(1)).as("n_total"),
           count(col("o_orderpriority")).as("n_evolved"),
@@ -227,13 +220,14 @@ object FileFormats {
     // billion-object bucket ingests as a distributed scan, file
     // metadata rides as columns, and q36/q37's decode operators pick up
     // from `content`. Fixture: a deterministic 1-in-97 document subset
-    // is written once per fixture dir as doc_<id>.bin files (executor-
-    // side writes via foreachPartition — no driver collect; the shared
-    // scratch dir stands in for the object store). The query re-derives
-    // each file's identity (id parsed from the path), size, and an md5
-    // content digest; the oracle recomputes all three from the
-    // documents table, so any byte lost or altered by the write→list→
-    // read round-trip is a hash mismatch. binaryFile caps single files
+    // is written once per session and fixture as doc_<id>.bin files
+    // (executor-side writes via foreachPartition — no driver collect;
+    // the shared scratch dir stands in for the object store; re-writing
+    // hundreds of small files per invocation would dominate the timed
+    // read). The query re-derives each file's identity (id parsed from
+    // the path), size, and an md5 content digest; the oracle recomputes
+    // all three from the documents table, so any byte lost or altered by
+    // the write→list→read round-trip is a hash mismatch. binaryFile caps single files
     // at 2 GB — past that, the object store's ranged reads (or a
     // custom DataSource V2) take over; corpus-scale is unaffected
     // (files × executors, not bytes × driver).
@@ -242,10 +236,10 @@ object FileFormats {
         |  CAST(octet_length(encode(text)) AS BIGINT) AS n_bytes,
         |  md5(text) AS digest
         |FROM documents WHERE doc_id % 97 = 0""".stripMargin) { (s, d) =>
-      val dir = binaryDocsDir.computeIfAbsent(d, { sfDir =>
+      val dir = Caches.memo(s, d, "dir:q171") {
         val out = java.nio.file.Files
           .createTempDirectory(scratchRoot, "binary_docs").toString
-        Tables.documents(s, sfDir)
+        Tables.documents(s, d)
           .filter(col("doc_id") % 97 === 0)
           .select(col("doc_id"), col("text"))
           .foreachPartition { (it: Iterator[org.apache.spark.sql.Row]) =>
@@ -256,7 +250,7 @@ object FileFormats {
             }
           }
         out
-      })
+      }
       s.read.format("binaryFile").option("pathGlobFilter", "*.bin")
         .load(dir)
         .select(
@@ -525,7 +519,7 @@ object FileFormats {
     // checkpoint are FRESH per invocation (the epoch commit protocol is
     // the operator under test — an accumulating directory would measure
     // stale state); the staged source is memoized per fixture like
-    // [[evolvedOrdersDir]]. DsvWriteSpec additionally pins the
+    // q118's layout. DsvWriteSpec additionally pins the
     // exactly-once half q194 cannot reach from SQL: a replayed epoch
     // commit (post-restart re-commit) is a temp-discarding no-op.
     Q("q194_dsv2_stream_sink",
@@ -537,10 +531,10 @@ object FileFormats {
         |  CAST(sum(n) AS BIGINT) AS n_lines,
         |  CAST(sum(qty) AS BIGINT) AS sum_qty
         |FROM g GROUP BY flag""".stripMargin) { (s, d) =>
-      val src = dsvStreamSrcDir.computeIfAbsent(d, { sfDir =>
+      val src = Caches.memo(s, d, "dir:q194") {
         val dir = java.nio.file.Files
           .createTempDirectory(scratchRoot, "dsv-stream-src").toString + "/t"
-        Tables(s, sfDir, "lineitem")
+        Tables(s, d, "lineitem")
           .groupBy(col("l_returnflag").as("flag"),
             col("l_orderkey").as("okey"))
           .agg(count(lit(1)).as("n"),
@@ -548,7 +542,7 @@ object FileFormats {
           .repartition(4)
           .write.parquet(dir)
         dir
-      })
+      }
       val run = java.nio.file.Files
         .createTempDirectory(scratchRoot, "dsv-stream-sink").toString
       val q = s.readStream
@@ -587,12 +581,6 @@ object FileFormats {
     sys.props.get("graft.bench.streamEpochs")
       .map(_.toInt.max(2).min(full)).getOrElse(full)
 
-  /** sfDir → staged multi-file parquet source for q194 (memoized: the
-    * staged aggregate is a function of the fixture; the per-invocation
-    * operator under test is the epoch-fenced SINK, not this stage). */
-  private val dsvStreamSrcDir =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   /** Per-fixture graft-dsv output directory: STABLE across invocations
     * (unlike [[roundTrip]]'s fresh-per-call dirs) so repeated runs
     * exercise the TRUNCATE/overwrite path of the commit protocol
@@ -604,11 +592,4 @@ object FileFormats {
     dsvDirs.computeIfAbsent(d, _ =>
       java.nio.file.Files.createTempDirectory(scratchRoot, "dsv-sink")
         .toString + "/t")
-
-  /** sfDir → written-once binary-blob fixture dir for q171 (memoized
-    * for the same reason as [[evolvedOrdersDir]]: the file set is a
-    * function of the fixture, and re-writing hundreds of small files
-    * per invocation would dominate the timed read). */
-  private val binaryDocsDir =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
 }

@@ -1,18 +1,19 @@
 package graft.tools
 
-import graft.{Caches, Graft, Session, Tables}
+import graft.{Caches, Graft, Session, SparkEntry, Tables}
 
 /** Session-lifecycle cache-hygiene drill, spawned by CacheHygieneSpec
   * in its own JVM: the scenario stops a SparkContext, which the shared
   * test JVM cannot do without killing every later suite's session.
   *
   * Scenario (the sequential-session service shape — build, work, stop,
-  * build the next): session A populates the JVM-global plan caches
-  * ([[Tables]] loaders, [[Graft]] view plans, [[graft.Artifacts]]
-  * readers) and stops; session B's construction sweeps; A's entries
-  * must be gone — otherwise every recycled session pins its whole plan
-  * graph (which strongly references the dead session) for the JVM
-  * lifetime. Prints `CACHEDRILL result=OK` and exits 0 on success. */
+  * build the next): session A populates every kind of [[Caches.memo]]
+  * entry ([[Tables]] loaders and footer counts, [[Graft]] view plans,
+  * [[graft.Artifacts]] readers, a query's written-once scratch dir) and
+  * stops; session B's construction sweeps; A's entries must be gone —
+  * otherwise every recycled session pins its whole plan graph (which
+  * strongly references the dead session) for the JVM lifetime. Prints
+  * `CACHEDRILL result=OK` and exits 0 on success. */
 object CacheDrill {
   def main(args: Array[String]): Unit = {
     // fixture dir arrives as argv(0) from CacheHygieneSpec (Spec.sfDir)
@@ -22,8 +23,14 @@ object CacheDrill {
     val a = Session.build("local[2]", 2, "graft-cachedrill-a")
     a.sparkContext.setLogLevel("WARN")
     Graft.registerAll(a, sf) // fixture loaders + memoized view plans
+    val views = Caches.entriesFor(a)
+    require(views > 0, s"drill expects populated caches, got $views")
+    Tables.rowCount(a, sf, "region") // a footer count, no table plan
+    val counted = Caches.entriesFor(a)
+    require(counted > views, "rowCount must memoize per session")
+    SparkEntry.queries("q171_binary_source")(a, sf).count() // written-once dir
     val before = Caches.entriesFor(a)
-    require(before > 0, s"drill expects populated caches, got $before")
+    require(before > counted, "q171's blob dir must memoize per session")
     a.stop()
     // nothing has swept yet — entries linger until the next boundary
     require(Caches.entriesFor(a) == before,

@@ -177,7 +177,7 @@ class CacheHygieneSpec extends AnyFunSuite {
   test("a stopped session's cached plans are swept at the next session build") {
     // Stopping a SparkContext in the shared test JVM would kill every
     // later suite's session, so the literal scenario — build session A,
-    // populate the JVM-global plan caches, stop A, build session B,
+    // populate the JVM-global memo, stop A, build session B,
     // assert A's entries gone — runs in a spawned JVM (FaultDemo's
     // pattern), exercising Session.build's sweep end-to-end.
     import scala.jdk.CollectionConverters._

@@ -8,11 +8,11 @@ import scala.concurrent.duration.Duration
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Concurrent-query drill (VERDICT r12 #5): a real deployment serves
-  * MANY queries against one session, sharing the reader-plan caches
-  * ([[Tables]]/[[Artifacts]] dfCache) and the materialized artifact
-  * chain. The bench and verify mains are strictly sequential, so
-  * nothing there exercises those shared structures under contention —
-  * this spec does, two ways:
+  * MANY queries against one session, sharing the memoized reader plans
+  * ([[Tables]]/[[Artifacts]] through [[Caches.memo]]) and the
+  * materialized artifact chain. The bench and verify mains are strictly
+  * sequential, so nothing there exercises those shared structures under
+  * contention — this spec does, two ways:
   *
   *   1. a mixed panel of batch queries (every operator family,
   *      including the artifact-chain consumers) runs once sequentially

@@ -51,6 +51,17 @@ class FixturesSpec extends AnyFunSuite {
                         "label" -> IntegerType)
   )
 
+  // mtime granularity on some filesystems is 1s; a regeneration test
+  // forces a distinct fingerprint component (every file's mtime `n` s
+  // ahead) so it can't flake on fast rewrites
+  private def bumpMtimes(dir: String, n: Int): Unit =
+    java.nio.file.Files.walk(java.nio.file.Paths.get(dir)).forEach { p =>
+      if (java.nio.file.Files.isRegularFile(p))
+        java.nio.file.Files.setLastModifiedTime(p,
+          java.nio.file.attribute.FileTime.fromMillis(
+            System.currentTimeMillis() + n * 1000L))
+    }
+
   contract.foreach { case (name, cols) =>
     test(s"fixture $name loads and keeps its column contract") {
       val df = Tables(spark, Spec.sfDir, name)
@@ -106,14 +117,7 @@ class FixturesSpec extends AnyFunSuite {
       spark.range(n).selectExpr("id AS doc_id", "'a b c' AS text")
         .coalesce(1)
         .write.mode("overwrite").parquet(s"$dir/documents.parquet")
-      // mtime granularity on some filesystems is 1s; force a distinct
-      // fingerprint component so the test can't flake on fast rewrites
-      java.nio.file.Files.walk(java.nio.file.Paths.get(dir)).forEach { p =>
-        if (java.nio.file.Files.isRegularFile(p))
-          java.nio.file.Files.setLastModifiedTime(p,
-            java.nio.file.attribute.FileTime.fromMillis(
-              System.currentTimeMillis() + n * 1000L))
-      }
+      bumpMtimes(dir, n)
     }
     gen(10)
     val fp1 = Artifacts.fingerprint(dir)
@@ -125,6 +129,77 @@ class FixturesSpec extends AnyFunSuite {
       "regenerated fixture served a stale cached count")
     assert(Tables(spark, dir, "documents").count() == 25L,
       "regenerated fixture served a stale cached file listing")
+  }
+
+  test("in-place fixture regeneration rebuilds q118's and q171's written-once dirs") {
+    // q118's evolved orders layout and q171's blob files are written
+    // once per fixture and memoized; after an in-place regeneration
+    // they must be rebuilt from the new bytes, not served stale
+    val dir = java.nio.file.Files.createTempDirectory("graft-regen-dirs").toString
+    def gen(n: Int, tag: String): Unit = {
+      spark.range(n).selectExpr("id AS doc_id", s"concat('$tag ', id) AS text")
+        .coalesce(1).write.mode("overwrite").parquet(s"$dir/documents.parquet")
+      spark.range(1, n + 1).selectExpr("id AS o_orderkey",
+          "CAST(id AS DOUBLE) AS o_totalprice", "'1-URGENT' AS o_orderpriority")
+        .coalesce(1).write.mode("overwrite").parquet(s"$dir/orders.parquet")
+      bumpMtimes(dir, n)
+    }
+    def md5(t: String): String = java.security.MessageDigest.getInstance("MD5")
+      .digest(t.getBytes("UTF-8")).map(b => f"$b%02x").mkString
+    def q171: Map[Long, String] =
+      SparkEntry.queries("q171_binary_source")(spark, dir).collect()
+        .map(r => r.getLong(0) -> r.getString(2)).toMap
+    def q118: Seq[Long] =
+      SparkEntry.queries("q118_schema_evolution")(spark, dir).head()
+        .toSeq.map(_.asInstanceOf[Long])
+    gen(200, "old")
+    assert(q171 == Seq(0L, 97L, 194L).map(i => i -> md5(s"old $i")).toMap)
+    assert(q118 == Seq(200L, 100L, 100L, 200L))
+    gen(300, "new")
+    assert(q171 == Seq(0L, 97L, 194L, 291L).map(i => i -> md5(s"new $i")).toMap,
+      "q171 served blob files written from the old documents")
+    assert(q118 == Seq(300L, 150L, 150L, 300L),
+      "q118 served the layout written from the old orders")
+  }
+
+  test("fixture copies with equal fingerprints keep their own view plans") {
+    // COPY_ATTRIBUTES keeps every size and mtime, so both copies have
+    // the same fingerprint; only the dir in the memo key tells them apart
+    import java.nio.file.{Files, StandardCopyOption}
+    val base = Files.createTempDirectory("graft-twins")
+    val src = java.nio.file.Paths.get(Spec.sfDir)
+    val dirs = Seq("a", "b").map { n =>
+      val to = base.resolve(n)
+      Files.walk(src).forEach { p =>
+        Files.copy(p, to.resolve(src.relativize(p).toString),
+          StandardCopyOption.COPY_ATTRIBUTES)
+      }
+      to.toString
+    }
+    assert(Artifacts.fingerprint(dirs(0)) == Artifacts.fingerprint(dirs(1)))
+    val views = Seq("scd2_user_state", "purchase_attribution", "token_budget",
+      "length_outliers", "join_key_stats", "embedding_drift", "image_ahash",
+      "filter_attrition", "epoch_sample")
+    // the ANALYZED plan's scans: q150's view carries persist marks, and
+    // `inputFiles` reads the optimized plan, where a cached subtree is
+    // an InMemoryRelation without files
+    import org.apache.spark.sql.execution.datasources.{HadoopFsRelation,
+      LogicalRelation}
+    def scanned(v: String): Seq[String] =
+      spark.table(v).queryExecution.analyzed.collect {
+        case r: LogicalRelation => r.relation match {
+          case h: HadoopFsRelation => h.location.inputFiles.toSeq
+          case _ => Nil
+        }
+      }.flatten
+    dirs.foreach { d =>
+      Graft.registerAll(spark, d)
+      views.foreach { v =>
+        val files = scanned(v)
+        assert(files.nonEmpty && files.forall(_.contains(s"$d/")),
+          s"view $v registered for $d reads ${files.mkString(", ")}")
+      }
+    }
   }
 
   test("spread widens a layout-capped scan with one hash exchange, leaves a wide one alone") {
@@ -180,12 +255,7 @@ class FixturesSpec extends AnyFunSuite {
       spark.range(n).selectExpr("id AS doc_id", "'a b c' AS text")
         .coalesce(1)
         .write.mode("overwrite").parquet(s"$dir/documents.parquet")
-      java.nio.file.Files.walk(java.nio.file.Paths.get(dir)).forEach { p =>
-        if (java.nio.file.Files.isRegularFile(p))
-          java.nio.file.Files.setLastModifiedTime(p,
-            java.nio.file.attribute.FileTime.fromMillis(
-              System.currentTimeMillis() + n * 1000L))
-      }
+      bumpMtimes(dir, n)
     }
     gen(10)
     sys.props("graft.artifacts.ttlMillis") = "0"

@@ -68,9 +68,9 @@ class ObservabilitySpec extends AnyFunSuite {
     // lazily and chains the five rank updates as ONE plan — linear in
     // the rank lineage because each round joins the invariant node
     // frame, not the previous round twice. Budget: the corpus rowCount
-    // feeding bandRows (cached across the suite, so often 0) + the one
-    // output action. A third execution means a round regained a
-    // private materialization pass.
+    // feeding bandRows (cached per session, and the suite shares one, so
+    // often 0) + the one output action. A third execution means a round
+    // regained a private materialization pass.
     try {
       val (rows, m) = Metrics.during(spark) {
         SparkEntry.queries("q69_pagerank")(spark, Spec.sfDir).count()
@@ -88,9 +88,9 @@ class ObservabilitySpec extends AnyFunSuite {
     // action (lazy persists, no dedicated count()/checkpoint passes),
     // so the whole query — exact + minhash + simhash pair streams,
     // union, aggregate — is at most 2 SQL executions: the corpus
-    // rowCount (cached across the suite, so often 0) + the one output
-    // action. A third execution appearing here means some signal
-    // regained a private materialization pass.
+    // rowCount (cached per session, and the suite shares one, so often
+    // 0) + the one output action. A third execution appearing here means
+    // some signal regained a private materialization pass.
     try {
       val (rows, m) = Metrics.during(spark) {
         SparkEntry.queries("q91_ensemble_dedup")(spark, Spec.sfDir).count()
