@@ -1,10 +1,7 @@
 package graft
 
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.catalyst.expressions.{Cast, Expression, Literal,
-  Lower, Md5, RegExpReplace, StringTrim}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.BinaryType
 
 /** SQL-first access to the operator library.
   *
@@ -212,35 +209,14 @@ object Graft {
     ensure("lineitem_by_key", Tables.lineitem(spark, sfDir), "l_orderkey")
   }
 
-  /** Scalar-function registration alone (no `sfDir` needed): native
-    * Catalyst expressions under SQL names. Idempotent per session. */
+  /** Scalar-function registration alone (no `sfDir` needed): the
+    * engine's SQL functions, [[GraftExtensions.functions]] — the same
+    * list the extension injects into every [[Session.build]] session.
+    * Idempotent per session. */
   def registerFunctions(spark: SparkSession): Unit = {
-    functions.VecOps.ensureRegistered(spark) // vec_dot(array, array)
-    // graft_bloom_contains(bloomBytes, hash64): Spark's codegen'd
-    // BloomFilterMightContain under an explicit SQL name (q129's probe)
-    functions.Sketches.ensureRegistered(spark)
-    // wgram_fps(toks, W) / shingles3(toks): the dedup token-window kernels
-    functions.GramOps.ensureRegistered(spark)
     val reg = spark.sessionState.functionRegistry
-    // graft_norm_fp(text): the exact-dedup normalization fingerprint —
-    // md5(trim(collapse-whitespace(lower(text)))), composed from
-    // built-in expressions so it stays inside whole-stage codegen and
-    // CANNOT drift from Dedup.normFp's definition by more than this
-    // one-line composition (guarded by SqlEntrySpec).
-    reg.createOrReplaceTempFunction("graft_norm_fp",
-      (children: Seq[Expression]) => Md5(Cast(StringTrim(RegExpReplace(
-        Lower(children.head), Literal("\\s+"), Literal(" "))), BinaryType)),
-      "built-in")
-    // vec_cosine(a, b): cosine similarity composed over the codegen'd
-    // dot product — the expression every ANN consumer writes by hand.
-    import org.apache.spark.sql.catalyst.expressions.{Divide, Multiply, Sqrt}
-    import graft.functions.VecOps.DotProduct
-    reg.createOrReplaceTempFunction("vec_cosine",
-      (children: Seq[Expression]) => {
-        val Seq(a, b) = children
-        Divide(DotProduct(a, b),
-          Multiply(Sqrt(DotProduct(a, a)), Sqrt(DotProduct(b, b))))
-      },
-      "built-in")
+    GraftExtensions.functions.foreach { case (n, i, b) =>
+      reg.registerFunction(n, i, b)
+    }
   }
 }

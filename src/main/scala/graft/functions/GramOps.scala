@@ -1,16 +1,15 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession}
-import org.apache.spark.sql.catalyst.FunctionIdentifier
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression,
-  ExpressionInfo, GenericInternalRow, UnaryExpression, XXH64}
+  GenericInternalRow, Literal, UnaryExpression, XXH64}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext,
   ExprCode, FalseLiteral}
 import org.apache.spark.sql.catalyst.expressions.codegen.Block._
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
-import org.apache.spark.sql.functions.{call_function, lit}
+import org.apache.spark.sql.graft.ColumnBridge
 import org.apache.spark.sql.types.{ArrayType, DataType, IntegerType, LongType,
   StringType, StructField, StructType}
 import org.apache.spark.unsafe.types.UTF8String
@@ -45,8 +44,9 @@ import org.apache.spark.unsafe.types.UTF8String
   *    `toks` is a null result.
   *
   * A row with fewer than W (3) tokens, or a null array, yields an empty
-  * array. Registered like [[VecOps]]: through [[graft.GraftExtensions]]
-  * and idempotently per session via [[GramOps.ensureRegistered]].
+  * array. Like [[VecOps]], the Column entry points build the expressions
+  * directly and resolve on any session; SQL callers get the three names
+  * from [[graft.GraftExtensions.functions]].
   */
 object GramOps {
 
@@ -216,7 +216,7 @@ object GramOps {
       copy(left = l, right = r)
   }
 
-  private def wgramBuilder(args: Seq[Expression]): Expression = {
+  private[graft] def wgramBuilder(args: Seq[Expression]): Expression = {
     require(args.length == 2, s"wgram_fps takes 2 arguments, got ${args.length}")
     val w = args(1)
     require(w.foldable && w.dataType == IntegerType,
@@ -226,41 +226,22 @@ object GramOps {
     WGramFps(args(0), width)
   }
 
-  private def shinglesBuilder(args: Seq[Expression]): Expression = {
+  private[graft] def shinglesBuilder(args: Seq[Expression]): Expression = {
     require(args.length == 1, s"shingles3 takes 1 argument, got ${args.length}")
     Shingles3(args(0))
   }
 
-  private def scrubBuilder(args: Seq[Expression]): Expression = {
+  private[graft] def scrubBuilder(args: Seq[Expression]): Expression = {
     require(args.length == 2, s"scrub_text takes 2 arguments, got ${args.length}")
     ScrubText(args(0), args(1))
   }
 
-  private val builders: Seq[(String, Class[_], Seq[Expression] => Expression)] =
-    Seq(("wgram_fps", classOf[WGramFps], wgramBuilder _),
-      ("shingles3", classOf[Shingles3], shinglesBuilder _),
-      ("scrub_text", classOf[ScrubText], scrubBuilder _))
-
-  /** Descriptors for `SparkSessionExtensions.injectFunction`. */
-  val descriptors: Seq[(FunctionIdentifier, ExpressionInfo,
-      Seq[Expression] => Expression)] = builders.map { case (n, c, b) =>
-    (FunctionIdentifier(n), new ExpressionInfo(c.getCanonicalName, n), b)
-  }
-
-  /** Register on a caller-built session that didn't go through
-    * [[graft.Session.build]]'s extensions. Idempotent. */
-  def ensureRegistered(s: SparkSession): Unit = {
-    val reg = s.sessionState.functionRegistry
-    builders.foreach { case (n, _, b) =>
-      if (!reg.functionExists(FunctionIdentifier(n)))
-        reg.createOrReplaceTempFunction(n, b, "built-in")
-    }
-  }
-
-  /** Column-level entry points (resolve through the registry). */
+  /** Column-level entry points. The width goes in as a Catalyst
+    * literal: a `lit` Column converts lazily, so the builder could not
+    * read its value. */
   def wgramFps(toks: Column, w: Int): Column =
-    call_function("wgram_fps", toks, lit(w))
-  def shingles3(toks: Column): Column = call_function("shingles3", toks)
+    ColumnBridge.column(wgramBuilder(Seq(ColumnBridge.expression(toks), Literal(w))))
+  def shingles3(toks: Column): Column = ColumnBridge.call(shinglesBuilder, toks)
   def scrubText(toks: Column, cut: Column): Column =
-    call_function("scrub_text", toks, cut)
+    ColumnBridge.call(scrubBuilder, toks, cut)
 }

@@ -1,14 +1,12 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession}
-import org.apache.spark.sql.catalyst.FunctionIdentifier
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression,
-  ExpressionInfo}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext,
   ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.functions.call_function
+import org.apache.spark.sql.graft.ColumnBridge
 import org.apache.spark.sql.types.{ArrayType, DataType, LongType}
 
 /** Native consistent-hash ring lookup for the sharding hot path.
@@ -23,7 +21,9 @@ import org.apache.spark.sql.types.{ArrayType, DataType, LongType}
   * whole-stage codegen instead of O(N·V) interpreted closure calls.
   * Result-identical to the fold (smallest entry whose packed position
   * `div 64` is ≥ the key hash, wrapping to the first entry), so oracle
-  * hashes are unchanged.
+  * hashes are unchanged. [[RingOps.ringLookup]] builds the expression
+  * directly, so it resolves on any session; SQL callers get
+  * `ring_lookup` from [[graft.GraftExtensions.functions]].
   */
 object RingOps {
 
@@ -98,28 +98,13 @@ object RingOps {
       copy(left = newLeft, right = newRight)
   }
 
-  private val name = FunctionIdentifier("ring_lookup")
-  private def builder(args: Seq[Expression]): Expression = {
+  private[graft] def builder(args: Seq[Expression]): Expression = {
     require(args.length == 2,
       s"ring_lookup takes 2 arguments, got ${args.length}")
     RingLookup(args(0), args(1))
   }
 
-  /** Descriptor for `SparkSessionExtensions.injectFunction`. */
-  val descriptor: (FunctionIdentifier, ExpressionInfo,
-      Seq[Expression] => Expression) =
-    (name, new ExpressionInfo(classOf[RingLookup].getCanonicalName,
-      "ring_lookup"), builder _)
-
-  /** Register on a caller-built session that didn't go through
-    * [[graft.Session.build]]'s extensions. Idempotent. */
-  def ensureRegistered(s: SparkSession): Unit = {
-    val reg = s.sessionState.functionRegistry
-    if (!reg.functionExists(name))
-      reg.createOrReplaceTempFunction("ring_lookup", builder, "built-in")
-  }
-
-  /** Column-level entry point (resolves through the registry). */
+  /** Column-level entry point. */
   def ringLookup(ring: Column, h: Column): Column =
-    call_function("ring_lookup", ring, h)
+    ColumnBridge.call(builder, ring, h)
 }

@@ -2,11 +2,11 @@ package graft.functions
 
 import java.io.ByteArrayOutputStream
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-import org.apache.spark.sql.catalyst.FunctionIdentifier
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.catalyst.expressions.{BloomFilterMightContain,
-  Expression, ExpressionInfo}
-import org.apache.spark.sql.functions.{call_function, lit, xxhash64}
+  Expression}
+import org.apache.spark.sql.functions.{lit, xxhash64}
+import org.apache.spark.sql.graft.ColumnBridge
 
 /** Bloom-filter probe as a native, codegen'd predicate.
   *
@@ -14,8 +14,9 @@ import org.apache.spark.sql.functions.{call_function, lit, xxhash64}
   * bloom-join pruning evaluates `BloomFilterMightContain(serializedBloom,
   * xxhash64(key))` inside whole-stage codegen — but only the optimizer
   * can inject it, and only under a shuffle join it decides to prune.
-  * Registering the same expression as `graft_bloom_contains` lets a
-  * pipeline carry an explicit sketch prefilter (q129: eval-set shingles
+  * [[bloomContains]] builds the same expression (SQL name
+  * `graft_bloom_contains`, in [[graft.GraftExtensions.functions]]) so a
+  * pipeline can carry an explicit sketch prefilter (q129: eval-set shingles
   * pruning the corpus-shingle stream at the scan) with zero UDF cost:
   * the probe is one hash + bitset test per row, fused into the scan's
   * generated loop.
@@ -29,27 +30,10 @@ import org.apache.spark.sql.functions.{call_function, lit, xxhash64}
   */
 object Sketches {
 
-  private val name = FunctionIdentifier("graft_bloom_contains")
-
-  private def builder(args: Seq[Expression]): Expression = {
+  private[graft] def builder(args: Seq[Expression]): Expression = {
     require(args.length == 2,
       s"graft_bloom_contains takes 2 arguments, got ${args.length}")
     BloomFilterMightContain(args(0), args(1))
-  }
-
-  /** Descriptor for `SparkSessionExtensions.injectFunction`. */
-  val descriptor: (FunctionIdentifier, ExpressionInfo,
-      Seq[Expression] => Expression) =
-    (name, new ExpressionInfo(classOf[BloomFilterMightContain].getCanonicalName,
-      "graft_bloom_contains"), builder _)
-
-  /** Register on a caller-built session that didn't go through
-    * [[graft.Session.build]]'s extensions. Idempotent. */
-  def ensureRegistered(s: SparkSession): Unit = {
-    val reg = s.sessionState.functionRegistry
-    if (!reg.functionExists(name))
-      reg.createOrReplaceTempFunction("graft_bloom_contains", builder,
-        "built-in")
   }
 
   /** Build a serialized bloom over `keys`' single string column, sized
@@ -71,5 +55,5 @@ object Sketches {
     * so `filter(bloomContains(...))` composes with an exact confirm
     * downstream without changing results. */
   def bloomContains(bloomBytes: Array[Byte], key: Column): Column =
-    call_function("graft_bloom_contains", lit(bloomBytes), xxhash64(key))
+    ColumnBridge.call(builder, lit(bloomBytes), xxhash64(key))
 }

@@ -1,14 +1,12 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession}
-import org.apache.spark.sql.catalyst.FunctionIdentifier
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression,
-  ExpressionInfo}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext,
   ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.functions.call_function
+import org.apache.spark.sql.graft.ColumnBridge
 import org.apache.spark.sql.types.{AbstractDataType, ArrayType, DataType,
   DoubleType}
 
@@ -24,11 +22,9 @@ import org.apache.spark.sql.types.{AbstractDataType, ArrayType, DataType,
   * IEEE summation order (index order, like the HOF form) so oracle
   * hashes are unchanged.
   *
-  * Registered through `SparkSessionExtensions`
-  * ([[graft.GraftExtensions]]) for sessions built by
-  * [[graft.Session.build]], and idempotently per-session via
-  * [[VecOps.ensureRegistered]] so the `SparkEntry.queries` contract
-  * (any caller-built session) keeps holding.
+  * [[VecOps.vecDot]] builds the expression directly, so it resolves on
+  * any session (the `SparkEntry.queries` contract); SQL callers get
+  * `vec_dot` from [[graft.GraftExtensions.functions]].
   */
 object VecOps {
 
@@ -97,26 +93,11 @@ object VecOps {
       copy(left = newLeft, right = newRight)
   }
 
-  private val name = FunctionIdentifier("vec_dot")
-  private def builder(args: Seq[Expression]): Expression = {
+  private[graft] def builder(args: Seq[Expression]): Expression = {
     require(args.length == 2, s"vec_dot takes 2 arguments, got ${args.length}")
     DotProduct(args(0), args(1))
   }
 
-  /** Descriptor for `SparkSessionExtensions.injectFunction`. */
-  val descriptor: (FunctionIdentifier, ExpressionInfo,
-      Seq[Expression] => Expression) =
-    (name, new ExpressionInfo(classOf[DotProduct].getCanonicalName,
-      "vec_dot"), builder _)
-
-  /** Register on a caller-built session that didn't go through
-    * [[graft.Session.build]]'s extensions. Idempotent. */
-  def ensureRegistered(s: SparkSession): Unit = {
-    val reg = s.sessionState.functionRegistry
-    if (!reg.functionExists(name))
-      reg.createOrReplaceTempFunction("vec_dot", builder, "built-in")
-  }
-
-  /** Column-level entry point (resolves through the registry). */
-  def vecDot(a: Column, b: Column): Column = call_function("vec_dot", a, b)
+  /** Column-level entry point. */
+  def vecDot(a: Column, b: Column): Column = ColumnBridge.call(builder, a, b)
 }

@@ -49,11 +49,9 @@ object Dedup {
     * identical to a global DISTINCT (doc_id, shingle) but costs zero
     * shuffle: dedup is within-row, so no row ever needs to meet
     * another. */
-  private[operators] def shingles(s: SparkSession, d: String): DataFrame = {
-    GramOps.ensureRegistered(s)
+  private[operators] def shingles(s: SparkSession, d: String): DataFrame =
     exsubDocs(s, d).select(col("doc_id"),
       explode(GramOps.shingles3(col("toks"))).as("shingle"))
-  }
 
   // ----- the exact-substring detector (q198/q199/q200) --------------------
   // One map → shuffle → reduce over W-gram fingerprints, shared by the
@@ -84,7 +82,6 @@ object Dedup {
     * doc's windows in one pass over its token array, then posexplode:
     * pos IS the start. Docs shorter than W produce no grams. */
   private[graft] def exsubGrams(docs: DataFrame): DataFrame = {
-    GramOps.ensureRegistered(docs.sparkSession)
     val t = col("toks")
     docs
       .select(col("doc_id"), size(t).cast("long").as("n_tokens"),
@@ -150,7 +147,6 @@ object Dedup {
     * sort-merge — the only fully spillable strategy — and an inner
     * join, since the output IS the affected-doc set. */
   private[graft] def scrub(docs: DataFrame, occurrences: DataFrame): DataFrame = {
-    GramOps.ensureRegistered(docs.sparkSession)
     val covSet = occurrences
       .select(col("doc_id"),
         explode(sequence(col("s"), col("s") + EXSUB_W - 1)).as("p"))
@@ -1336,7 +1332,6 @@ object Dedup {
          |WHERE s.doc_id % 89 <> 0
          |GROUP BY s.doc_id
          |HAVING count(*) >= 3""".stripMargin) { (s, d) =>
-      graft.functions.Sketches.ensureRegistered(s)
       val sh = shingles(s, d).persist()
       val bench = sh.filter(col("doc_id") % 89 === 0)
         .select(col("shingle")).distinct()

@@ -1105,8 +1105,7 @@ object Eventing {
       import s.implicits._
       val ckpt = Caches.memo(s, d, "dir:q175") {
         Streams.ensureTwsRuntime(s)
-        val root = java.nio.file.Files
-          .createTempDirectory("graft-tws-ckpt").toString
+        val root = graft.sources.FileFormats.scratchDir("tws-ckpt").toString
         // stage the fixture through Tables.events once so the stream's
         // declared schema is immune to fixture timestamp-encoding drift
         Tables.events(s, d)

@@ -22,14 +22,6 @@ import graft.{Q, Tables}
   */
 object Similarity {
 
-  /** Embeddings table load that also guarantees `vec_dot` resolves on
-    * caller-built sessions (sessions from [[graft.Session.build]] get
-    * it via GraftExtensions; the registration is idempotent). */
-  private def embTable(s: SparkSession, d: String): DataFrame = {
-    graft.functions.VecOps.ensureRegistered(s)
-    Tables.embeddings(s, d)
-  }
-
   /** Quantized copy of an embedding column. */
   private def quant(c: Column): Column =
     transform(c, x => round(x.cast("double") * 1000))
@@ -181,7 +173,7 @@ object Similarity {
     * (vec_id, label, ev, cs). */
   private def embCodes(s: SparkSession, d: String): DataFrame =
     graft.Artifacts.derived(s, d, s"emb_codes_t${MAX_TABLES}_b$MAX_BITS") {
-      embTable(s, d)
+      Tables.embeddings(s, d)
         .select(col("vec_id"), col("label"), quant(col("embedding")).as("ev"))
         .select(col("vec_id"), col("label"), col("ev"),
           array((0 until MAX_TABLES)
@@ -192,7 +184,6 @@ object Similarity {
     * no-op when they already exist for the current fixture
     * fingerprint). */
   private[graft] def warmArtifacts(s: SparkSession, d: String): Unit = {
-    graft.functions.VecOps.ensureRegistered(s)
     embCodes(s, d)
     pqChain(s, d)
     ()
@@ -226,7 +217,7 @@ object Similarity {
   /** Per-vector subspace rows (vec_id, sub, ssv, xx) — the shared input
     * of PQ training, encoding, and query-side distance tables. */
   private def pqSubs(s: SparkSession, d: String): DataFrame =
-    embTable(s, d)
+    Tables.embeddings(s, d)
       .select(col("vec_id"), quant(col("embedding")).as("sv"))
       .select(col("vec_id"),
         explode(sequence(lit(0), lit(PQ_M - 1))).as("sub"), col("sv"))
@@ -247,9 +238,7 @@ object Similarity {
     * whole pipeline from the raw table, so the hash gate certifies the
     * materialized index content itself. */
   private def pqChain(s: SparkSession, d: String): (DataFrame, DataFrame) = {
-    val step = pqTrainStep(
-      { graft.functions.VecOps.ensureRegistered(s)
-        Tables.rowCount(s, d, "embeddings") })
+    val step = pqTrainStep(Tables.rowCount(s, d, "embeddings"))
     // the training population is part of the index identity: a rung
     // where step > 1 gets its own artifact name, while sf0.1-and-below
     // (step = 1) keeps the round-13 names and their cached trees
@@ -418,7 +407,6 @@ object Similarity {
     * goes through [[Tables.spread]]. */
   private def quantCentroids(s: SparkSession, d: String)
       : (DataFrame, graft.functions.CentroidIndex) = {
-    graft.functions.VecOps.ensureRegistered(s)
     val k = sdK(Tables.rowCount(s, d, "embeddings"))
     val e = Tables.spread(s, d, "embeddings", "vec_id")
       .select(col("vec_id"), quant(col("embedding")).as("sv"))
@@ -504,7 +492,7 @@ object Similarity {
          |FROM e CROSS JOIN q
          |ORDER BY cos_sim DESC, vec_id
          |LIMIT 10""".stripMargin) { (s, d) =>
-      val emb = embTable(s, d)
+      val emb = Tables.embeddings(s, d)
       val q = emb.filter(col("vec_id") === 0)
         .select(quant(col("embedding")).as("qv"))
       emb.filter(col("vec_id") =!= 0)
@@ -540,7 +528,7 @@ object Similarity {
          |  t -> bit_count(xor(cs[t] & msk, qcs[t] & msk)) <= 1)) > 0
          |ORDER BY cos_sim DESC, vec_id
          |LIMIT 10""".stripMargin) { (s, d) =>
-      val nbits = numBits({ graft.functions.VecOps.ensureRegistered(s); Tables.rowCount(s, d, "embeddings") })
+      val nbits = numBits(Tables.rowCount(s, d, "embeddings"))
       // vectors + labels ride the persisted index artifact too — one
       // narrow scan serves candidates and verify alike
       val e = embCodes(s, d).select(col("vec_id"), col("label"), col("ev"))
@@ -592,7 +580,7 @@ object Similarity {
          |WHERE b.vec_id <> 0
          |ORDER BY cos_sim DESC, vec_id
          |LIMIT 10""".stripMargin) { (s, d) =>
-      val e = embTable(s, d)
+      val e = Tables.embeddings(s, d)
         .select(col("vec_id"), col("label"), quant(col("embedding")).as("ev"))
       val cents = e.filter(col("vec_id").between(1, IVF_K))
         .select(col("vec_id").as("cid"), col("ev").as("cv"))
@@ -652,7 +640,7 @@ object Similarity {
       // 64-dim quantized vector 8× through the bucket join trades
       // shuffle bytes for two join stages — the right trade while
       // vector payloads stay ~0.5 KB.
-      val nbits = numBits({ graft.functions.VecOps.ensureRegistered(s); Tables.rowCount(s, d, "embeddings") })
+      val nbits = numBits(Tables.rowCount(s, d, "embeddings"))
       // the coded rows come from the persisted index artifact, masked
       // to the derived width and sliced to the first NUM_TABLES tables
       // (the ±1 matrices are salted per table, so the first 8 codes
@@ -788,7 +776,7 @@ object Similarity {
       val iters = 3
       // quantized vectors + their self-dots: read once, reused by every
       // round's assignment — the per-query artifact (q35 rule)
-      val e = embTable(s, d)
+      val e = Tables.embeddings(s, d)
         .select(col("vec_id"), quant(col("embedding")).as("sv"))
         .withColumn("xx", dot(col("sv"), col("sv")))
         .persist()
@@ -958,7 +946,7 @@ object Similarity {
          |FROM (SELECT vec_id, $QUANT_SQL AS sv FROM embeddings) q"""
         .stripMargin
     }) { (s, d) =>
-      val e = embTable(s, d)
+      val e = Tables.embeddings(s, d)
         .select(col("vec_id"), quant(col("embedding")).as("sv"))
       val projCols = (0 until RP_DIMS).map { j =>
         dot(col("sv"), typedLit(rpSigns(j).toSeq.map(_.toDouble)))
@@ -1081,7 +1069,7 @@ object Similarity {
          |  CAST(coalesce(h.n_hits, 0) AS DOUBLE) / 10 AS recall_at_10
          |FROM q LEFT JOIN hits h ON q.qid = h.qid""".stripMargin
     }) { (s, d) =>
-      val nbits = numBits({ graft.functions.VecOps.ensureRegistered(s); Tables.rowCount(s, d, "embeddings") })
+      val nbits = numBits(Tables.rowCount(s, d, "embeddings"))
       val (nt, rr) = annConfig(nbits)
       // the quantized frame is one narrow column of the persisted
       // index artifact — the query panel, the exact ranking, and the

@@ -200,16 +200,15 @@ object Skew {
       // (functions.RingOps) — O(log NV) compiled comparisons per row
       // where the declarative array_min(filter(...)) pays O(NV)
       // interpreted closure calls; result-identical, hashes unchanged
-      graft.functions.RingOps.ensureRegistered(s)
-      def assign(ring: String): String = s"ring_lookup($ring, dh) % 64"
+      def assign(ring: String): Column =
+        graft.functions.RingOps.ringLookup(col(ring), col("dh")) % 64
       Tables.documents(s, d)
         .select(col("doc_id"),
           conv(substring(md5(col("doc_id").cast("string").cast("binary")),
             1, 12), 16, 10).cast("long").as("dh"))
         .withColumn("ra", typedLit(ring(16)))
         .withColumn("rb", typedLit(ring(17)))
-        .select(col("doc_id"), expr(assign("ra")).as("s16"),
-          expr(assign("rb")).as("s17"))
+        .select(col("doc_id"), assign("ra").as("s16"), assign("rb").as("s17"))
         .groupBy(col("s16").as("shard"))
         .agg(count(lit(1)).as("n_docs"),
           sum(when(col("s16") =!= col("s17"), 1L).otherwise(0L))

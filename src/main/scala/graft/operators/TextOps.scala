@@ -1184,8 +1184,7 @@ object TextOps {
       // under the JVM-scoped scratch root (deleted at exit): the job
       // runs per invocation, and repeated gate/bench loops must not
       // accumulate a part-file tree per rep in /tmp
-      val out = java.nio.file.Files.createTempDirectory(
-        graft.sources.FileFormats.scratchRoot, "refwc").toString + "/out"
+      val out = graft.sources.FileFormats.scratchDir("refwc").toString + "/out"
       MapReduce.runPipe(s, s"$refRoot/tests/testdata/input", out,
         // wc_map.sh:13 / wc_reduce.sh:14, verbatim
         mapCmd =
@@ -1203,8 +1202,7 @@ object TextOps {
         |  '$refRoot/tests/testdata/correct/grep_correct.txt',
         |  header=false, delim='\\t', quote='', escape='',
         |  columns={'line': 'VARCHAR'})""".stripMargin) { (s, _) =>
-      val out = java.nio.file.Files.createTempDirectory(
-        graft.sources.FileFormats.scratchRoot, "refgrep").toString + "/out"
+      val out = graft.sources.FileFormats.scratchDir("refgrep").toString + "/out"
       // the reference's actual test executables (default query
       // "product", grep_map.py:15), via the same subprocess contract
       // the worker uses — sha256-pinned before anything executes

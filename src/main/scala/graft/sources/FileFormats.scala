@@ -39,6 +39,10 @@ object FileFormats {
     root
   }
 
+  /** A fresh dir under [[scratchRoot]]. */
+  private[graft] def scratchDir(prefix: String): java.nio.file.Path =
+    java.nio.file.Files.createTempDirectory(scratchRoot, prefix)
+
   /** Write `table` out in `fmt`, read it back with the original schema.
     * The directory is per-invocation (fresh subdir of the scratch
     * root) — a fixed path would race between concurrent suites
@@ -46,7 +50,7 @@ object FileFormats {
   private def roundTrip(s: SparkSession, d: String, table: String,
                         fmt: String): DataFrame = {
     val src = Tables(s, d, table)
-    val dir = java.nio.file.Files.createTempDirectory(scratchRoot, table)
+    val dir = scratchDir(table)
       .toString + s"/$table.$fmt"
     fmt match {
       case "csv" =>
@@ -183,8 +187,7 @@ object FileFormats {
         |FROM m""".stripMargin) { (s, d) =>
       val dir = Caches.memo(s, d, "dir:q118") {
         val orders = Tables.orders(s, d)
-        val out = java.nio.file.Files
-          .createTempDirectory(scratchRoot, "orders_evolving").toString + "/t"
+        val out = scratchDir("orders_evolving").toString + "/t"
         orders.filter(col("o_orderkey") % 2 === 0)
           .select(col("o_orderkey"), col("o_totalprice"))
           .write.mode("append").parquet(out)
@@ -237,8 +240,7 @@ object FileFormats {
         |  md5(text) AS digest
         |FROM documents WHERE doc_id % 97 = 0""".stripMargin) { (s, d) =>
       val dir = Caches.memo(s, d, "dir:q171") {
-        val out = java.nio.file.Files
-          .createTempDirectory(scratchRoot, "binary_docs").toString
+        val out = scratchDir("binary_docs").toString
         Tables.documents(s, d)
           .filter(col("doc_id") % 97 === 0)
           .select(col("doc_id"), col("text"))
@@ -532,8 +534,7 @@ object FileFormats {
         |  CAST(sum(qty) AS BIGINT) AS sum_qty
         |FROM g GROUP BY flag""".stripMargin) { (s, d) =>
       val src = Caches.memo(s, d, "dir:q194") {
-        val dir = java.nio.file.Files
-          .createTempDirectory(scratchRoot, "dsv-stream-src").toString + "/t"
+        val dir = scratchDir("dsv-stream-src").toString + "/t"
         Tables(s, d, "lineitem")
           .groupBy(col("l_returnflag").as("flag"),
             col("l_orderkey").as("okey"))
@@ -543,8 +544,7 @@ object FileFormats {
           .write.parquet(dir)
         dir
       }
-      val run = java.nio.file.Files
-        .createTempDirectory(scratchRoot, "dsv-stream-sink").toString
+      val run = scratchDir("dsv-stream-sink").toString
       val q = s.readStream
         .schema("flag STRING, okey LONG, n LONG, qty LONG")
         .option("maxFilesPerTrigger",
@@ -590,6 +590,6 @@ object FileFormats {
     new java.util.concurrent.ConcurrentHashMap[String, String]()
   private def dsvSinkDir(d: String): String =
     dsvDirs.computeIfAbsent(d, _ =>
-      java.nio.file.Files.createTempDirectory(scratchRoot, "dsv-sink")
+      scratchDir("dsv-sink")
         .toString + "/t")
 }

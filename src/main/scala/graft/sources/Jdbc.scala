@@ -26,11 +26,11 @@ object Jdbc {
   private val url = "jdbc:derby:memory:graftdb;create=true"
 
   private lazy val props: Properties = {
-    // Derby writes derby.log to user.dir unless told otherwise; keep the
-    // engine's scratch under java.io.tmpdir like every other temp file.
+    // Derby writes derby.log to user.dir unless told otherwise; keep it
+    // under the engine's scratch root, deleted at JVM exit.
     if (System.getProperty("derby.system.home") == null)
       System.setProperty("derby.system.home",
-        java.nio.file.Files.createTempDirectory("graft-derby-").toString)
+        FileFormats.scratchDir("derby").toString)
     val p = new Properties()
     p.setProperty("driver", "org.apache.derby.jdbc.EmbeddedDriver")
     p

@@ -265,8 +265,7 @@ object FaultDemo {
     import org.apache.spark.sql.functions.{col, udf}
     val spark = graft.Session.build("local[4,2]", 4, "graft-fault-sinkretry")
     spark.sparkContext.setLogLevel("ERROR")
-    val root = java.nio.file.Files
-      .createTempDirectory("graft-sinkretry").toString
+    val root = graft.sources.FileFormats.scratchDir("sinkretry").toString
     val in = java.nio.file.Files
       .createDirectories(java.nio.file.Paths.get(s"$root/in")).toString
     java.nio.file.Files.writeString(

@@ -6,6 +6,7 @@ import scala.jdk.CollectionConverters._
 import org.apache.spark.sql.SparkSession
 
 import graft.pipeline.MapReduce
+import graft.sources.FileFormats.scratchDir
 
 /** Reference-parity check: runs the two reference queries (word count,
   * grep) over a text corpus directory and compares against golden
@@ -21,13 +22,14 @@ object RefParity {
     val spark = graft.Session.build("local[4]", 4, "graft-refparity")
     spark.sparkContext.setLogLevel("ERROR")
 
-    val wcOut = Files.createTempDirectory("refparity-wc").toString + "/out"
+    val wcOut = scratchDir("refparity-wc").toString + "/out"
     MapReduce.wordCount(spark, corpus, wcOut, numReducers = 2)
     val gotWc = readParts(wcOut).sorted
     val expWc = Files.readAllLines(Paths.get(wcGolden)).asScala.toSeq.sorted
     report("word_count", gotWc, expWc)
 
-    val grepOut = Files.createTempDirectory("refparity-grep").toString + "/out"
+    val grepOut =
+      scratchDir("refparity-grep").toString + "/out"
     MapReduce.grep(spark, corpus, grepOut, "product", numReducers = 1)
     val gotGrep = readParts(grepOut).sorted
     val expGrep = Files.readAllLines(Paths.get(grepGolden)).asScala.toSeq.sorted

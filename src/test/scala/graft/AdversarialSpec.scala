@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Operator behavior on ADVERSARIAL corpora, not just the organic
@@ -32,7 +30,7 @@ class AdversarialSpec extends AnyFunSuite {
       val text = s"$boiler $uniq"
       (i.toLong, text, "en", "webcrawl", text.length.toLong)
     }
-    val dir = Files.createTempDirectory("graft-adversarial").toString
+    val dir = Spec.tmpDir("graft-adversarial").toString
     rows.toDF("doc_id", "text", "lang", "source", "n_chars")
       .coalesce(1).write.parquet(s"$dir/documents.parquet")
     dir
@@ -121,8 +119,7 @@ class AdversarialSpec extends AnyFunSuite {
       (i.toLong, text, "en", "webcrawl", text.length.toLong)
     }
     import spark.implicits._
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft-boiler").toString
+    val dir = Spec.tmpDir("graft-boiler").toString
     rows.toDF("doc_id", "text", "lang", "source", "n_chars")
       .coalesce(1).write.parquet(s"$dir/documents.parquet")
     val top = SparkEntry.queries("q102_repeated_passages")(spark, dir)
@@ -147,8 +144,7 @@ class AdversarialSpec extends AnyFunSuite {
       (1L, s"inserted $base")
     ) ++ (2 until 100).map(i =>
       (i.toLong, (0 until 40).map(j => s"u${i}f$j").mkString(" ")))
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft-cdc").toString
+    val dir = Spec.tmpDir("graft-cdc").toString
     rows.map { case (id, text) => (id, text, "en", "web", text.length.toLong) }
       .toDF("doc_id", "text", "lang", "source", "n_chars")
       .coalesce(1).write.parquet(s"$dir/documents.parquet")
@@ -472,7 +468,7 @@ class AdversarialSpec extends AnyFunSuite {
       val n = if (i == 25) 5000L else 10L
       (i.toLong, "x " * 5, "en", "web", n)
     }
-    val dir = Files.createTempDirectory("graft-epoch").toString
+    val dir = Spec.tmpDir("graft-epoch").toString
     rows.toDF("doc_id", "text", "lang", "source", "n_chars")
       .coalesce(1).write.parquet(s"$dir/documents.parquet")
     val k = 100
@@ -578,7 +574,7 @@ class AdversarialSpec extends AnyFunSuite {
       (30L, s"$shared ${fill('c')}"),         // non-owner @0
       (40L, fill('d'))                        // untouched bystander
     ).map { case (id, t) => (id, t, "en", "web", t.length.toLong) }
-    val dir = Files.createTempDirectory("graft-keepone").toString
+    val dir = Spec.tmpDir("graft-keepone").toString
     rows.toDF("doc_id", "text", "lang", "source", "n_chars")
       .coalesce(1).write.parquet(s"$dir/documents.parquet")
     val keep = SparkEntry.queries("q200_substring_keep_one")(spark, dir)

@@ -46,7 +46,7 @@ class AnnConfigSpec extends AnyFunSuite {
     // recall of the annConfig-derived setting on a structurally
     // different panel. Deterministic (integer codes, derived corpus),
     // so a stable bound.
-    val dir = java.nio.file.Files.createTempDirectory("graft-ann4x").toString
+    val dir = Spec.tmpDir("graft-ann4x").toString
     tools.ScaleData.generate(spark, "/root/testdata/sf0.01", dir)
     val out = SparkEntry.queries("q123_ann_recall")(spark, dir)
       .agg(avg(col("recall_at_10")).as("mean_recall"))

@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Co-located joins via bucketing: when both sides are bucketed by the
@@ -17,7 +15,7 @@ class BucketingSpec extends AnyFunSuite {
 
   test("equal-bucketed tables join with zero shuffle exchanges") {
     import org.apache.spark.sql.functions._
-    val wh = Files.createTempDirectory("graft-bucketed").toString
+    val wh = Spec.tmpDir("graft-bucketed").toString
     val orders = Tables.orders(spark, Spec.sfDir)
     val lineitem = Tables.lineitem(spark, Spec.sfDir)
     spark.sql("DROP TABLE IF EXISTS b_orders")

@@ -95,7 +95,6 @@ class CentroidOpsSpec extends AnyFunSuite {
     val pts = Seq.tabulate(300)(i => (i.toLong, vec().toSeq))
     val df = pts.toDF("vec_id", "sv")
       .withColumn("xx", graft.functions.VecOps.vecDot(col("sv"), col("sv")))
-    graft.functions.VecOps.ensureRegistered(s)
     val got = df.select(col("vec_id"),
         CentroidOps.nearestCentroid(idx, col("sv"), col("xx")).as("cid"))
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap

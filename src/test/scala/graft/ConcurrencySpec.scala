@@ -110,7 +110,7 @@ class ConcurrencySpec extends AnyFunSuite {
   test("cold artifact chain built by 8 racing threads: one winner, same rows") {
     import java.nio.file.{Files, Path, Paths}
     // fresh fixture copy = fresh fingerprint = no artifacts yet
-    val tmp = Files.createTempDirectory("graft-conc-fixture")
+    val tmp = Spec.tmpDir("graft-conc-fixture")
     def copyDir(name: String): Unit = {
       val src = Paths.get(d, name)
       val walk = Files.walk(src)

@@ -14,7 +14,7 @@ class DsvWriteSpec extends AnyFunSuite {
   lazy val spark = Spec.spark
 
   private def freshDir(): String =
-    java.nio.file.Files.createTempDirectory("graft-dsv-spec").toString + "/t"
+    Spec.tmpDir("graft-dsv-spec").toString + "/t"
 
   private def names(dir: String): Seq[String] = {
     val f = new java.io.File(dir)
@@ -114,7 +114,7 @@ class DsvWriteSpec extends AnyFunSuite {
 
   test("streaming sink: multi-epoch append, exactly-once across a restart") {
     import java.nio.file.Files
-    val root = Files.createTempDirectory("graft-dsv-stream").toString
+    val root = Spec.tmpDir("graft-dsv-stream").toString
     val in = Files.createDirectories(
       java.nio.file.Paths.get(s"$root/in")).toString
     val dir = s"$root/t"

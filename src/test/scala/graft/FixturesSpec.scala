@@ -94,7 +94,7 @@ class FixturesSpec extends AnyFunSuite {
     // The historical fixture encoding (TIMESTAMP(NANOS)) surfaces as
     // LongType under spark.sql.legacy.parquet.nanosAsLong; a plain
     // INT64 column reads identically, so it exercises the same branch.
-    val dir = java.nio.file.Files.createTempDirectory("graft-fixspec").toString
+    val dir = Spec.tmpDir("graft-fixspec").toString
     val nanos = Seq(
       (1L, 7L, 1700000000123456789L),
       (2L, 7L, 1700000000999999999L))
@@ -112,7 +112,7 @@ class FixturesSpec extends AnyFunSuite {
     // the r7 incident's last corner (VERDICT r9 #6): a long-lived JVM
     // must never serve a stale derive-from-n count (or a stale file
     // listing) after a fixture dir is regenerated IN PLACE
-    val dir = java.nio.file.Files.createTempDirectory("graft-regen").toString
+    val dir = Spec.tmpDir("graft-regen").toString
     def gen(n: Int): Unit = {
       spark.range(n).selectExpr("id AS doc_id", "'a b c' AS text")
         .coalesce(1)
@@ -135,7 +135,7 @@ class FixturesSpec extends AnyFunSuite {
     // q118's evolved orders layout and q171's blob files are written
     // once per fixture and memoized; after an in-place regeneration
     // they must be rebuilt from the new bytes, not served stale
-    val dir = java.nio.file.Files.createTempDirectory("graft-regen-dirs").toString
+    val dir = Spec.tmpDir("graft-regen-dirs").toString
     def gen(n: Int, tag: String): Unit = {
       spark.range(n).selectExpr("id AS doc_id", s"concat('$tag ', id) AS text")
         .coalesce(1).write.mode("overwrite").parquet(s"$dir/documents.parquet")
@@ -166,7 +166,7 @@ class FixturesSpec extends AnyFunSuite {
     // COPY_ATTRIBUTES keeps every size and mtime, so both copies have
     // the same fingerprint; only the dir in the memo key tells them apart
     import java.nio.file.{Files, StandardCopyOption}
-    val base = Files.createTempDirectory("graft-twins")
+    val base = Spec.tmpDir("graft-twins")
     val src = java.nio.file.Paths.get(Spec.sfDir)
     val dirs = Seq("a", "b").map { n =>
       val to = base.resolve(n)
@@ -213,7 +213,7 @@ class FixturesSpec extends AnyFunSuite {
         case other => other
       }).collect { case e: ShuffleExchangeExec => e }
     def table(files: Int): String = {
-      val dir = java.nio.file.Files.createTempDirectory("graft-spread").toString
+      val dir = Spec.tmpDir("graft-spread").toString
       spark.range(200).selectExpr("id AS doc_id", "'a b c' AS text")
         .repartition(files)
         .write.mode("overwrite").parquet(s"$dir/documents.parquet")
@@ -250,7 +250,7 @@ class FixturesSpec extends AnyFunSuite {
     // has (stale by construction) could touch a reaped tree — and the
     // production TTL (24 h) keeps any plausible in-flight query out of
     // reach; the test drops it to 0 and backdates the tree's mtime.
-    val dir = java.nio.file.Files.createTempDirectory("graft-gc").toString
+    val dir = Spec.tmpDir("graft-gc").toString
     def gen(n: Int): Unit = {
       spark.range(n).selectExpr("id AS doc_id", "'a b c' AS text")
         .coalesce(1)
@@ -285,7 +285,7 @@ class FixturesSpec extends AnyFunSuite {
     // "/sf 1" and "/sf_1" sanitize to the same readable prefix; without
     // the raw-path hash in the slug, a reap driven by one fixture could
     // match (and delete) the OTHER live fixture's current tree.
-    val base = java.nio.file.Files.createTempDirectory("graft-slug")
+    val base = Spec.tmpDir("graft-slug")
     val a = java.nio.file.Files.createDirectory(base.resolve("sf 1"))
     val b = java.nio.file.Files.createDirectory(base.resolve("sf_1"))
     assert(Artifacts.dirOf(a.toString).getFileName.toString !=
@@ -297,7 +297,7 @@ class FixturesSpec extends AnyFunSuite {
     // A JVM dying between the atomic move-aside and the recursive
     // delete leaves a `.reap-*` directory that no longer matches the
     // slug filter; the GC must collect those too or they leak forever.
-    val dir = java.nio.file.Files.createTempDirectory("graft-orph").toString
+    val dir = Spec.tmpDir("graft-orph").toString
     spark.range(3).selectExpr("id AS doc_id", "'x' AS text")
       .coalesce(1).write.mode("overwrite").parquet(s"$dir/documents.parquet")
     sys.props("graft.artifacts.ttlMillis") = "0"

@@ -24,7 +24,7 @@ class MapReduceSpec extends AnyFunSuite {
   lazy val spark: SparkSession = Spec.spark
 
   private def mkCorpus(lines: Seq[Seq[String]]): String = {
-    val dir = Files.createTempDirectory("graft-corpus")
+    val dir = Spec.tmpDir("graft-corpus")
     lines.zipWithIndex.foreach { case (ls, i) =>
       Files.write(dir.resolve(f"file$i%02d"),
         ls.mkString("", "\n", "\n").getBytes("UTF-8"))
@@ -58,7 +58,7 @@ class MapReduceSpec extends AnyFunSuite {
   }
 
   test("word count matches reference semantics incl. empty-token and bracket keys") {
-    val out = Files.createTempDirectory("graft-wc").toString + "/out"
+    val out = Spec.tmpDir("graft-wc").toString + "/out"
     MapReduce.wordCount(spark, corpus, out, numReducers = 2)
     val parts = readParts(out)
     assert(parts.map(_._1) == Seq("part-00000", "part-00001"))
@@ -84,14 +84,14 @@ class MapReduceSpec extends AnyFunSuite {
 
   test("grep filters case-insensitively and drops blank lines") {
     val dir = mkCorpus(Seq(Seq("a Product line", "", "no match", "PRODUCT!")))
-    val out = Files.createTempDirectory("graft-grep").toString + "/out"
+    val out = Spec.tmpDir("graft-grep").toString + "/out"
     MapReduce.grep(spark, dir, out, query = "product", numReducers = 1)
     val all = readParts(out).flatMap(_._2)
     assert(all == Seq("PRODUCT!", "a Product line"))
   }
 
   test("executable pipeline job (runPipe) reproduces word count byte-for-byte") {
-    val out = Files.createTempDirectory("graft-pipe").toString + "/out"
+    val out = Spec.tmpDir("graft-pipe").toString + "/out"
     MapReduce.runPipe(spark, corpus, out,
       // the reference's wc_map.sh / wc_reduce.sh pipelines VERBATIM
       // (tests/testdata/exec/wc_map.sh:13, wc_reduce.sh:14)
@@ -108,7 +108,7 @@ class MapReduceSpec extends AnyFunSuite {
   }
 
   test("pipeReduce under run sees a key-sorted stream per partition") {
-    val out = Files.createTempDirectory("graft-pipered").toString + "/out"
+    val out = Spec.tmpDir("graft-pipered").toString + "/out"
     // uniq -c counts runs of equal keys: right only on key-sorted input
     MapReduce.run(spark, corpus, out, MapReduce.wcMapTr,
       MapReduce.pipeReduce("""cut -f1 | uniq -c | awk '{print $2"\t"$1}'"""),
@@ -118,7 +118,7 @@ class MapReduceSpec extends AnyFunSuite {
 
   test("runPipe keeps the TRUE partition index when earlier partitions are empty") {
     val dir = mkCorpus(Seq(Seq("solo")))
-    val out = Files.createTempDirectory("graft-solo").toString + "/out"
+    val out = Spec.tmpDir("graft-solo").toString + "/out"
     MapReduce.runPipe(spark, dir, out,
       mapCmd = """tr '[ \t]' '\n' | tr '[:upper:]' '[:lower:]' | awk '{print $1"\t1"}'""",
       reduceCmd = """cut -f1 | uniq -c | awk '{print $2"\t"$1}'""",
@@ -146,7 +146,7 @@ class MapReduceSpec extends AnyFunSuite {
 
   test("empty partitions still produce empty part files (exactly R outputs)") {
     val dir = mkCorpus(Seq(Seq("solo")))
-    val out = Files.createTempDirectory("graft-empty").toString + "/out"
+    val out = Spec.tmpDir("graft-empty").toString + "/out"
     MapReduce.wordCount(spark, dir, out, numReducers = 4)
     val parts = readParts(out)
     assert(parts.map(_._1) ==
@@ -156,7 +156,7 @@ class MapReduceSpec extends AnyFunSuite {
 
   test("sink overwrites pre-existing output (delete + recreate)") {
     val dir = mkCorpus(Seq(Seq("x y")))
-    val out = Files.createTempDirectory("graft-ow").toString + "/out"
+    val out = Spec.tmpDir("graft-ow").toString + "/out"
     Files.createDirectories(Paths.get(out))
     Files.write(Paths.get(out, "stale"), "junk".getBytes)
     MapReduce.wordCount(spark, dir, out, numReducers = 1)
@@ -168,7 +168,7 @@ class MapReduceSpec extends AnyFunSuite {
     // UTF-16 order puts U+1F600 (a surrogate pair, 0xD83D...) before
     // U+FFFD; byte order (EF BF BD < F0 9F 98 80) puts U+FFFD first
     val dir = mkCorpus(Seq(Seq("\uD83D\uDE00\t1", "\uFFFD\t1")))
-    val out = Files.createTempDirectory("graft-bytes").toString + "/out"
+    val out = Spec.tmpDir("graft-bytes").toString + "/out"
     MapReduce.runPipe(spark, dir, out, mapCmd = "cat", reduceCmd = "cat",
       numReducers = 1)
     assert(readParts(out) ==
@@ -182,7 +182,7 @@ class MapReduceSpec extends AnyFunSuite {
   }
 
   test("a retried attempt of one reduce task leaves one part file, same bytes, no attempt file") {
-    val staging = Files.createTempDirectory("graft-attempt")
+    val staging = Spec.tmpDir("graft-attempt")
     // a null line is written as an empty one, as Spark's text sink does
     def attempt(id: Long): Array[Byte] = {
       MapReduce.writePart(staging.toString, 3, id,
@@ -198,7 +198,7 @@ class MapReduceSpec extends AnyFunSuite {
 
   test("the writer replaces an existing output dir whole") {
     val dir = mkCorpus(Seq(Seq("x y")))
-    val out = Paths.get(Files.createTempDirectory("graft-replace").toString, "out")
+    val out = Paths.get(Spec.tmpDir("graft-replace").toString, "out")
     Files.createDirectories(out.resolve("sub"))
     Files.write(out.resolve("part-00009"), "stale\n".getBytes)
     Files.write(out.resolve("sub").resolve("stray"), "junk".getBytes)
@@ -209,7 +209,7 @@ class MapReduceSpec extends AnyFunSuite {
   }
 
   test("a routed frame whose partition count is not R fails before the old output is touched") {
-    val out = Paths.get(Files.createTempDirectory("graft-count").toString, "out")
+    val out = Paths.get(Spec.tmpDir("graft-count").toString, "out")
     Files.createDirectories(out)
     Files.write(out.resolve("part-00000"), "old\n".getBytes)
     val lines = spark.range(6).repartition(3)
@@ -230,13 +230,13 @@ class MapReduceSpec extends AnyFunSuite {
     val split: MapReduce.Mapper = ls => ls.select(
       substring_index(col("value"), "|", 1).as("key"),
       translate(substring_index(col("value"), "|", -1), "~", "\r").as("value"))
-    val runOut = Files.createTempDirectory("graft-utf8").toString + "/out"
+    val runOut = Spec.tmpDir("graft-utf8").toString + "/out"
     MapReduce.run(spark, dir, runOut, split, kv => kv, numReducers = 1)
     assert(part0(runOut) ==
       "\tempty key\n\u00e9\t\u00fc\rx\n\u65e5\u672c\t\u8a9e\n".getBytes("UTF-8").toSeq)
     // the reducer emits the CR; RDD.pipe reads its stdout as lines and
     // ends a line at a lone CR, so the value arrives split in two
-    val pipeOut = Files.createTempDirectory("graft-utf8").toString + "/out"
+    val pipeOut = Spec.tmpDir("graft-utf8").toString + "/out"
     MapReduce.runPipe(spark, dir, pipeOut, mapCmd = "tr '|' '\\t'",
       reduceCmd = "tr '~' '\\r'", numReducers = 1)
     assert(part0(pipeOut) ==
@@ -257,7 +257,7 @@ class MapReduceSpec extends AnyFunSuite {
     // shuffle partitions == R (4) is the case where a plain repartition
     // on the aggregate's key was dropped and AQE coalesced to one part
     assert(spark.conf.get("spark.sql.shuffle.partitions") == "4")
-    val out = Files.createTempDirectory("graft-route").toString + "/out"
+    val out = Spec.tmpDir("graft-route").toString + "/out"
     MapReduce.wordCount(spark, manyKeys, out, numReducers = 4)
     val parts = readParts(out)
     assert(parts.map(_._1) == (0 until 4).map(i => f"part-$i%05d"))
@@ -312,7 +312,7 @@ class MapReduceSpec extends AnyFunSuite {
 
   test("runPipe feeds a cat reducer the exact sorted multiset of its partition") {
     for (r <- Seq(1, 3)) {
-      val out = Files.createTempDirectory("graft-runs").toString + "/out"
+      val out = Spec.tmpDir("graft-runs").toString + "/out"
       MapReduce.runPipe(spark, dupCorpus, out, mapCmd = "cat",
         reduceCmd = "cat", numReducers = r, numMappers = Some(4))
       val md5 = new MapReduce.Md5Partitioner(r)
@@ -380,7 +380,7 @@ class MapReduceSpec extends AnyFunSuite {
     // file: the first and last stop folding, the middle one folds)
     for (r <- Seq(1, 3)) {
       val files = Seq(distinctFirst, repeatsFirst, distinctFirst.reverse)
-      val out = Files.createTempDirectory("graft-runs").toString + "/out"
+      val out = Spec.tmpDir("graft-runs").toString + "/out"
       MapReduce.runPipe(spark, mkCorpus(files), out, mapCmd = "cat",
         reduceCmd = "cat", numReducers = r, numMappers = Some(1))
       val md5 = new MapReduce.Md5Partitioner(r)

@@ -400,7 +400,7 @@ class PlanAuditSpec extends AnyFunSuite {
     import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
     import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
     val p = spark.sparkContext.defaultParallelism
-    val wide = java.nio.file.Files.createTempDirectory("graft-wide").toString
+    val wide = Spec.tmpDir("graft-wide").toString
     Seq("documents", "embeddings").foreach { t =>
       Tables(spark, Spec.sfDir, t).repartition(p)
         .write.mode("overwrite").parquet(s"$wide/$t.parquet")
@@ -507,7 +507,7 @@ class PlanAuditSpec extends AnyFunSuite {
     s.conf.set(
       "spark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold",
       "1KB")
-    val dir = java.nio.file.Files.createTempDirectory("graft-bloom").toString
+    val dir = Spec.tmpDir("graft-bloom").toString
     s.range(0, 200000).select(col("id").as("k"),
       (col("id") % 1000).as("v")).write.parquet(s"$dir/fact")
     s.range(0, 20000).select(col("id").as("k"),
@@ -523,8 +523,7 @@ class PlanAuditSpec extends AnyFunSuite {
 
   test("date-partitioned layout prunes partitions at the scan") {
     import org.apache.spark.sql.functions._
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft-part").toString + "/events_byday"
+    val dir = Spec.tmpDir("graft-part").toString + "/events_byday"
     Tables.events(spark, Spec.sfDir)
       .withColumn("day", date_format(col("ts"), "yyyy-MM-dd"))
       .write.partitionBy("day").parquet(dir)

@@ -87,7 +87,6 @@ class PropertySpec extends AnyFunSuite {
     import org.apache.spark.sql.types.{ArrayType, StringType, StructField, StructType}
     import graft.functions.GramOps
     val spark = Spec.spark
-    GramOps.ensureRegistered(spark)
     // a small vocabulary forces repeated tokens and repeated windows;
     // null tokens test concat_ws's and xxhash64's null skipping
     val token: Gen[String] = Gen.frequency(6 -> Gen.oneOf("a", "b", "ab", ""),
@@ -118,7 +117,6 @@ class PropertySpec extends AnyFunSuite {
       StructField, StructType}
     import graft.functions.GramOps
     val spark = Spec.spark
-    GramOps.ensureRegistered(spark)
     val token: Gen[String] = Gen.frequency(6 -> Gen.oneOf("a", "b", "ab", ""),
       3 -> unicodeKey, 1 -> Gen.const(null: String))
     val toks: Gen[Seq[String]] = Gen.frequency(1 -> Gen.const(null: Seq[String]),
@@ -213,8 +211,7 @@ class PropertySpec extends AnyFunSuite {
     import Spec.spark.implicits._
     import org.apache.spark.sql.functions._
     import org.apache.spark.sql.expressions.Window
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft-ntile").toString
+    val dir = Spec.tmpDir("graft-ntile").toString
     val rows = (1 to 23).map { i =>
       (i.toLong, s"t$i", "en", "web", (i % 5).toLong)
     }

@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.sources.Sinks
@@ -26,7 +24,7 @@ class SinksSpec extends AnyFunSuite {
     s.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
     import org.apache.spark.sql.functions.col
     import s.implicits.{localSeqToDatasetHolder => toDs}
-    val dir = Files.createTempDirectory("graft-dynpart").toString + "/t"
+    val dir = Spec.tmpDir("graft-dynpart").toString + "/t"
     val seed = Seq((1L, "2024-01-01"), (2L, "2024-01-01"),
       (3L, "2024-01-02"), (4L, "2024-01-03"))
     toDs(seed).toDF("id", "day").write.partitionBy("day").parquet(dir)
@@ -43,7 +41,7 @@ class SinksSpec extends AnyFunSuite {
   }
 
   test("writeCompacted bounds the output file count and keeps every row") {
-    val scratch = Files.createTempDirectory("graft-compact").toString
+    val scratch = Spec.tmpDir("graft-compact").toString
     val small = s"$scratch/small"
     val compacted = s"$scratch/compacted"
     // 40 writers over 200 rows → a directory of tiny files

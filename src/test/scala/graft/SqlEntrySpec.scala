@@ -88,6 +88,23 @@ class SqlEntrySpec extends AnyFunSuite {
       "SELECT vec_cosine(array(1.0D, 0.0D), array(0.0D, 2.0D)) AS c")
       .head().getDouble(0)
     assert(math.abs(o) < 1e-12)
+    // one list, two paths: the extension gives a session every engine
+    // SQL function (a fresh session, so no earlier registerAll counts),
+    // and Graft.registerFunctions restores the same names on a session
+    // whose registry lost them
+    def missing(x: org.apache.spark.sql.SparkSession) =
+      Spec.engineFunctions.filterNot(x.catalog.functionExists)
+    assert(missing(spark).isEmpty)
+    assert(missing(spark.newSession()).isEmpty,
+      "the extension must inject every engine SQL function")
+    val bare = Spec.bareSession()
+    assert(missing(bare) == Spec.engineFunctions)
+    Graft.registerFunctions(bare)
+    assert(missing(bare).isEmpty,
+      "registerFunctions must register every engine SQL function")
+    assert(bare.sql(
+      "SELECT ring_lookup(array(64L, 640L), 5L)").head().getLong(0) == 640L)
+    assert(missing(spark).isEmpty, "the drop must not reach Spec.spark")
   }
 
   test("streaming operator shapes are SQL-visible and match the operators") {
@@ -131,7 +148,7 @@ class SqlEntrySpec extends AnyFunSuite {
 
   test("pure-SQL bucketed join over the persistent catalog has no exchange") {
     val s = registered
-    val wh = java.nio.file.Files.createTempDirectory("graft-sql-bucketed")
+    val wh = Spec.tmpDir("graft-sql-bucketed")
       .toString
     Graft.registerBucketed(s, Spec.sfDir, location = Some(wh),
       overwrite = true)

@@ -77,8 +77,7 @@ class StreamingSpec extends AnyFunSuite {
     // appended — the pattern every streaming-lakehouse sink uses.
     // foreachBatch gets a BOUNDED frame per batch, so the same
     // mergeUpsert the batch query uses applies unchanged.
-    import java.nio.file.Files
-    val dir = Files.createTempDirectory("graft-cdc").toString + "/table"
+    val dir = Spec.tmpDir("graft-cdc").toString + "/table"
     Seq((1L, "a", 10.0), (2L, "b", 20.0), (3L, "c", 30.0))
       .toDF("k", "status", "price").write.parquet(dir)
     implicit val sc = spark.sqlContext
@@ -112,9 +111,9 @@ class StreamingSpec extends AnyFunSuite {
     // checkpointLocation must pick up EXACTLY after the last committed
     // batch — no reprocessing (duplicate results), no gaps.
     import java.nio.file.Files
-    val in = Files.createTempDirectory("graft-ckpt-in")
-    val ckpt = Files.createTempDirectory("graft-ckpt-loc").toString
-    val out = Files.createTempDirectory("graft-ckpt-out").toString + "/sink"
+    val in = Spec.tmpDir("graft-ckpt-in")
+    val ckpt = Spec.tmpDir("graft-ckpt-loc").toString
+    val out = Spec.tmpDir("graft-ckpt-out").toString + "/sink"
     def runOnce(): Unit = {
       val q = spark.readStream.text(in.toString)
         .selectExpr("CAST(value AS BIGINT) AS id")
@@ -368,8 +367,7 @@ class StreamingSpec extends AnyFunSuite {
     // — and holds the final per-user state to a driver-side fold of
     // the whole event log. Integer cents, so batch boundaries cannot
     // change any sum.
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft-incstats").toString
+    val dir = Spec.tmpDir("graft-incstats").toString
     Tables.events(spark, Spec.sfDir)
       .select(col("event_id"), col("ts"), col("user_id"),
         col("event_type"), col("value"))
@@ -414,8 +412,7 @@ class StreamingSpec extends AnyFunSuite {
     // per-user states are IDENTICAL to the mapGroupsWithState path's —
     // one semantics, two state APIs — and the run was genuinely
     // incremental (update-mode rows across >1 micro-batch).
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft-twsstats").toString
+    val dir = Spec.tmpDir("graft-twsstats").toString
     Tables.events(spark, Spec.sfDir)
       .select(col("event_id"), col("ts"), col("user_id"),
         col("event_type"), col("value"))
@@ -505,6 +502,17 @@ class StreamingSpec extends AnyFunSuite {
     }
   }
 
+  test("q175's state store lives under the engine scratch root") {
+    import org.apache.spark.sql.execution.datasources.v2.DataSourceV2Relation
+    val q = SparkEntry.queries("q175_state_reader")(spark, Spec.sfDir)
+    val paths = q.queryExecution.analyzed.collect {
+      case r: DataSourceV2Relation => r.options.get("path")
+    }
+    assert(paths.nonEmpty)
+    paths.foreach(p => assert(
+      java.nio.file.Paths.get(p).startsWith(sources.FileFormats.scratchRoot), p))
+  }
+
   test("near-dup ingest state is one row per occupied bucket (statestore read)") {
     import org.apache.spark.sql.functions.col
     import graft.streaming.Streams.BandRow
@@ -518,8 +526,7 @@ class StreamingSpec extends AnyFunSuite {
     spark.conf.set(providerKey,
       "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
     try {
-      val root = java.nio.file.Files
-        .createTempDirectory("graft-neardup-ckpt").toString
+      val root = Spec.tmpDir("graft-neardup-ckpt").toString
       val rows = (1L to 40L).flatMap(id => Seq(
         BandRow(id, 0, s"s${id % 7}"), BandRow(id, 1, s"s${id % 11}")))
       rows.toDF().write.parquet(s"$root/src")
@@ -569,8 +576,7 @@ class StreamingSpec extends AnyFunSuite {
     val prior = spark.conf.getOption(providerKey)
     spark.conf.set(providerKey,
       "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    val root = java.nio.file.Files
-      .createTempDirectory("graft-neardup-soak").toString
+    val root = Spec.tmpDir("graft-neardup-soak").toString
     val allRows = (1L to 40L).flatMap(id => Seq(
       BandRow(id, 0, s"s${id % 7}"), BandRow(id, 1, s"s${id % 11}")))
     // 10 id-ordered chunks, one file each, mtimes forced strictly

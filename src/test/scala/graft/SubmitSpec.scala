@@ -39,7 +39,7 @@ class SubmitSpec extends AnyFunSuite {
 
   test("two queued jobs produce correct, separate outputs") {
     assume(Files.isDirectory(Paths.get(refData)))
-    val base = Files.createTempDirectory("graft-submit-fifo").toString
+    val base = Spec.tmpDir("graft-submit-fifo").toString
     val jobs = Submit.parseJobs(Array(
       "--input", s"$refData/input", "--output", s"$base/out1",
       "--mapper", s"$refData/exec/wc_map.sh",
@@ -69,7 +69,7 @@ class SubmitSpec extends AnyFunSuite {
 
   test("Submit runs the reference executables to golden word-count output") {
     assume(Files.isDirectory(Paths.get(refData)))
-    val out = Files.createTempDirectory("graft-submit").toString + "/out"
+    val out = Spec.tmpDir("graft-submit").toString + "/out"
     Submit.run(Spec.spark, Submit.parse(Array(
       "--input", s"$refData/input",
       "--output", out,

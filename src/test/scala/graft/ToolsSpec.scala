@@ -17,11 +17,11 @@ class ToolsSpec extends AnyFunSuite {
   }
 
   test("ScaleData refuses to plant cohorts into an empty corpus with a clear message") {
-    val src = java.nio.file.Files.createTempDirectory("graft-empty").toString
+    val src = Spec.tmpDir("graft-empty").toString
     spark.range(0).selectExpr("id AS doc_id", "'' AS text", "'en' AS lang",
         "'web' AS source", "0L AS n_chars")
       .write.mode("overwrite").parquet(s"$src/documents.parquet")
-    val out = java.nio.file.Files.createTempDirectory("graft-empty-out").toString
+    val out = Spec.tmpDir("graft-empty-out").toString
     val e = intercept[IllegalArgumentException] {
       tools.ScaleData.generate(spark, src, out, plant = 1)
     }

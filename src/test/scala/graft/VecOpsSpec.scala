@@ -71,7 +71,6 @@ class VecOpsSpec extends AnyFunSuite {
 
   test("ring_lookup binary search equals the linear fold for all positions") {
     import graft.functions.RingOps
-    RingOps.ensureRegistered(spark)
     // a small packed ring (position * 64 + shard) and every probe class:
     // below the first vnode, exact hits, between vnodes, above the last
     // (wrap). Reference is the declarative fold ring_lookup replaced.
@@ -104,5 +103,35 @@ class VecOpsSpec extends AnyFunSuite {
     val plan = df.selectExpr("ring_lookup(r, h)")
       .queryExecution.executedPlan.toString
     assert(!plan.contains("CodegenFallback"))
+  }
+
+  test("Column entry points and the queries on them need no registry") {
+    import org.apache.spark.sql.{Row, SparkSession}
+    import graft.functions.{GramOps, RingOps, Sketches}
+    val bloom = Sketches.bloomOf(Seq("a b c", "x").toDF("k"), "k", 0.01)
+    def entryPoints(x: SparkSession): Seq[Row] =
+      x.createDataFrame(Seq(
+        (Seq(1.0, 2.0), Seq(3.0, 4.0), Seq(64L, 640L), 5L,
+          Seq("a", "b", "c", "d"), Seq(1), "a b c"),
+        (Seq(0.5), Seq(2.0, 9.0), Seq(64L, 640L), 11L,
+          Seq("x", "y"), Seq.empty[Int], "q")))
+        .toDF("a", "b", "r", "h", "toks", "cut", "k")
+        .select(VecOps.vecDot(col("a"), col("b")),
+          RingOps.ringLookup(col("r"), col("h")),
+          Sketches.bloomContains(bloom, col("k")),
+          GramOps.wgramFps(col("toks"), 2), GramOps.shingles3(col("toks")),
+          GramOps.scrubText(col("toks"), col("cut")))
+        .collect().toSeq
+    def rows(x: SparkSession, q: String): Seq[String] =
+      SparkEntry.queries(q)(x, Spec.sfDir).collect().map(_.toString).toSeq.sorted
+    val bare = Spec.bareSession()
+    assert(!bare.catalog.functionExists("vec_dot"))
+    val want = entryPoints(spark)
+    assert(want.head.getDouble(0) == 11.0 && want.head.getLong(1) == 640L)
+    assert(entryPoints(bare) == want)
+    Seq("q33_ann_bruteforce", "q198_exact_substring").foreach { q =>
+      val r = rows(bare, q)
+      assert(r.nonEmpty && r == rows(spark, q), q)
+    }
   }
 }

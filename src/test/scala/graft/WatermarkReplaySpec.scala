@@ -44,7 +44,7 @@ class WatermarkReplaySpec extends AnyFunSuite {
     val bIds = batched.select("b").distinct().orderBy("b")
       .collect().map(_.getLong(0))
 
-    val srcDir = java.nio.file.Files.createTempDirectory("wm-replay").toString
+    val srcDir = Spec.tmpDir("wm-replay").toString
     val sinkName = s"wm_replay_${System.nanoTime()}"
     val q = spark.readStream
       .schema("event_id LONG, ts TIMESTAMP, user_id LONG, " +
