@@ -39,9 +39,17 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   */
 object Artifacts {
 
-  private def root: Path = Paths.get(
-    sys.env.getOrElse("SPARK_GRAFT_ARTIFACT_DIR",
+  /** The artifact root for fixture `d`. A fixture under the engine's
+    * scratch root (a spec's temp fixture) keeps its trees there too, so
+    * the JVM-exit hook deletes them with it; any other fixture uses the
+    * shared root. */
+  private def rootOf(d: String): Path = {
+    val scratch = sources.FileFormats.scratchRoot
+    if (Paths.get(d).toAbsolutePath.normalize.startsWith(scratch))
+      scratch.resolve("graft-artifacts")
+    else Paths.get(sys.env.getOrElse("SPARK_GRAFT_ARTIFACT_DIR",
       System.getProperty("java.io.tmpdir") + "/graft-artifacts"))
+  }
 
   /** Content fingerprint of a fixture dir: sha-256 over the sorted
     * (relative path, size, mtime-millis) triples of every regular file
@@ -97,7 +105,7 @@ object Artifacts {
   /** The artifact tree for fixture `d` at its CURRENT fingerprint
     * (test observability — FixturesSpec pins the retention GC). */
   private[graft] def dirOf(d: String): Path =
-    root.resolve(s"${slugOf(d)}-${fingerprint(d)}")
+    rootOf(d).resolve(s"${slugOf(d)}-${fingerprint(d)}")
 
   private def pathOf(d: String, name: String): Path = dirOf(d).resolve(name)
 
@@ -177,7 +185,7 @@ object Artifacts {
     val slug = slugOf(d)
     val current = s"$slug-${fingerprint(d)}"
     val cutoff = System.currentTimeMillis() - ttlMs
-    val siblings = Files.list(root)
+    val siblings = Files.list(rootOf(d))
     try {
       import scala.jdk.CollectionConverters._
       siblings.iterator().asScala

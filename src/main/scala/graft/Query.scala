@@ -17,8 +17,4 @@ object Q {
   def apply(name: String, oracle: String)(
       fn: (SparkSession, String) => DataFrame): Q =
     Q(name, fn, Some(oracle))
-
-  /** Non-SQL-expressible op → driver records a weaker rows-only check. */
-  def noOracle(name: String)(fn: (SparkSession, String) => DataFrame): Q =
-    Q(name, fn, None)
 }

@@ -43,9 +43,10 @@ object Similarity {
   // NUM_TABLES independent sign codes, each bit the sign of a ±1
   // projection over ALL 64 dimensions (a single-table code over a few
   // raw dimensions has recall near zero on anything but planted
-  // duplicates). The ±1 matrices are deterministic md5 bits, so the
-  // exact same constants are embedded in the Spark plan and in the
-  // generated DuckDB oracle SQL. Projections are over the QUANTIZED
+  // duplicates). The ±1 matrices are deterministic md5 bits ([[signs]]):
+  // the Spark side reads them as one literal tensor through one array
+  // expression ([[codes]]), the DuckDB oracle as literal lists in one
+  // SQL form ([[codesSql]]). Projections are over the QUANTIZED
   // vectors: integer arithmetic, so the code is bit-identical across
   // engines — a float sum could flip a sign near zero.
   //
@@ -53,10 +54,11 @@ object Similarity {
   // table, so candidate volume is ~n²/2^bits — fixed bits is
   // semi-quadratic. [[numBits]] picks the smallest width with expected
   // bucket population ≤ TARGET_BUCKET, by an integer-exact rule the
-  // DuckDB oracle re-derives verbatim ([[NB_SQL]]): the Spark plan
-  // computes exactly that many bit projections, the oracle computes the
-  // full MAX_BITS code and masks to the same low bits — identical codes
-  // by construction.
+  // DuckDB oracle re-derives verbatim ([[NB_SQL]]): the Spark side
+  // computes exactly that many bit projections for a query vector and
+  // masks the persisted full-width codes to the same low bits, and the
+  // oracle computes the full MAX_BITS code and masks likewise —
+  // identical codes by construction.
 
   private val NUM_TABLES = 8
   private val MAX_TABLES = 16
@@ -135,30 +137,31 @@ object Similarity {
   private val IVF_K = 16
   private val IVF_NPROBE = 6
 
-  private val signs: Array[Array[Array[Int]]] =
+  /** The ±1 sign of table t, bit b, dimension i (md5 bits salted per
+    * table, so the first 8 tables are the same whether or not the
+    * wider set is in play). */
+  private[graft] val signs: Array[Array[Array[Int]]] =
     Array.tabulate(MAX_TABLES, MAX_BITS, DIM) { (t, b, i) =>
       val d = java.security.MessageDigest.getInstance("MD5")
         .digest(s"$t:$b:$i".getBytes("UTF-8"))
       if ((d(0) & 1) == 1) 1 else -1
     }
 
-  /** The t-th table's `nbits`-wide LSH code of a quantized embedding
-    * column — only the derived number of projections is computed. */
-  private def codeT(ev: Column, t: Int, nbits: Int): Column =
-    (0 until nbits).map { b =>
-      val sArr = typedLit(signs(t)(b).toSeq.map(_.toDouble))
-      val proj = dot(ev, sArr)
-      when(proj > 0, 1L << b).otherwise(0L)
-    }.reduce(_ + _)
+  /** [[signs]] as one literal tensor; lazy, so queries that never read
+    * a code (q33) do not build it. */
+  private lazy val SIGNS: Column =
+    typedLit(signs.toSeq.map(_.toSeq.map(_.toSeq.map(_.toDouble))))
 
-  /** The first `numTables` codes as (t, code) structs for one
-    * embedding (the ±1 matrices are salted per table, so the first 8
-    * are bit-identical whether or not the wider set is in play). */
-  private def codeStructs(ev: Column, nbits: Int,
-      numTables: Int = NUM_TABLES): Seq[Column] =
-    (0 until numTables).map { t =>
-      struct(lit(t).as("t"), codeT(ev, t, nbits).as("code"))
-    }
+  /** The first `numTables` tables' `nbits`-wide LSH codes of a
+    * quantized embedding column, as `array<bigint>`: bit b of table t
+    * is set when the vector's projection on `signs(t)(b)` is positive.
+    * One nested higher-order expression over [[dot]], so its generated
+    * code stays small at any width. */
+  private[graft] def codes(ev: Column, numTables: Int, nbits: Int): Column =
+    transform(slice(SIGNS, 1, numTables), ts =>
+      aggregate(transform(slice(ts, 1, nbits), (sg, b) =>
+        when(dot(ev, sg) > 0, call_function("shiftleft", lit(1L), b))
+          .otherwise(0L)), lit(0L), _ + _))
 
   /** Quantized vectors + FULL-width LSH codes for all [[MAX_TABLES]]
     * tables — the ANN system's persisted index, materialized once per
@@ -166,18 +169,17 @@ object Similarity {
     * by masking `cs[t]` to the corpus-derived width: bit projections
     * are independent, so the masked full-width code IS the nbits-wide
     * code (the DuckDB oracle applies the identical mask to the same
-    * full-width codes). At 100 TB the projection pass over every
-    * vector (MAX_TABLES × MAX_BITS integer dot products each) is the
-    * index BUILD job a vector system runs per corpus snapshot — never
-    * a per-query cost; queries pay one narrow scan of
+    * full-width codes). The build is one [[codes]] projection per
+    * vector (MAX_TABLES × MAX_BITS integer dot products), the index
+    * BUILD job a vector system runs per corpus snapshot — never a
+    * per-query cost; queries pay one narrow scan of
     * (vec_id, label, ev, cs). */
-  private def embCodes(s: SparkSession, d: String): DataFrame =
+  private[graft] def embCodes(s: SparkSession, d: String): DataFrame =
     graft.Artifacts.derived(s, d, s"emb_codes_t${MAX_TABLES}_b$MAX_BITS") {
       Tables.embeddings(s, d)
         .select(col("vec_id"), col("label"), quant(col("embedding")).as("ev"))
         .select(col("vec_id"), col("label"), col("ev"),
-          array((0 until MAX_TABLES)
-            .map(t => codeT(col("ev"), t, MAX_BITS)): _*).as("cs"))
+          codes(col("ev"), MAX_TABLES, MAX_BITS).as("cs"))
     }
 
   /** Build the ANN index artifacts if missing (bench warm step — a
@@ -311,72 +313,27 @@ object Similarity {
     }
   }
 
-  /** Full MAX_BITS-wide code in SQL; consumers mask with `msk` from the
-    * `nb` CTE, which equals the Spark side's nbits-wide code exactly
-    * (bit b's contribution is independent of every other bit). */
-  private def codeTSql(t: Int): String =
-    (0 until MAX_BITS).map { b =>
-      val sArr = signs(t)(b).mkString("[", ",", "]")
-      s"""(CASE WHEN list_sum(list_transform(range(1, ${DIM + 1}),
-         |    i -> ev[i] * ($sArr)[i])) > 0 THEN ${1L << b} ELSE 0 END)""".stripMargin
-    }.mkString("(", " + ", ")")
-
-  private def codesArraySqlN(numTables: Int): String =
-    (0 until numTables).map(t => s"CAST(${codeTSql(t)} AS BIGINT)")
-      .mkString("[", ", ", "]")
-
-  /** The corpus-codes CTE chain in VECTORIZABLE form — the shipped
-    * oracle for q34/q35 since round 14 (previously a per-rung manual
-    * conversion, `tools/ann16_oracle.py`). The [[codesArraySqlN]]
-    * lambda form materializes every vector's codes through ~34 KB of
-    * per-row `list_transform` SQL that DuckDB interprets per element:
-    * exact, but interpreter-bound — a documented oracle stop-line at
-    * 16×/64× in rounds 11–13 while the engine side finished. This
-    * chain computes the identical codes as one unnest join-aggregate:
-    * the ±1 projection rows (t, weight 2^b, sign array — the same
-    * [[signs]] constants, emitted as a VALUES relation) join the
-    * unnested quantized vectors on the dimension index, one sum per
-    * (vector, table, bit) gives the projection sign, and a masked
-    * weight-sum rebuilds each full-width code. Bit-equivalent because
-    * the quantized components are INTEGRAL doubles (round(x·1000),
-    * |v| ≤ ~3000): every projection sum stays far below 2^53 and is
-    * exact under ANY association order, so no sign — hence no code,
-    * hence no candidate set — can differ from the lambda form's. The
-    * sf0.01 gate re-certifies that equivalence every round (same
-    * hashes the lambda oracles produced through round 13); the same
-    * rule every other scale-sensitive derivation follows
-    * ([[numBits]], `Dedup.bandRows`) — one form, exact at every rung,
-    * no manual conversion step. */
-  private def codesChainSql(cols: String, numTables: Int): String = {
-    // Round 16: the unnest join-aggregate form (vector elements ×
-    // projection rows joined on the dimension index) pushed n×64×128
-    // rows through a hash join + aggregate — ~10⁹ intermediate rows at
-    // 64×, the worst remaining oracle cost (~183 s, shared by
-    // q34/q35/q123's comparator runs). The codes are now built IN-ROW:
-    // one native `list_dot_product` per (table, bit) — 128 fused
-    // loops per vector, zero intermediate rows, zero joins, one scan.
-    // Bit-equivalent for the same reason as before: the quantized
-    // components are INTEGRAL doubles (round(x·1000), |v| ≤ ~3000), so
-    // every projection sum is an exactly-represented integer under ANY
-    // association order and no sign — hence no code, hence no
-    // candidate set — can differ. (This is NOT the round-11 lambda
-    // stop-line shape coming back: that form was slow because
-    // `list_transform` interprets a lambda per ELEMENT; native
-    // list_dot_product has no per-element dispatch.)
-    val codeExprs = (0 until numTables).map { t =>
-      val bits = (0 until MAX_BITS).map { b =>
+  /** The oracle's LSH codes: the first `numTables` tables' FULL
+    * MAX_BITS-wide codes of the quantized column `ev`, as a BIGINT
+    * list — the SQL twin of [[codes]], one native `list_dot_product`
+    * per (table, bit) over the same [[signs]] constants. Consumers
+    * mask with `msk` from the `nb` CTE; the masked code equals the
+    * Spark side's nbits-wide code because bit b's contribution is
+    * independent of every other bit. Exact for the same reason on both
+    * engines: the quantized components are INTEGRAL doubles
+    * (round(x·1000), |v| ≤ ~3000), so every projection sum is an
+    * exactly-represented integer under ANY association order and no
+    * sign — hence no code, hence no candidate set — can differ. In-row
+    * and vectorized (no per-element lambda, no join), so it is the one
+    * form at every scale rung. */
+  private def codesSql(numTables: Int): String =
+    (0 until numTables).map { t =>
+      (0 until MAX_BITS).map { b =>
         s"(CASE WHEN list_dot_product(ev, " +
           s"${signs(t)(b).mkString("[", ",", "]")}) > 0 " +
           s"THEN ${1L << b} ELSE 0 END)"
-      }.mkString(" + ")
-      s"CAST($bits AS BIGINT)"
-    }
-    s"""c AS MATERIALIZED (SELECT $cols,
-       |  [${codeExprs.mkString(",\n   ")}] AS cs
-       |  FROM e)""".stripMargin
-  }
-
-  private def codesArraySql: String = codesArraySqlN(NUM_TABLES)
+      }.mkString("CAST(", " + ", " AS BIGINT)")
+    }.mkString("[", ",\n   ", "]")
 
   // ---- semantic-dedup / projection constants ------------------------------
 
@@ -456,7 +413,7 @@ object Similarity {
     // corpus side: the persisted index, masked to the derived width —
     // never a per-query projection pass
     val msk = (1L << nbits) - 1L
-    val codes = embCodes(s, d)
+    val index = embCodes(s, d)
       .select(col("vec_id"),
         explode(sequence(lit(0), lit(numTables - 1))).as("t"), col("cs"))
       .select(col("vec_id"), col("t"),
@@ -466,11 +423,11 @@ object Similarity {
     val masks: Seq[Long] = (0L until (1L << nbits))
       .filter(m => java.lang.Long.bitCount(m) <= radius)
     val probes = qs.select(col("qid"),
-        explode(array(codeStructs(col("qv"), nbits, numTables): _*)).as("tc"))
-      .select(col("qid"), col("tc.t").as("qt"),
+        posexplode(codes(col("qv"), numTables, nbits)).as(Seq("qt", "qcode")))
+      .select(col("qid"), col("qt"),
         explode(transform(typedLit(masks),
-          m => col("tc.code").bitwiseXOR(m))).as("pcode"))
-    codes.join(broadcast(probes), col("t") === col("qt") &&
+          m => col("qcode").bitwiseXOR(m))).as("pcode"))
+    index.join(broadcast(probes), col("t") === col("qt") &&
         col("code") === col("pcode"))
       .filter(col("vec_id") =!= col("qid"))
       .select(col("qid"), col("vec_id")).distinct()
@@ -511,13 +468,14 @@ object Similarity {
     // all Hamming-distance-1 codes, per table) — linear in data size,
     // broadcastable probe side, then exact cosine only on candidates.
     // The oracle expresses the same candidate predicate as a per-row
-    // filter over codes built by the vectorizable [[codesChainSql]]
-    // chain (identical result set at every rung — no lambda stop-line).
+    // filter over every vector's [[codesSql]] codes (identical result
+    // set at every rung).
     Q("q34_ann_lsh",
       s"""WITH e AS (
          |  SELECT vec_id, label, $QUANT_SQL AS ev FROM embeddings),
          |nb AS ($NB_SQL),
-         |${codesChainSql("vec_id, label, ev", NUM_TABLES)},
+         |c AS MATERIALIZED (SELECT vec_id, label, ev,
+         |  ${codesSql(NUM_TABLES)} AS cs FROM e),
          |q AS (SELECT ev AS qv, cs AS qcs FROM c WHERE vec_id = 0)
          |SELECT vec_id, label,
          |  list_sum(list_transform(range(1, ${DIM + 1}), i -> ev[i] * qv[i]))
@@ -617,7 +575,8 @@ object Similarity {
       s"""WITH e AS (
          |  SELECT vec_id, $QUANT_SQL AS ev FROM embeddings),
          |nb AS ($NB_SQL),
-         |${codesChainSql("vec_id, ev", NUM_TABLES)},
+         |c AS MATERIALIZED (SELECT vec_id, ev,
+         |  ${codesSql(NUM_TABLES)} AS cs FROM e),
          |u AS MATERIALIZED (
          |  SELECT vec_id, t, cs[t] & msk AS code
          |  FROM c, nb CROSS JOIN unnest(range(1, ${NUM_TABLES + 1})) AS tt(t)),
@@ -1020,23 +979,20 @@ object Similarity {
     // dropping out. Evaluation cost is one corpus scan per side at any
     // corpus size; recall is an exact-integer division.
     Q("q123_ann_recall", {
-      // Oracle shape (shipped reshaped form, round 14 — previously a
-      // per-rung manual conversion): unlike q34/q35, only the ~10
-      // query vectors and the ≤100 exact-top-10 rows ever have their
-      // LSH codes READ, so codes are computed exactly there (the
-      // lambda form, trivial at that row count) and NOWHERE else; the
-      // exact ranking unnests the quantized vectors once and computes
-      // every dot/norm as a plain join-aggregate instead of an
-      // interpreted per-row lambda. Bit-equivalent by the
-      // [[codesChainSql]] exactness argument (integral doubles, sums
-      // far below 2^53 — exact under any association order, so no
+      // Oracle shape: unlike q34/q35, only the ~10 query vectors and
+      // the ≤100 exact-top-10 rows ever have their LSH codes READ, so
+      // [[codesSql]] runs there and NOWHERE else; the exact ranking
+      // unnests the quantized vectors once and computes every dot/norm
+      // as a plain join-aggregate instead of an interpreted per-row
+      // lambda. Exact by the [[codesSql]] argument (integral doubles,
+      // sums far below 2^53 — exact under any association order, so no
       // rank or sign can flip).
       s"""WITH e AS (
          |  SELECT vec_id, $QUANT_SQL AS ev FROM embeddings),
          |nb AS ($NB_SQL),
          |cfg AS ($cfgSql),
          |q AS (SELECT vec_id AS qid, ev AS qv,
-         |  ${codesArraySqlN(MAX_TABLES)} AS qcs FROM e
+         |  ${codesSql(MAX_TABLES)} AS qcs FROM e
          |      WHERE vec_id < 10),
          |cu AS (SELECT vec_id, i, ev[i] AS cx
          |  FROM e CROSS JOIN unnest(range(1, ${DIM + 1})) AS u(i)),
@@ -1056,7 +1012,7 @@ object Similarity {
          |    FROM dp JOIN cn ON cn.vec_id = dp.vec_id
          |    JOIN qn ON qn.qid = dp.qid) t0),
          |cv AS (SELECT vec_id,
-         |  ${codesArraySqlN(MAX_TABLES)} AS cs FROM e
+         |  ${codesSql(MAX_TABLES)} AS cs FROM e
          |  WHERE vec_id IN (SELECT vec_id FROM x WHERE rk <= 10)),
          |hits AS (
          |  SELECT x.qid, count(*) AS n_hits

@@ -104,11 +104,18 @@ object TextOps {
     "tests/testdata/exec/grep_reduce.py" ->
       "3620e38f156f31ab7cae44339e61614edbcab493a9d7325e559817d2e17bf272")
 
-  private def pinnedRefExec(rel: String): String = {
+  /** `rel` under [[refRoot]]; fails with one message when the checkout
+    * is absent, before any job or subprocess starts. */
+  private[graft] def refPath(rel: String): java.nio.file.Path = {
     val p = java.nio.file.Paths.get(refRoot, rel)
     require(java.nio.file.Files.exists(p),
       s"reference tree not found at $refRoot (set GRAFT_REF_ROOT); " +
         "q195/q196 are reference-parity queries and need the checkout")
+    p
+  }
+
+  private def pinnedRefExec(rel: String): String = {
+    val p = refPath(rel)
     val hex = java.security.MessageDigest.getInstance("SHA-256")
       .digest(java.nio.file.Files.readAllBytes(p))
       .map(b => f"$b%02x").mkString
@@ -1185,7 +1192,7 @@ object TextOps {
       // runs per invocation, and repeated gate/bench loops must not
       // accumulate a part-file tree per rep in /tmp
       val out = graft.sources.FileFormats.scratchDir("refwc").toString + "/out"
-      MapReduce.runPipe(s, s"$refRoot/tests/testdata/input", out,
+      MapReduce.runPipe(s, refPath("tests/testdata/input").toString, out,
         // wc_map.sh:13 / wc_reduce.sh:14, verbatim
         mapCmd =
           """tr '[ \t]' '\n' | tr '[:upper:]' '[:lower:]' | awk '{print $1"\t1"}'""",
@@ -1206,7 +1213,7 @@ object TextOps {
       // the reference's actual test executables (default query
       // "product", grep_map.py:15), via the same subprocess contract
       // the worker uses — sha256-pinned before anything executes
-      MapReduce.runPipe(s, s"$refRoot/tests/testdata/input", out,
+      MapReduce.runPipe(s, refPath("tests/testdata/input").toString, out,
         mapCmd =
           s"python3 ${pinnedRefExec("tests/testdata/exec/grep_map.py")}",
         reduceCmd =

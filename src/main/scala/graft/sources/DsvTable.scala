@@ -441,12 +441,6 @@ object DsvStreamingWrite {
     } catch { case _: java.io.FileNotFoundException => None }
   }
 
-  /** The committed data-file names a log lists (read side). */
-  private[sources] def readLogFiles(fs: FileSystem, d: HPath,
-      name: String): Seq[String] =
-    readLogLines(fs, d, name).getOrElse(Seq.empty)
-      .map(_.split('\t').last)
-
   /** Committed data-file names for one query, resilient to the
     * list/read race: try the listed generations NEWEST FIRST (each log
     * is the full history, so any hit is a consistent snapshot); if a

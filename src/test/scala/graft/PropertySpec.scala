@@ -204,6 +204,42 @@ class PropertySpec extends AnyFunSuite {
     assert(ns.map(Dedup.simhashBits) == ns.map(Dedup.simhashBits).sorted)
   }
 
+  test("LSH codes equal a plain-Scala sign evaluation of every vector") {
+    import org.apache.spark.sql.functions._
+    import graft.operators.Similarity
+    // bit b of table t is set iff Σ ev(i)·signs(t)(b)(i) > 0, computed
+    // here in exact integer arithmetic from the same quantized vectors;
+    // a narrower code is the full one masked to its low bits
+    def expected(ev: Array[Long]): Seq[Long] =
+      Similarity.signs.toSeq.map(_.zipWithIndex.map { case (sg, b) =>
+        var p = 0L
+        var i = 0
+        while (i < ev.length) { p += ev(i) * sg(i); i += 1 }
+        if (p > 0) 1L << b else 0L
+      }.sum)
+    Seq("sf0.01", "sf0.1").map(java.nio.file.Paths.get(Spec.sfDir)
+        .resolveSibling(_).toString).foreach { sf =>
+      val spark = Spec.spark
+      val n = Tables.rowCount(spark, sf, "embeddings")
+      val nb = Similarity.numBits(n)
+      val widths = Seq((8, nb), (16, nb), (8, 9), (16, 1))
+      val rows = Similarity.embCodes(spark, sf)
+        .select((Seq(col("ev"), col("cs")) ++ widths.map { case (t, b) =>
+          Similarity.codes(col("ev"), t, b) }): _*)
+        .collect()
+      assert(rows.length == n)
+      rows.foreach { r =>
+        val ev = r.getSeq[Double](0).map(_.toLong).toArray
+        val full = expected(ev)
+        assert(r.getSeq[Long](1) == full, s"$sf: cs of ${ev.toSeq}")
+        widths.zipWithIndex.foreach { case ((t, b), i) =>
+          assert(r.getSeq[Long](2 + i) == full.take(t).map(_ & ((1L << b) - 1)),
+            s"$sf: codes($t, $b) of ${ev.toSeq}")
+        }
+      }
+    }
+  }
+
   test("q120's rank→ntile decomposition matches ntile on non-divisible n") {
     // the fixture corpora all have n % 10 = 0, so the extra-row branch
     // (first r buckets hold q+1 rows) never fires there — exercise it

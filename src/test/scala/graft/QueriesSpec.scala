@@ -45,6 +45,19 @@ class QueriesSpec extends AnyFunSuite {
     }
   }
 
+  test("q195/q196 stop at the reference-tree message without the checkout") {
+    assume(scala.util.Try(
+      operators.TextOps.refPath("tests/testdata/input")).isFailure,
+      "the reference checkout is present")
+    Seq("q195_ref_wordcount_golden", "q196_ref_grep_golden").foreach { n =>
+      val e = intercept[IllegalArgumentException] {
+        SparkEntry.queries(n)(spark, Spec.sfDir).count()
+      }
+      assert(e.getMessage.contains("reference tree not found at"),
+        s"$n: ${e.getMessage}")
+    }
+  }
+
   test("entry() smoke (driver contract)") {
     assert(SparkEntry.entry(spark).count() > 0)
   }

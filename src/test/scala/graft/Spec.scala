@@ -7,8 +7,12 @@ import org.apache.spark.sql.catalyst.FunctionIdentifier
 
 /** One shared local SparkSession for the whole test JVM. */
 object Spec {
+  /** With codegen fallback off, a whole-stage compile failure (say, a
+    * method past Janino's 64 KB limit) fails its test instead of
+    * quietly running the stage interpreted. */
   lazy val spark: SparkSession = {
-    val s = Session.build("local[4]", 4, "graft-test")
+    val s = Session.build("local[4]", 4, "graft-test",
+      extra = Map("spark.sql.codegen.fallback" -> "false"))
     s.sparkContext.setLogLevel("WARN")
     s
   }

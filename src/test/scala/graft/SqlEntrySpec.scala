@@ -278,6 +278,28 @@ class SqlEntrySpec extends AnyFunSuite {
     assert(scripted == unrolled && scripted.nonEmpty)
   }
 
+  test("q172/q173 register their SQL functions once per session") {
+    import org.apache.spark.sql.catalyst.FunctionIdentifier
+    val s = spark.newSession()
+    def builders = Seq(
+      s.sessionState.functionRegistry.lookupFunctionBuilder(
+        FunctionIdentifier("toks")),
+      s.sessionState.functionRegistry.lookupFunctionBuilder(
+        FunctionIdentifier("qscore")),
+      s.sessionState.tableFunctionRegistry.lookupFunctionBuilder(
+        FunctionIdentifier("words")))
+    def build(): Unit = Seq("q172_sql_udf", "q173_sql_table_udf")
+      .foreach(n => SparkEntry.queries(n)(s, Spec.sfDir))
+    build()
+    val first = builders
+    assert(first.forall(_.isDefined), s"functions not registered: $first")
+    build()
+    // a re-registration installs a new builder object under each name
+    val kept = builders.zip(first).map { case (b, f) => b.get eq f.get }
+    assert(kept == Seq(true, true, true),
+      s"the second build re-registered a function: $kept")
+  }
+
   test("dup_clusters lazy fallback equals the materialized labels (or fails loudly)") {
     // Drive the bounded-propagation path DIRECTLY (the plan a fresh
     // environment's view falls back to when no artifact exists) and
