@@ -8,8 +8,9 @@ import org.apache.spark.sql.SparkSession
   *
   * Every fixture-derived value the engine keeps across calls — table
   * and artifact reader plans ([[Tables]], [[Artifacts]]), footer counts
-  * ([[Tables.rowCount]]), SQL view plans ([[Graft]]) and the written-once
-  * scratch dirs of q118/q171/q175/q194 — lives in ONE map keyed
+  * ([[Tables.rowCount]]), SQL view plans ([[Graft]]), the written-once
+  * scratch dirs of q171/q175/q194 and the written-once source copies
+  * with their readers (q42/q43/q61/q68/q114/q118) — lives in ONE map keyed
   * `(session, dir, fingerprint(dir), key)`:
   *   - the fingerprint ([[Artifacts.fingerprint]], a stat walk) means a
   *     fixture regenerated in place in a live JVM misses and rebuilds
@@ -30,7 +31,8 @@ import org.apache.spark.sql.SparkSession
   *     miss precedes.
   *
   * Callers prefix `key` with their own namespace (`table:`, `rows:`,
-  * `rowgroups:`, `artifact:`, `view:`, `dir:`) so names never collide.
+  * `rowgroups:`, `artifact:`, `view:`, `dir:`, `source:`) so names never
+  * collide.
   */
 object Caches {
 

@@ -44,33 +44,37 @@ object FileFormats {
     java.nio.file.Files.createTempDirectory(scratchRoot, prefix)
 
   /** Write `table` out in `fmt`, read it back with the original schema.
-    * The directory is per-invocation (fresh subdir of the scratch
-    * root) — a fixed path would race between concurrent suites
-    * overwriting and reading the same files. */
+    * The copy is written once per (session, fixture bytes)
+    * ([[graft.Caches.memo]], `source:` namespace), into a fresh subdir
+    * of the scratch root — a fixed path would race between concurrent
+    * suites overwriting and reading the same files. The memo holds the
+    * read-back DataFrame, so a warm build neither rewrites the copy
+    * nor re-lists it: it runs no Spark job. */
   private def roundTrip(s: SparkSession, d: String, table: String,
-                        fmt: String): DataFrame = {
-    val src = Tables(s, d, table)
-    val dir = scratchDir(table)
-      .toString + s"/$table.$fmt"
-    fmt match {
-      case "csv" =>
-        src.write.mode("overwrite").option("header", "true").csv(dir)
-        s.read.schema(src.schema).option("header", "true").csv(dir)
-      case "json" =>
-        src.write.mode("overwrite").json(dir)
-        s.read.schema(src.schema).json(dir)
-      case "orc" =>
-        src.write.mode("overwrite").orc(dir)
-        s.read.schema(src.schema).orc(dir)
-      case "xml" =>
-        // native XML data source (integrated into Spark 4); rowTag is
-        // mandatory on both sides
-        src.write.mode("overwrite").option("rowTag", "row")
-          .format("xml").save(dir)
-        s.read.schema(src.schema).option("rowTag", "row")
-          .format("xml").load(dir)
+                        fmt: String): DataFrame =
+    Caches.memo(s, d, s"source:$table.$fmt") {
+      val src = Tables(s, d, table)
+      val dir = scratchDir(table)
+        .toString + s"/$table.$fmt"
+      fmt match {
+        case "csv" =>
+          src.write.mode("overwrite").option("header", "true").csv(dir)
+          s.read.schema(src.schema).option("header", "true").csv(dir)
+        case "json" =>
+          src.write.mode("overwrite").json(dir)
+          s.read.schema(src.schema).json(dir)
+        case "orc" =>
+          src.write.mode("overwrite").orc(dir)
+          s.read.schema(src.schema).orc(dir)
+        case "xml" =>
+          // native XML data source (integrated into Spark 4); rowTag is
+          // mandatory on both sides
+          src.write.mode("overwrite").option("rowTag", "row")
+            .format("xml").save(dir)
+          s.read.schema(src.schema).option("rowTag", "row")
+            .format("xml").load(dir)
+      }
     }
-  }
 
   val queries: Seq[Q] = Seq(
 
@@ -168,12 +172,12 @@ object FileFormats {
     // query accounts for every row (evolved + legacy = total), so a
     // reader that dropped legacy files or mis-aligned columns is a
     // hash mismatch. mergeSchema costs a footer read per file — a
-    // one-time planning cost, not a data pass. The evolved layout is a
-    // deterministic function of the source table, so the write happens
-    // once per (session, fixture bytes) ([[graft.Caches.memo]]) — a
-    // long-lived bench/verify loop must neither re-pay the write inside
-    // the timed read path nor accumulate a two-column orders copy per
-    // invocation.
+    // planning-time Spark job, not a data pass. The evolved layout is a
+    // deterministic function of the source table, so the write AND the
+    // mergeSchema reader happen once per (session, fixture bytes)
+    // ([[graft.Caches.memo]]) — a long-lived bench/verify loop must
+    // neither re-pay the write or the footer job inside the timed read
+    // path nor accumulate a two-column orders copy per invocation.
     Q("q118_schema_evolution",
       """WITH m AS (
         |  SELECT o_orderkey, o_totalprice,
@@ -185,7 +189,7 @@ object FileFormats {
         |  CAST(count(*) - count(o_orderpriority) AS BIGINT) AS n_legacy,
         |  CAST(max(o_orderkey) AS BIGINT) AS max_key
         |FROM m""".stripMargin) { (s, d) =>
-      val dir = Caches.memo(s, d, "dir:q118") {
+      val evolved = Caches.memo(s, d, "source:q118") {
         val orders = Tables.orders(s, d)
         val out = scratchDir("orders_evolving").toString + "/t"
         orders.filter(col("o_orderkey") % 2 === 0)
@@ -195,9 +199,9 @@ object FileFormats {
           .select(col("o_orderkey"), col("o_totalprice"),
             col("o_orderpriority"))
           .write.mode("append").parquet(out)
-        out
+        s.read.option("mergeSchema", "true").parquet(out)
       }
-      s.read.option("mergeSchema", "true").parquet(dir)
+      evolved
         .agg(count(lit(1)).as("n_total"),
           count(col("o_orderpriority")).as("n_evolved"),
           (count(lit(1)) - count(col("o_orderpriority"))).as("n_legacy"),
@@ -582,7 +586,7 @@ object FileFormats {
       .map(_.toInt.max(2).min(full)).getOrElse(full)
 
   /** Per-fixture graft-dsv output directory: STABLE across invocations
-    * (unlike [[roundTrip]]'s fresh-per-call dirs) so repeated runs
+    * (unlike [[roundTrip]]'s written-once copies) so repeated runs
     * exercise the TRUNCATE/overwrite path of the commit protocol
     * against existing parts; still under the JVM-scoped scratch root,
     * so concurrent verify/bench processes never share a directory. */

@@ -5,7 +5,7 @@ import java.util.Properties
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.{Q, Tables}
+import graft.{Caches, Q, Tables}
 
 /** JDBC connector (SURVEY §2.C row 1 — the fourth format next to
   * CSV/JSON/Parquet). The database is an in-process Derby engine (the
@@ -36,19 +36,29 @@ object Jdbc {
     p
   }
 
+  private val copies = new java.util.concurrent.atomic.AtomicInteger()
+
   /** Round-trip `table` through the database: load it over JDBC (an
     * ingest stand-in — same executor-side path as loading any external
-    * RDBMS), then read it back partitioned on `partCol`. */
+    * RDBMS), then read it back partitioned on `partCol`. The copy and its
+    * reader (schema resolved over JDBC metadata) are built once per
+    * (session, fixture bytes) ([[graft.Caches.memo]], `source:`
+    * namespace), so a warm build runs no Spark job. The in-memory
+    * database is JVM-wide and the reader is lazy, so each copy gets its
+    * own table (`<table>_<8 hex>`): under the bare name, a reader built
+    * for one fixture would read whichever fixture wrote the table last. */
   private def roundTrip(s: SparkSession, d: String, table: String,
-                        partCol: String): DataFrame = {
-    Tables(s, d, table).write.mode("overwrite").jdbc(url, table, props)
-    s.read
-      .option("partitionColumn", partCol)
-      .option("lowerBound", "0")
-      .option("upperBound", "32")
-      .option("numPartitions", "4")
-      .jdbc(url, table, props)
-  }
+                        partCol: String): DataFrame =
+    Caches.memo(s, d, s"source:$table.jdbc") {
+      val copy = f"${table}_${copies.incrementAndGet()}%08x"
+      Tables(s, d, table).write.mode("overwrite").jdbc(url, copy, props)
+      s.read
+        .option("partitionColumn", partCol)
+        .option("lowerBound", "0")
+        .option("upperBound", "32")
+        .option("numPartitions", "4")
+        .jdbc(url, copy, props)
+    }
 
   val queries: Seq[Q] = Seq(
 

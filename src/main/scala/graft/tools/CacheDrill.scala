@@ -9,11 +9,11 @@ import graft.{Caches, Graft, Session, SparkEntry, Tables}
   * Scenario (the sequential-session service shape — build, work, stop,
   * build the next): session A populates every kind of [[Caches.memo]]
   * entry ([[Tables]] loaders and footer counts, [[Graft]] view plans,
-  * [[graft.Artifacts]] readers, a query's written-once scratch dir) and
-  * stops; session B's construction sweeps; A's entries must be gone —
-  * otherwise every recycled session pins its whole plan graph (which
-  * strongly references the dead session) for the JVM lifetime. Prints
-  * `CACHEDRILL result=OK` and exits 0 on success. */
+  * [[graft.Artifacts]] readers, a query's written-once scratch dir and
+  * source copy) and stops; session B's construction sweeps; A's entries
+  * must be gone — otherwise every recycled session pins its whole plan
+  * graph (which strongly references the dead session) for the JVM
+  * lifetime. Prints `CACHEDRILL result=OK` and exits 0 on success. */
 object CacheDrill {
   def main(args: Array[String]): Unit = {
     // fixture dir arrives as argv(0) from CacheHygieneSpec (Spec.sfDir)
@@ -29,8 +29,11 @@ object CacheDrill {
     val counted = Caches.entriesFor(a)
     require(counted > views, "rowCount must memoize per session")
     SparkEntry.queries("q171_binary_source")(a, sf).count() // written-once dir
+    val blobs = Caches.entriesFor(a)
+    require(blobs > counted, "q171's blob dir must memoize per session")
+    SparkEntry.queries("q42_csv_source")(a, sf) // written-once source copy
     val before = Caches.entriesFor(a)
-    require(before > counted, "q171's blob dir must memoize per session")
+    require(before > blobs, "q42's CSV copy must memoize per session")
     a.stop()
     // nothing has swept yet — entries linger until the next boundary
     require(Caches.entriesFor(a) == before,

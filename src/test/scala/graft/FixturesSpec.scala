@@ -132,9 +132,10 @@ class FixturesSpec extends AnyFunSuite {
   }
 
   test("in-place fixture regeneration rebuilds q118's and q171's written-once dirs") {
-    // q118's evolved orders layout and q171's blob files are written
-    // once per fixture and memoized; after an in-place regeneration
-    // they must be rebuilt from the new bytes, not served stale
+    // q118's evolved orders layout, q171's blob files and the CSV and
+    // Derby copies of q42/q61 are written once per fixture and
+    // memoized; after an in-place regeneration they must be rebuilt
+    // from the new bytes, not served stale
     val dir = Spec.tmpDir("graft-regen-dirs").toString
     def gen(n: Int, tag: String): Unit = {
       spark.range(n).selectExpr("id AS doc_id", s"concat('$tag ', id) AS text")
@@ -142,8 +143,22 @@ class FixturesSpec extends AnyFunSuite {
       spark.range(1, n + 1).selectExpr("id AS o_orderkey",
           "CAST(id AS DOUBLE) AS o_totalprice", "'1-URGENT' AS o_orderpriority")
         .coalesce(1).write.mode("overwrite").parquet(s"$dir/orders.parquet")
+      spark.range(n / 20).selectExpr("CAST(id AS INT) AS n_nationkey",
+          s"concat('$tag ', id) AS n_name", "CAST(id % 5 AS INT) AS n_regionkey")
+        .coalesce(1).write.mode("overwrite").parquet(s"$dir/nation.parquet")
       bumpMtimes(dir, n)
     }
+    // (n_regionkey, count, min(n_name)[, max(n_nationkey)]) over nation
+    // keys 0 until k named "<tag> <key>", key >= from
+    def nation(k: Int, tag: String, from: Int) =
+      (from until k).groupBy(_ % 5).map { case (r, ks) =>
+        (r, ks.size.toLong, ks.map(i => s"$tag $i").min, ks.max) }.toSet
+    def q42: Set[(Int, Long, String)] =
+      SparkEntry.queries("q42_csv_source")(spark, dir).collect()
+        .map(r => (r.getInt(0), r.getLong(1), r.getString(2))).toSet
+    def q61: Set[(Int, Long, String, Int)] =
+      SparkEntry.queries("q61_jdbc_source")(spark, dir).collect()
+        .map(r => (r.getInt(0), r.getLong(1), r.getString(2), r.getInt(3))).toSet
     def md5(t: String): String = java.security.MessageDigest.getInstance("MD5")
       .digest(t.getBytes("UTF-8")).map(b => f"$b%02x").mkString
     def q171: Map[Long, String] =
@@ -155,11 +170,17 @@ class FixturesSpec extends AnyFunSuite {
     gen(200, "old")
     assert(q171 == Seq(0L, 97L, 194L).map(i => i -> md5(s"old $i")).toMap)
     assert(q118 == Seq(200L, 100L, 100L, 200L))
+    assert(q42 == nation(10, "old", 0).map(t => (t._1, t._2, t._3)))
+    assert(q61 == nation(10, "old", 5))
     gen(300, "new")
     assert(q171 == Seq(0L, 97L, 194L, 291L).map(i => i -> md5(s"new $i")).toMap,
       "q171 served blob files written from the old documents")
     assert(q118 == Seq(300L, 150L, 150L, 300L),
       "q118 served the layout written from the old orders")
+    assert(q42 == nation(15, "new", 0).map(t => (t._1, t._2, t._3)),
+      "q42 served the CSV copy written from the old nation")
+    assert(q61 == nation(15, "new", 5),
+      "q61 served the Derby copy written from the old nation")
   }
 
   test("fixture copies with equal fingerprints keep their own view plans") {

@@ -42,6 +42,18 @@ class ToolsSpec extends AnyFunSuite {
     assert(e.getMessage.contains("unknown query"), e.getMessage)
   }
 
+  test("PlanDump's census counts the jobs a warm build runs") {
+    def census(q: String): String = {
+      tools.PlanDump.census(spark, Spec.sfDir, q) // warms the memos
+      tools.PlanDump.census(spark, Spec.sfDir, q)
+    }
+    assert(census("q42_csv_source") == "plan-time jobs (warm build): 0")
+    // q142 runs its range-sort and rank passes while its plan is built
+    val jobs = census("q142_equidepth_histogram")
+    assert(jobs.startsWith("plan-time jobs (warm build): ") &&
+      jobs.split(": ")(1).toInt > 0, jobs)
+  }
+
   test("Session.cpus takes SPARK_GRAFT_CPUS when set, the host's processors when unset, and rejects anything but a positive integer") {
     // parsing only: no session is built at any of these widths
     assert(Session.cpusFrom(Some("6")) == 6)
